@@ -38,18 +38,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # Query implementations (Spark side)
 # ---------------------------------------------------------------------------
 
-# Interval-width bound for the synthetic genomic views, known by
-# construction (testdata.READS_SQL: read_len <= 500 -> width <= 499;
-# testdata.TARGETS_SQL: width <= 200 + 1800 = 2000).  Passing it as the
-# range_join max_width hint skips the per-call statistics probe — the
-# intended production pattern when the caller knows the width distribution
-# (sequila_spark/operators/range_join.py docstring).
-_SYNTH_MAX_WIDTH = 2000
-
 def _q_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    joined = range_join(reads, targets, how="inner", max_width=_SYNTH_MAX_WIDTH)
+    joined = range_join(reads, targets, how="inner")
     return (
         joined.groupBy("target_id")
         .agg(F.count("*").alias("read_count"))
@@ -59,7 +51,7 @@ def _q_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_range_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(reads, targets, how="inner", max_width=_SYNTH_MAX_WIDTH)
+    j = range_join(reads, targets, how="inner")
     return j.select(
         "qname",
         "target_id",
@@ -70,25 +62,25 @@ def _q_range_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_range_join_minoverlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(reads, targets, how="inner", min_overlap=100, max_width=_SYNTH_MAX_WIDTH)
+    j = range_join(reads, targets, how="inner", min_overlap=100)
     return j.select("qname", "target_id")
 
 
 def _q_range_join_maxgap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(reads, targets, how="inner", max_gap=1000, max_width=_SYNTH_MAX_WIDTH)
+    j = range_join(reads, targets, how="inner", max_gap=1000)
     return j.select("qname", "target_id")
 
 
 def _q_range_join_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nanopore-class long intervals (10-100 kb): exercises the bin_cap
-    long-interval branch (here bin_cap=8 -> 40 kb threshold so the branch
-    genuinely routes rows) with the default max_width='auto' probe —
-    regression guard for the branch-pruning logic at the harness level."""
+    """Nanopore-class long intervals (10-100 kb) through the same binned
+    plan as short reads: each long read explodes over 14-135 bins at the
+    default bin_size, so this pins the fan-out and anchor-bin dedup on
+    rows far wider than a bin."""
     lr = TD.longreads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(lr, targets, how="inner", bin_cap=8)
+    j = range_join(lr, targets, how="inner")
     return j.select("qname", "target_id")
 
 
@@ -96,7 +88,7 @@ def _q_range_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """subsetByOverlaps analog (GRangesTestSuite distinct-overlap case)."""
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    return range_join(targets, reads, how="left_semi", max_width=_SYNTH_MAX_WIDTH).select(
+    return range_join(targets, reads, how="left_semi").select(
         "target_id", S.CONTIG, S.START, S.END
     )
 
@@ -201,7 +193,7 @@ def _q_grange_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ss = SequilaSession(spark)
     targets = TD.targets(spark, sf_dir)
     iv = ss.grange("3", 10_000, 40_000)
-    j = range_join(targets, iv, how="inner", max_width=30_001)
+    j = range_join(targets, iv, how="inner")
     return j.select("target_id", S.CONTIG, S.START, S.END)
 
 
@@ -953,17 +945,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # Misaligned with the default 750 (not a divisor or multiple; boundaries
 # coincide only every lcm=25500 positions): every bin boundary, explode
 # fan-out and anchor-bin assignment differs from the primary plan's, so a
-# boundary/anchor bug cannot produce the same wrong answer in both.  1700
-# also changes which rows the bin_cap long-branch routing would see
-# (cap * 1700 vs cap * 750 thresholds).
+# boundary/anchor bug cannot produce the same wrong answer in both.
 _XCHECK_BIN = 1700
 
 
 def _xq_range_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(reads, targets, how="inner", max_width=_SYNTH_MAX_WIDTH,
-                   bin_size=_XCHECK_BIN)
+    j = range_join(reads, targets, how="inner", bin_size=_XCHECK_BIN)
     return j.select(
         "qname",
         "target_id",
@@ -974,16 +963,14 @@ def _xq_range_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _xq_range_join_minoverlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(reads, targets, how="inner", min_overlap=100,
-                   max_width=_SYNTH_MAX_WIDTH, bin_size=_XCHECK_BIN)
+    j = range_join(reads, targets, how="inner", min_overlap=100, bin_size=_XCHECK_BIN)
     return j.select("qname", "target_id")
 
 
 def _xq_range_join_maxgap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(reads, targets, how="inner", max_gap=1000,
-                   max_width=_SYNTH_MAX_WIDTH, bin_size=_XCHECK_BIN)
+    j = range_join(reads, targets, how="inner", max_gap=1000, bin_size=_XCHECK_BIN)
     return j.select("qname", "target_id")
 
 
@@ -1042,8 +1029,7 @@ def _xq_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _xq_range_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads = TD.reads(spark, sf_dir)
     targets = TD.targets(spark, sf_dir)
-    j = range_join(targets, reads, how="left_semi", max_width=_SYNTH_MAX_WIDTH,
-                   bin_size=_XCHECK_BIN)
+    j = range_join(targets, reads, how="left_semi", bin_size=_XCHECK_BIN)
     return j.select("target_id", S.CONTIG, S.START, S.END)
 
 

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 
 from sequila_spark import schemas as S
 
-# merge_intervals' cached islands relation (at most one per session; each
-# call releases the prior call's — see dedup._CACHED_DFS for the pattern)
-_MERGE_CACHES: list = []
-
 
 def _interval(start: Column, end: Column) -> Column:
     return F.struct(
@@ -149,23 +145,6 @@ def merge_intervals(
         F.col(S.START),
         (F.col(S.END) - max_gap).cast("int").alias(S.END),  # trim widening
     )
-    # The range join consumes islands from several plan branches (the
-    # binned join plus any long-interval branches), and each branch would
-    # otherwise re-run the whole coverage + run-merge lineage — measured
-    # as a ~90-exchange physical plan.  Persist the islands relation: it
-    # is OUTPUT-sized (O(#islands), never data-sized), so the cache is
-    # sound at any scale.  One cached relation per session (the next
-    # merge_intervals call releases the previous one, dedup._CACHED_DFS
-    # pattern).  The persist also makes the max_width='auto' probe read
-    # the cache, so the long branches are built only when an over-wide
-    # island actually exists.
-    while _MERGE_CACHES:
-        try:
-            _MERGE_CACHES.pop().unpersist(False)
-        except Exception:
-            pass  # context already stopped
-    islands = islands.persist()
-    _MERGE_CACHES.append(islands)
     counts = range_join(
         islands,
         df.select(
@@ -174,7 +153,6 @@ def merge_intervals(
             F.col(start_col).alias(S.END),  # count each interval once, by its start
         ),
         how="inner",
-        max_width="auto",
     )
     return (
         counts.groupBy(S.CONTIG, S.START, S.END)

@@ -177,12 +177,16 @@ def coverage_blocks_walks(
     partition a (contig, chunk) group lands in).
 
     ``walks`` maps output tag -> use_cigar.  Every stage carries a tinyint
-    walk id; the name attaches in the final projection.
+    walk id; the name attaches in the final projection.  A CIGAR walk
+    reads the decoder's ``__blocks`` column when the relation carries it,
+    as :func:`aligned_blocks` does, instead of re-parsing the CIGAR.
     """
     names = [n for n, _ in walks]
     arrays = []
+    has_blocks = "__blocks" in reads.columns
     for i, (_, use_cigar) in enumerate(walks):
-        if use_cigar and S.CIGAR in reads.columns:
+        if use_cigar and (has_blocks or S.CIGAR in reads.columns):
+            blocks = F.col("__blocks") if has_blocks else _cigar_blocks_col()
             # NOTE: one-arg lambda built by a factory — a `lambda b, i=i`
             # two-parameter form would make F.transform pass the ARRAY
             # INDEX as the second argument, silently shadowing the walk id
@@ -199,7 +203,7 @@ def coverage_blocks_walks(
             # (exactly what explode(NULL blocks) does in aligned_blocks)
             arrays.append(
                 F.coalesce(
-                    F.transform(_cigar_blocks_col(), _tag(i)),
+                    F.transform(blocks, _tag(i)),
                     F.expr(
                         "CAST(array() AS "
                         "ARRAY<STRUCT<w: TINYINT, s: INT, e: INT>>)"

@@ -28,15 +28,19 @@ join is declared as a **binned equi-join** Catalyst can plan natively:
      avoided *without a distinct* by keeping only the bin that contains the
      overlap start: bin == floor(max(ls, rs') / bin_size).
 
+This one plan serves every interval width, and building it runs no Spark
+job.  A wide row costs its fan-out: a row of width w = end - start becomes
+floor(w / bin_size) + 1 join rows, one more when its ends straddle an extra
+bin boundary (at the default bin_size a 500 bp read is 1-2 rows, a 100 kb
+nanopore alignment 134-135).  Callers whose intervals are mostly wide
+should raise ``bin_size`` (see ``_DEFAULT_BIN_SIZE``).
+
 At 100 TB this is shuffle-on-(contig,bin): no driver collect, no broadcast of
 row data unless one side is genuinely small (AQE decides), and bins spread a
 contig's load across the cluster instead of one task per contig.
 """
 
 from __future__ import annotations
-
-import re
-from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,11 +59,6 @@ from sequila_spark import schemas as S
 # At scale the smaller bin also RAISES join-key cardinality
 # (contig × pos/750), spreading hot contigs across more tasks.
 _DEFAULT_BIN_SIZE = 750
-# An interval wider than bin_cap * bin_size rows would explode into too many
-# bin rows (a 1 Mb nanopore alignment at bin_size=5000 -> 200 rows); such
-# rows are routed through the nested-loop side instead (rare by premise, so
-# the nested branches broadcast a tiny relation).
-_DEFAULT_BIN_CAP = 128
 
 
 def range_join(
@@ -75,8 +74,6 @@ def range_join(
     bin_size: int = _DEFAULT_BIN_SIZE,
     suffixes: tuple[str, str] = ("", "_r"),
     strategy: str = "binned",
-    bin_cap: int | None = _DEFAULT_BIN_CAP,
-    max_width: int | str | None = "auto",
 ) -> DataFrame:
     """Join rows whose [start, end] intervals overlap (optionally also
     matching a contig/chromosome equality key).
@@ -89,30 +86,10 @@ def range_join(
     ``strategy='nested_loop'`` keeps the raw theta-join plan (used in tests to
     cross-check the binned plan; also the right call when one side is tiny).
 
-    ``bin_cap`` (binned strategy only): rows whose interval spans more than
-    ``bin_cap`` bins are routed through a nested-loop branch and unioned in,
-    so one multi-megabase interval cannot fan out into hundreds of bin rows.
-    Set ``bin_cap=None`` to disable when the width distribution is
-    known-bounded.
-
-    ``max_width`` controls how the cap decides, at *plan* time, whether any
-    over-wide rows can exist (the long branches re-scan both inputs, so
-    building them when provably empty costs real time):
-
-    - ``"auto"`` (default): run one tiny statistics job — ``max(end - start)``
-      per side, column-pruned to the two interval columns — and build a long
-      branch only for sides that actually contain over-wide rows.  Short-read
-      data gets the plain binned plan (zero extra passes).  Guarded so it
-      never doubles expensive work: results memoize per (session,
-      analyzed-plan, columns) — re-joining the same input probes once — and
-      a side whose lineage is neither persisted nor a plain
-      scan/filter/projection is not probed at all (that side falls back to
-      the ``None`` behavior: its long branch is always built).
-    - int: a caller-known bound on ``end - start`` for both sides — no probe,
-      branches built only if ``max_width`` (plus gap widening) reaches the
-      cap.
-    - ``None``: unknown — always build all three branches (safe for any
-      lineage, costs ~2 extra scans per side even on short-read data).
+    ``bin_size`` (binned strategy only) sets the bin width: a row of width
+    w fans out into floor(w / bin_size) + 1 or + 2 join rows (the right
+    side's width includes the ``2 * max_gap`` widening).  It changes only
+    the cost, never the result.
     """
     if how not in ("inner", "left_semi", "left_anti", "left_outer"):
         raise ValueError(f"unsupported how={how!r}")
@@ -165,7 +142,7 @@ def range_join(
 
     if how == "inner":
         return _inner(left, right, lc, rc, ls, le, rs, re,
-                      min_overlap, max_gap, bin_size, strategy, bin_cap, max_width)
+                      min_overlap, max_gap, bin_size, strategy)
 
     # Composed variants: run the inner core against a row-keyed left side.
     # The rowid is evaluated twice (inside `matched` and on the re-join), so
@@ -176,7 +153,7 @@ def range_join(
     # localCheckpoint() it before calling with how != 'inner'.
     keyed = left.withColumn("__sq_rowid", F.monotonically_increasing_id())
     matched = _inner(keyed, right, lc, rc, ls, le, rs, re,
-                     min_overlap, max_gap, bin_size, strategy, bin_cap, max_width)
+                     min_overlap, max_gap, bin_size, strategy)
     matched_ids = _hint_rowids_if_left_small(
         left, matched.select("__sq_rowid").distinct()
     )
@@ -206,8 +183,6 @@ def _inner(
     max_gap: int,
     bin_size: int,
     strategy: str,
-    bin_cap: int | None = None,
-    max_width: int | str | None = "auto",
 ) -> DataFrame:
     lstart, lend = F.col(ls), F.col(le)
     # Widen the right (build) side by max_gap, as the reference widens the
@@ -225,50 +200,6 @@ def _inner(
     if strategy == "nested_loop":
         out = left.join(right, contig_eq & overlap, "inner")
         return out.drop(rc) if rc and lc != rc else out
-
-    if bin_cap:
-        # Route over-wide rows through nested-loop branches:
-        #   binned(L_short, R_short) ∪ nested(L_long, R) ∪ nested(L_short, R_long)
-        # — disjoint by construction, every pair covered once.  The long
-        # relations are tiny by premise (broadcast).  Each extra branch
-        # re-scans its inputs, so branches are built per side only when
-        # over-wide rows can actually exist (max_width probe / hint); on
-        # short-read data this collapses to the plain binned plan.
-        thresh = bin_cap * bin_size
-        if max_width == "auto":
-            lmax = _probe_max_width(left, ls, le)
-            rmax = _probe_max_width(right, rs, re)
-            # _SKIPPED = probe declined (expensive uncached lineage):
-            # treat the side as unknown -> build its long branch (safe)
-            l_may_long = lmax is _SKIPPED or (lmax is not None and lmax >= thresh)
-            r_may_long = rmax is _SKIPPED or (
-                rmax is not None and rmax + 2 * max_gap >= thresh
-            )
-        elif max_width is None:
-            l_may_long = r_may_long = True
-        else:
-            l_may_long = max_width >= thresh
-            r_may_long = max_width + 2 * max_gap >= thresh
-        if l_may_long or r_may_long:
-            l_long_pred = (lend - lstart) >= thresh
-            r_long_pred = (rend - rstart) >= thresh
-            args = (lc, rc, ls, le, rs, re, min_overlap, max_gap, bin_size)
-            if l_may_long and r_may_long:
-                l_short, l_long = left.where(~l_long_pred), left.where(l_long_pred)
-                r_short, r_long = right.where(~r_long_pred), right.where(r_long_pred)
-                out = _inner(l_short, r_short, *args, "binned", None)
-                out = out.unionByName(_inner(F.broadcast(l_long), right, *args, "nested_loop"))
-                out = out.unionByName(_inner(l_short, F.broadcast(r_long), *args, "nested_loop"))
-            elif l_may_long:
-                l_short, l_long = left.where(~l_long_pred), left.where(l_long_pred)
-                out = _inner(l_short, right, *args, "binned", None)
-                out = out.unionByName(_inner(F.broadcast(l_long), right, *args, "nested_loop"))
-            else:
-                r_short, r_long = right.where(~r_long_pred), right.where(r_long_pred)
-                out = _inner(left, r_short, *args, "binned", None)
-                out = out.unionByName(_inner(left, F.broadcast(r_long), *args, "nested_loop"))
-            return out
-        # else: no side can contain an over-wide row — plain binned plan.
 
     lbin = F.explode(
         F.sequence(
@@ -337,112 +268,6 @@ def _hint_rowids_if_left_small(left: DataFrame, ids: DataFrame) -> DataFrame:
     ):
         return F.broadcast(ids)
     return ids
-
-
-_SKIPPED = object()  # probe declined: expensive uncached lineage
-
-# Analyzed-plan node names whose execution cost is a (column-pruned) scan:
-# over these, the width probe reads two int columns and nothing else, so
-# running the lineage for statistics is the right trade.  Anything outside
-# this set (Join, Aggregate, Generate, *EvalPython, Window, ...) could make
-# the probe silently double that lineage's real work — skip instead.
-_CHEAP_PLAN_NODES = frozenset(
-    {
-        "Project",
-        "Filter",
-        "Relation",
-        "LogicalRDD",
-        "LocalRelation",
-        "SubqueryAlias",
-        "View",
-        "ResolvedHint",
-        "UnresolvedHint",
-        "GlobalLimit",
-        "LocalLimit",
-        "Repartition",
-        "RepartitionByExpression",
-        "Sort",
-        "Deduplicate",
-        "InMemoryRelation",
-    }
-)
-
-# (session id, analyzed-plan semantic hash, start col, end col) -> max width.
-# Bounded: oldest entries evicted past _PROBE_CACHE_MAX.
-_PROBE_CACHE: "OrderedDict[tuple, int | None]" = OrderedDict()
-_PROBE_CACHE_MAX = 256
-_PROBE_RUNS = 0  # statistics-job counter (tests assert probe-once behavior)
-
-
-def _lineage_is_cheap(df: DataFrame) -> bool:
-    """True when executing ``df``'s lineage for a 1-row statistics probe is
-    approximately free: the frame is persisted (probe reads the cache), or
-    its analyzed plan is scans/filters/projections only (probe collapses to
-    a column-pruned scan)."""
-    lvl = df.storageLevel
-    if lvl.useMemory or lvl.useDisk:
-        return True
-    try:
-        tree = df._jdf.queryExecution().analyzed().treeString()
-    except Exception:
-        return False
-    nodes = re.findall(r"^[\s:+|-]*'?([A-Za-z][A-Za-z0-9]*)", tree, flags=re.M)
-    return all(n in _CHEAP_PLAN_NODES for n in nodes)
-
-
-def _session_key(spark) -> object:
-    """Stable identity for the session: ``id()`` can be recycled after a
-    session is garbage-collected, silently resurrecting a dead session's
-    cached probes; applicationId + sessionUUID cannot."""
-    try:
-        return (
-            spark.sparkContext.applicationId,
-            spark._jsparkSession.sessionUUID(),
-        )
-    except Exception:
-        return id(spark)
-
-
-def _plan_key(df: DataFrame, s: str, e: str) -> tuple | None:
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        # the file-listing snapshot keys out the stale-probe case: a
-        # semantically identical plan re-read after the underlying data
-        # was rewritten (new part files) must re-probe, or the memoized
-        # max width could silently prune the long branch and drop matches
-        files = df.inputFiles()
-        fh = hash(tuple(sorted(files)))
-    except Exception:
-        return None
-    return (_session_key(df.sparkSession), h, fh, s, e)
-
-
-def _probe_max_width(df: DataFrame, s: str, e: str):
-    """Plan-time statistics probe: ``max(end - start)`` for one side, as a
-    1-row Spark job, column-pruned to the two interval columns.  (A
-    deliberate driver-side collect of *statistics*, not data.)
-
-    Guarded two ways so auto mode never silently doubles expensive work:
-    results memoize per (session, analyzed-plan semantic hash, columns) —
-    the same input probed by many joins runs the job once — and a lineage
-    that is neither persisted nor a plain scan/filter/projection is not
-    probed at all (returns the ``_SKIPPED`` sentinel; the caller then
-    builds the long branch unconditionally, exactly like
-    ``max_width=None``)."""
-    global _PROBE_RUNS
-    key = _plan_key(df, s, e)
-    if key is not None and key in _PROBE_CACHE:
-        _PROBE_CACHE.move_to_end(key)
-        return _PROBE_CACHE[key]
-    if not _lineage_is_cheap(df):
-        return _SKIPPED
-    _PROBE_RUNS += 1
-    w = df.select(F.max(F.col(e) - F.col(s)).alias("w")).collect()[0]["w"]
-    if key is not None:
-        _PROBE_CACHE[key] = w
-        while len(_PROBE_CACHE) > _PROBE_CACHE_MAX:
-            _PROBE_CACHE.popitem(last=False)
-    return w
 
 
 def overlap_condition(

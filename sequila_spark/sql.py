@@ -4,8 +4,9 @@ The reference swaps Spark's analyzer to resolve its TVFs
 (utvf/SeQuiLaAnalyzer.scala:44-133, ResolveTableValuedFunctionsSeq.scala:37-170).
 A PySpark engine cannot (and should not) replace the analyzer; instead
 ``sequila_sql`` preprocesses the query string: each TVF call in a FROM
-clause is evaluated through the Python operators, registered as a temp view,
-and the call text is rewritten to the view name.  Catalyst then plans the
+clause is evaluated through the Python operators and the call text is
+rewritten to a view of that frame, unique to the statement and dropped
+once the statement is analyzed.  Catalyst then plans the
 whole query as usual — same observable semantics as the reference's
 analyzer rule, zero lifecycle hacks.
 
@@ -268,6 +269,10 @@ def _tvf_grange(spark: SparkSession, args: list) -> DataFrame:
 _TVFS = {"coverage": _tvf_coverage, "pileup": _tvf_pileup, "bdg_grange": _tvf_grange}
 
 
+def _escape_braces(text: str) -> str:
+    return text.replace("{", "{{").replace("}", "}}")
+
+
 def sequila_sql(spark: SparkSession, query: str) -> DataFrame:
     """Run SQL with sequila TVF support (see module docstring).  TVF calls
     are recognized only in FROM/JOIN positions and never inside string
@@ -275,20 +280,26 @@ def sequila_sql(spark: SparkSession, query: str) -> DataFrame:
     (including nested function calls), which Spark evaluates first."""
     masked = _mask_comments(query)
     calls = _find_tvf_calls(masked)
+    # Each TVF frame goes to spark.sql as a {tvfN} format argument: Spark
+    # registers it under a unique temp-view name and drops that view when
+    # the statement is analyzed, so concurrent statements in one session
+    # never see each other's frames.  spark.sql formats the query only
+    # when it gets arguments, so literal braces are escaped only then.
+    escape = _escape_braces if calls else str
+    frames = {}
     pieces = []
     last = 0
     for counter, (start, end, name, raw) in enumerate(calls):
         args = _parse_args(raw, spark)
-        df = _TVFS[name](spark, args)
-        view = f"__sequila_tvf_{counter}"
-        df.createOrReplaceTempView(view)
-        pieces.append(query[last:start])
-        pieces.append(view)
+        key = f"tvf{counter}"
+        frames[key] = _TVFS[name](spark, args)
+        pieces.append(escape(query[last:start]))
+        pieces.append("{" + key + "}")
         last = end
-    pieces.append(query[last:])
+    pieces.append(escape(query[last:]))
     rewritten = "".join(pieces)
     try:
-        return spark.sql(rewritten)
+        return spark.sql(rewritten, **frames)
     except Exception as e:
         # A TVF name left unrewritten (e.g. used outside a FROM/JOIN
         # position the scanner recognizes) surfaces from Spark as a

@@ -118,8 +118,9 @@ FROM part
 """
 
 # longreads: sparse nanopore-class intervals (one per ~997 orderkeys),
-# widths 10..100 kb — wide enough to cross a small bin_cap threshold, so the
-# range-join long-interval branch gets driver-gate + bench coverage.
+# widths 10..100 kb — each spans tens to a hundred-odd range-join bins, so
+# the binned plan's fan-out and anchor-bin dedup on wide rows get
+# driver-gate + bench coverage.
 LONGREADS_SQL = f"""
 SELECT
   'LR' || CAST(l_orderkey AS STRING)                                   AS qname,

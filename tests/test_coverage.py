@@ -157,24 +157,39 @@ def test_coverage_blocks_walks_matches_union(spark):
             ("r1", "1", 1, 30, "10M5D15M"),   # cigar walk splits; span does not
             ("r2", "1", 8, 27, "20M"),         # crosses chunk boundary at 10/20
             ("r3", "2", 5, 24, "5S10M3I10M"),  # soft-clip + insertion
-            ("r4", "2", 15, 34, None),         # no cigar: both walks span
+            ("r4", "2", 15, 34, None),         # no cigar: span walk only; cigar walk drops the read
         ],
     )
-    union = (
-        coverage(df, mode="blocks", use_cigar=False, chunk_size=10)
-        .select(F.lit("span").alias("walk"), "*")
-        .unionByName(
-            coverage(df, mode="blocks", use_cigar=True, chunk_size=10).select(
-                F.lit("cigar").alias("walk"), "*"
+    # read_bam_native(with_blocks=True) shape: the decoder's aligned blocks
+    # and no cigar column, so the cigar walk can only come from __blocks
+    with_blocks = df.withColumn(
+        "__blocks",
+        F.expr(
+            "CASE qname WHEN 'r1' THEN array(named_struct('s', 1, 'e', 10), named_struct('s', 16, 'e', 30)) "
+            "WHEN 'r2' THEN array(named_struct('s', 8, 'e', 27)) "
+            "WHEN 'r3' THEN array(named_struct('s', 5, 'e', 14), named_struct('s', 15, 'e', 24)) "
+            "END"
+        ),
+    ).drop("cigar")
+    key = lambda r: (r["walk"], r["contig"], r["pos_start"], r["pos_end"], r["coverage"])  # noqa: E731
+    results = []
+    for reads in (df, with_blocks):
+        union = (
+            coverage(reads, mode="blocks", use_cigar=False, chunk_size=10)
+            .select(F.lit("span").alias("walk"), "*")
+            .unionByName(
+                coverage(reads, mode="blocks", use_cigar=True, chunk_size=10).select(
+                    F.lit("cigar").alias("walk"), "*"
+                )
             )
         )
-    )
-    fused = coverage_blocks_walks(df, chunk_size=10)
-    key = lambda r: (r["walk"], r["contig"], r["pos_start"], r["pos_end"], r["coverage"])  # noqa: E731
-    assert sorted(map(key, fused.collect())) == sorted(map(key, union.collect()))
+        fused = sorted(map(key, coverage_blocks_walks(reads, chunk_size=10).collect()))
+        assert fused == sorted(map(key, union.collect()))
+        results.append(fused)
+    # the decoder's blocks give the same rows as the CIGAR walk
+    assert results[0] == results[1]
     # both walks present and differ where the deletion splits the block
-    walks = {r["walk"] for r in fused.collect()}
-    assert walks == {"span", "cigar"}
+    assert {k[0] for k in results[0]} == {"span", "cigar"}
 
 
 def test_fused_coverage_events_matches_batch_operator(spark):

@@ -79,10 +79,9 @@ def test_pileup_matches_coverage_on_indels(spark, nano_df):
     assert pd_ == cd
 
 
-def test_bin_cap_on_real_long_reads(spark, nano_df):
-    """40 kb alignments at bin_size=500 would explode to 80 bin rows each;
-    with bin_cap=16 they take the broadcast branch — results must equal
-    the nested-loop join exactly."""
+def test_binned_join_on_real_long_reads(spark, nano_df):
+    """40 kb alignments at bin_size=500 explode to ~80 bin rows each;
+    results must equal the nested-loop join exactly."""
     from sequila_spark.operators.range_join import range_join
 
     reads = nano_df.where("pos_start > 0").select(
@@ -94,8 +93,8 @@ def test_bin_cap_on_real_long_reads(spark, nano_df):
         F.col("pos_start").alias("pos_start"),
         F.col("pos_end").alias("pos_end"),
     )
-    capped = range_join(reads, targets, bin_size=500, bin_cap=16)
-    nested = range_join(reads, targets, strategy="nested_loop", bin_cap=None)
-    kp = sorted((r["id"], r["target_id"]) for r in capped.collect())
+    binned = range_join(reads, targets, bin_size=500)
+    nested = range_join(reads, targets, strategy="nested_loop")
+    kp = sorted((r["id"], r["target_id"]) for r in binned.collect())
     np_ = sorted((r["id"], r["target_id"]) for r in nested.collect())
     assert kp == np_ and len(kp) > 150

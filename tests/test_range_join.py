@@ -168,15 +168,14 @@ def test_strategy_equivalence_random(spark):
         assert b == n, f"strategy divergence for {kwargs}"
 
 
-def test_bin_cap_routes_wide_intervals(spark):
-    """A multi-megabase interval (nanopore alignment / whole-gene
-    annotation) must not explode into hundreds of bin rows: with the
-    default bin_cap it routes through the nested-loop branch, and results
-    stay identical to the pure nested-loop join."""
+def test_wide_intervals_match_nested_loop(spark):
+    """Multi-megabase intervals (nanopore alignment / whole-gene
+    annotation) on both sides go through the same binned plan as short
+    ones, and the pairs equal the nested-loop join's."""
     left = mk(
         spark,
         [
-            ("nano", "1", 1_000, 1_201_000),   # 1.2 Mb: 241 bins at 5 kb
+            ("nano", "1", 1_000, 1_201_000),   # 1.2 Mb: 1,601 bins at 750 bp
             ("s1", "1", 5_000, 5_400),
             ("s2", "1", 900_000, 900_300),
             ("s3", "2", 5_000, 5_400),
@@ -191,59 +190,52 @@ def test_bin_cap_routes_wide_intervals(spark):
             ("t3", "2", 1_000_000, 1_000_500),
         ],
     )
-    capped = range_join(left, right)
-    nested = range_join(left, right, strategy="nested_loop", bin_cap=None)
-    assert pairs(capped) == pairs(nested)
-    # capped plan = 3-branch union (binned core + two broadcast side
-    # branches for the wide rows — with a contig key those plan as
-    # broadcast-hash joins, not even nested loops)
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in plan and plan.count("Join") >= 3
-    # disabling the cap keeps the old single-branch binned plan
-    uncapped = range_join(left, right, bin_cap=None)
-    assert pairs(uncapped) == pairs(nested)
-    assert "Union" not in uncapped._jdf.queryExecution().executedPlan().toString()
-    # composed join types go through the same capped core
+    binned = range_join(left, right)
+    assert pairs(binned) == pairs(range_join(left, right, strategy="nested_loop"))
+    # composed join types go through the same core
     semi = range_join(left, right, how="left_semi")
     assert sorted(r["id"] for r in semi.collect()) == ["nano", "s1", "s2"]
 
 
-def test_max_width_prunes_long_branches(spark):
-    """Short-read data must get the plain single-branch binned plan: the
-    max_width probe (default 'auto') sees no over-wide row and skips both
-    nested-loop branches, so there is no Union and no extra input scans."""
-    left = mk(spark, [(f"L{i}", "1", 1 + i * 101, 150 + i * 101) for i in range(50)])
-    right = mk(spark, [(f"R{i}", "1", 1 + i * 97, 300 + i * 97) for i in range(50)])
-    auto = range_join(left, right)
-    assert "Union" not in auto._jdf.queryExecution().executedPlan().toString()
-    # an explicit small hint does the same with no probe job
-    hinted = range_join(left, right, max_width=400)
-    assert "Union" not in hinted._jdf.queryExecution().executedPlan().toString()
-    # max_width=None restores the round-2 always-branch plan
-    forced = range_join(left, right, max_width=None)
-    assert "Union" in forced._jdf.queryExecution().executedPlan().toString()
-    assert pairs(auto) == pairs(hinted) == pairs(forced) == pairs(
-        range_join(left, right, strategy="nested_loop")
-    )
-
-
-def test_max_width_one_sided_branch(spark):
-    """When only one side contains over-wide rows, only that side's branch
-    is built (one Union, not two) and results still match nested-loop."""
+def test_one_wide_side_with_gap_matches_nested_loop(spark):
+    """Only the left side holds a wide row; with and without a gap that
+    widens the right side, the pairs equal the nested-loop join's."""
     left = mk(
         spark,
         [("nano", "1", 1_000, 2_000_000), ("s1", "1", 5_000, 5_400)],
     )
     right = mk(spark, [(f"R{i}", "1", 1 + i * 9_000, 500 + i * 9_000) for i in range(100)])
+    for kwargs in ({}, {"max_gap": 30_000}):
+        assert pairs(range_join(left, right, **kwargs)) == pairs(
+            range_join(left, right, strategy="nested_loop", **kwargs)
+        ), kwargs
+
+
+def test_plan_runs_no_job_and_has_one_branch(spark, tmp_path):
+    """Building the join runs no Spark job, whatever the interval widths,
+    and the executed plan is one binned join: no Union, and exactly one
+    Generate (the bin explode) per side."""
+    lp, rp = str(tmp_path / "left"), str(tmp_path / "right")
+    mk(spark, [(f"L{i}", "1", 1 + i * 101, 150 + i * 101) for i in range(50)]
+       + [("wide", "1", 1, 2_000_000)]).write.parquet(lp)
+    mk(spark, [(f"R{i}", "1", 1 + i * 97, 300 + i * 97) for i in range(50)]).write.parquet(rp)
+    left, right = spark.read.parquet(lp), spark.read.parquet(rp)
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+        group = sc.getLocalProperty("spark.jobGroup.id")  # None: jobs with no group
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = job_ids()
     out = range_join(left, right)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Union") == 1
+    assert job_ids() == before
+
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()  # AQE final plan
+    assert "Union" not in plan
+    assert plan.count("Generate") == 2, plan
     assert pairs(out) == pairs(range_join(left, right, strategy="nested_loop"))
-    # hint path: a bound that only the gap-widened right side can exceed
-    gap = range_join(left, right, max_width=600_000, max_gap=30_000)
-    assert pairs(gap) == pairs(
-        range_join(left, right, strategy="nested_loop", max_gap=30_000)
-    )
 
 
 def test_partitioning_invariance(spark):
@@ -254,81 +246,3 @@ def test_partitioning_invariance(spark):
     one = pairs(range_join(left.coalesce(1), right.coalesce(1)))
     many = pairs(range_join(left.repartition(16), right.repartition(16)))
     assert one == many
-
-
-def test_max_width_probe_memoized(spark):
-    """The auto probe memoizes per (session, analyzed plan, columns): the
-    same inputs joined repeatedly run the statistics job once per side."""
-    from sequila_spark.operators import range_join as RJ
-
-    left = mk(spark, [(f"L{i}", "1", 1 + i * 101, 150 + i * 101) for i in range(20)])
-    right = mk(spark, [(f"R{i}", "1", 1 + i * 97, 300 + i * 97) for i in range(20)])
-    RJ._PROBE_CACHE.clear()
-    before = RJ._PROBE_RUNS
-    first = range_join(left, right)
-    assert RJ._PROBE_RUNS == before + 2  # one probe per side
-    second = range_join(left, right, min_overlap=5)
-    assert RJ._PROBE_RUNS == before + 2  # no re-probe on identical inputs
-    assert pairs(first) == pairs(range_join(left, right, strategy="nested_loop"))
-    assert RJ._PROBE_RUNS == before + 2  # nested_loop never probes
-    assert second.count() >= 0
-
-
-def test_max_width_probe_skips_expensive_lineage(spark):
-    """A side whose lineage is not a plain scan/filter/projection (here: an
-    Aggregate) is never executed for statistics — the probe declines and
-    that side's long branch is built unconditionally (max_width=None
-    behavior), so auto mode cannot double expensive work."""
-    from pyspark.sql import functions as F
-
-    from sequila_spark.operators import range_join as RJ
-
-    left = mk(spark, [(f"L{i}", "1", 1 + i * 101, 150 + i * 101) for i in range(20)])
-    base = mk(spark, [(f"R{i}", "1", 1 + (i % 7) * 97, 300 + i * 97) for i in range(40)])
-    # expensive computed relation: an aggregation over the base intervals
-    right = base.groupBy("contig", "pos_start").agg(
-        F.max("pos_end").alias("pos_end"), F.count("*").alias("n")
-    )
-    RJ._PROBE_CACHE.clear()
-    before = RJ._PROBE_RUNS
-    out = range_join(left, right)
-    assert RJ._PROBE_RUNS == before + 1  # left probed; right skipped
-    # the skipped side falls back to always-building its long branch
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in plan
-
-    def keyset(df):
-        return sorted(
-            (r["id"], r["pos_start_r"], r["pos_end_r"]) for r in df.collect()
-        )
-
-    assert keyset(out) == keyset(range_join(left, right, strategy="nested_loop"))
-    # persisting the expensive side makes the probe cheap again
-    right_cached = right.persist()
-    try:
-        right_cached.count()
-        range_join(left, right_cached)
-        assert RJ._PROBE_RUNS == before + 2  # now probed (reads the cache)
-    finally:
-        right_cached.unpersist()
-
-
-def test_max_width_probe_invalidates_on_rewritten_data(spark, tmp_path):
-    """A semantically identical plan over REWRITTEN files must re-probe:
-    the cache key includes the file-listing snapshot, so a dataset
-    overwritten with wider intervals cannot return the stale (smaller)
-    max width and silently prune the long branch."""
-    from sequila_spark.operators import range_join as RJ
-
-    path = str(tmp_path / "iv")
-    mk(spark, [("A", "1", 10, 60)]).write.mode("overwrite").parquet(path)
-    left = mk(spark, [("L", "1", 1, 1_000_000)])
-    RJ._PROBE_CACHE.clear()
-    before = RJ._PROBE_RUNS
-    r1 = range_join(left, spark.read.parquet(path))
-    assert r1.count() == 1 and RJ._PROBE_RUNS == before + 2
-    # overwrite with a much wider interval; same schema, same plan shape
-    mk(spark, [("B", "1", 10, 500_000)]).write.mode("overwrite").parquet(path)
-    r2 = range_join(left, spark.read.parquet(path))
-    assert RJ._PROBE_RUNS == before + 3  # right side re-probed
-    assert r2.count() == 1  # wide interval still matches: long branch built

@@ -94,9 +94,7 @@ def test_skew_join_split_fires_and_preserves_parity(spark, skew_conf, tmp_path):
     from tools.skew_r14 import duck_digest
     from tools.sweep import _spark_hash_agg
 
-    df = range_join(
-        reads, targets, how="inner", max_width=max(READ_LEN, TARGET_LEN)
-    ).select("qname", "target_id")
+    df = range_join(reads, targets, how="inner").select("qname", "target_id")
     df.collect()  # materialize THIS plan so its adaptive final plan exists
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "AQEShuffleRead skewed" in plan, (
@@ -107,9 +105,7 @@ def test_skew_join_split_fires_and_preserves_parity(spark, skew_conf, tmp_path):
     )
 
     s_dig = _spark_hash_agg(
-        range_join(
-            reads, targets, how="inner", max_width=max(READ_LEN, TARGET_LEN)
-        ).select("qname", "target_id")
+        range_join(reads, targets, how="inner").select("qname", "target_id")
     )
     d_dig = duck_digest(
         f"""
@@ -128,8 +124,6 @@ def test_skew_join_split_fires_and_preserves_parity(spark, skew_conf, tmp_path):
     # digest from a plan that never shuffles the read side for the join
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
     b_dig = _spark_hash_agg(
-        range_join(
-            reads, targets, how="inner", max_width=max(READ_LEN, TARGET_LEN)
-        ).select("qname", "target_id")
+        range_join(reads, targets, how="inner").select("qname", "target_id")
     )
     assert tuple(b_dig) == tuple(s_dig)

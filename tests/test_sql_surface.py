@@ -191,3 +191,55 @@ def test_tvf_after_subquery_in_from_list(spark):
         "WHERE c.coverage = 2 AND a.qname = 'r1'"
     ).collect()
     assert len(rows) == 1
+
+
+def test_tvf_literal_braces(spark):
+    """The query reaches Spark through its string formatter once it holds
+    a TVF call, so literal braces must survive unchanged, with and
+    without a call."""
+    _reads_view(spark)
+    ss = SequilaSession(spark)
+    r = ss.sql(
+        "SELECT '{x} {{y}}' AS s, count(*) AS n "
+        "FROM coverage('reads_sql_test', 's1', 'blocks')"
+    ).first()
+    assert (r["s"], r["n"]) == ("{x} {{y}}", 3)
+    assert ss.sql("SELECT '{z}' AS s").first()["s"] == "{z}"
+
+
+def test_concurrent_tvf_statements(spark):
+    """Two threads run TVF statements over different tables in one session.
+    Each statement's frames get their own views, so neither thread reads
+    the other's coverage."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    schema = "qname string, contig string, pos_start int, pos_end int"
+    spark.createDataFrame(
+        [("a1", "1", 1, 10), ("a2", "1", 5, 14)], schema
+    ).createOrReplaceTempView("tvf_race_a")
+    spark.createDataFrame([("b1", "2", 100, 109)], schema).createOrReplaceTempView(
+        "tvf_race_b"
+    )
+    expected = {
+        "tvf_race_a": [("1", 1, 4, 1), ("1", 5, 10, 2), ("1", 11, 14, 1)] * 2,
+        "tvf_race_b": [("2", 100, 109, 1)] * 2,
+    }
+    ss = SequilaSession(spark)
+
+    def run(table):
+        # two calls per statement: the second call's planning sits between
+        # the first frame's registration and the statement's analysis
+        got = []
+        for _ in range(4):
+            rows = ss.sql(
+                f"SELECT * FROM coverage('{table}', 'blocks') "
+                f"UNION ALL SELECT * FROM coverage('{table}', 'blocks')"
+            ).collect()
+            got.append(sorted((r["contig"], r["pos_start"], r["pos_end"], r["coverage"]) for r in rows))
+        return table, got
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        results = list(pool.map(run, ["tvf_race_a", "tvf_race_b"]))
+    for table, got in results:
+        for rows in got:
+            assert rows == sorted(expected[table]), table

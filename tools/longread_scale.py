@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
-"""Scale-out curve for the LONG-INTERVAL range-join branch (nanopore /
+"""Scale-out curve for the range join on LONG intervals (nanopore /
 WGS-L shape, BASELINE.md benchmarking.rst:626-632): the sf1 long-read
 join at several local[N] core counts, fresh JVM per leg, min-of-RUNS per
-leg — evidence that the bin_cap long-branch plan parallelizes rather than
+leg — evidence that the binned plan parallelizes rather than
 serializing on wide intervals (the r9 skew probe covered position skew;
 this covers interval WIDTH).
 
 The measured relation densifies the oracle-verified TD.longreads shape
 (same 10-100 kb interval arithmetic, modulo 97 instead of 997 -> ~8.7k
 reads at sf1) so the join emits ~128M pairs and the curve is not
-startup-dominated.  Correctness of the branch itself is pinned separately
+startup-dominated.  Correctness of the wide-row join is pinned separately
 by SWEEP_r10_sf1_long.json (exact sliced-oracle hash at sf1).
 
 Usage: python tools/longread_scale.py [--sf-dir testdata_big/sf1]
@@ -68,7 +68,7 @@ def run_leg(cores: int, sf_dir: str, runs: int) -> dict:
     targets = TD.targets(spark, sf_dir)
 
     def pipeline():
-        return range_join(lr, targets, how="inner", bin_cap=8).select(
+        return range_join(lr, targets, how="inner").select(
             "qname", "target_id"
         )
 

@@ -194,8 +194,7 @@ def main() -> None:
         sc.setJobGroup(name, name)
         t0 = time.perf_counter()
         n = range_join(
-            reads, targets, how="inner", max_width=max(READ_LEN, TARGET_LEN),
-            bin_size=leg["bin_size"],
+            reads, targets, how="inner", bin_size=leg["bin_size"]
         ).count()
         wall = time.perf_counter() - t0
         sc.setJobGroup("idle", "idle")

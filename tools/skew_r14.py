@@ -217,9 +217,7 @@ def main() -> None:
 
     # ---- oracle parity on the skewed fixture (values, not counts) ------
     pair_cols = ["qname", "target_id"]
-    sdf = range_join(
-        reads, targets, how="inner", max_width=max(READ_LEN, TARGET_LEN)
-    ).select(*pair_cols)
+    sdf = range_join(reads, targets, how="inner").select(*pair_cols)
     s_dig = _spark_hash_agg(sdf)
     d_dig = duck_digest(
         f"""
@@ -294,10 +292,7 @@ def main() -> None:
             spark.conf.set(k, v)
         sc.setJobGroup(name, name)
         t0 = time.perf_counter()
-        pairs = range_join(
-            reads, targets, how="inner",
-            max_width=max(READ_LEN, TARGET_LEN),
-        ).count()
+        pairs = range_join(reads, targets, how="inner").count()
         wall = time.perf_counter() - t0
         sc.setJobGroup("idle", "idle")
         results[name] = {
