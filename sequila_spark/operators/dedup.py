@@ -183,8 +183,8 @@ def ngram_jaccard_pairs(
             "f", F.count("*").over(Window.partitionBy("sh"))
         )
         # ...then rank and per-doc size under ONE exchange keyed by id.
-        # NOT persisted (r15, adjudicated by interleaved commit A/B —
-        # tools/ab_commits.py): caching any full shingle-sized relation
+        # NOT persisted (r15, adjudicated by interleaved commit A/B):
+        # caching any full shingle-sized relation
         # (the r14 sh cache, or r15's first attempt at caching THIS
         # ranked relation to make the verify exchange-free) costs more
         # in cache-write bandwidth than the one exchange it saves —

@@ -889,7 +889,7 @@ def ann_topk_lsh(
     lowest-|margin| plane bits — recall rises at fixed index size, with
     query-side join rows (not corpus storage) paying for it.  n_flip=0 is
     the exact r14 behavior; the measured frontier lives in
-    RECALL_r15.json / tools/ann_frontier.py."""
+    RECALL_r15.json."""
     # Single Arrow pass per relation computes all table buckets; explode to
     # (table, bucket) rows and one equi-join generates candidates for every
     # table at once (the query side is tiny and broadcasts).  The collision

@@ -452,6 +452,36 @@ def read_bam_native(
 
     from sequila_spark.sources import bamcodec as B
 
+    _COL_TYPES = {
+        S.SAMPLE: "string", S.QNAME: "string", S.FLAG: "int",
+        S.CONTIG: "string", S.START: "int", S.END: "int", S.MAPQ: "int",
+        S.CIGAR: "string", S.RNEXT: "string", S.PNEXT: "int",
+        S.TLEN: "int", S.SEQUENCE: "string", S.BASEQ: "string",
+        "tags": "map<string,string>",
+    }
+    if columns is not None:
+        unknown = set(columns) - set(_COL_TYPES)
+        if unknown:
+            raise ValueError(f"unknown BAM columns: {sorted(unknown)}")
+        if not arrow:
+            raise ValueError("columns pruning requires arrow=True")
+        if typed_tags and "tags" not in columns:
+            # with_typed_tags projects the tag_* columns out of 'tags';
+            # pruning it away would otherwise fail downstream at plan time
+            # with an unresolved-column error far from the cause
+            raise ValueError(
+                "typed_tags=True needs the 'tags' column — add 'tags' to "
+                "columns (or drop the pruning list)"
+            )
+    if with_blocks and not arrow:
+        raise ValueError("with_blocks requires arrow=True")
+    keep = [c for c in _COL_TYPES if columns is None or c in columns]
+    schema_str = ", ".join(f"{c} {_COL_TYPES[c]}" for c in keep)
+    if with_blocks:
+        schema_str += ", __blocks array<struct<s:int,e:int>>"
+    if with_ordinal:
+        schema_str += ", __ord long"
+
     if isinstance(path, (list, tuple)):
         paths = list(path)
     elif os.path.isdir(path):
@@ -490,36 +520,6 @@ def read_bam_native(
                 spans.append((p, sample, ("__unmapped__", last_voff)))
         else:
             spans.append((p, sample, None))
-
-    _COL_TYPES = {
-        S.SAMPLE: "string", S.QNAME: "string", S.FLAG: "int",
-        S.CONTIG: "string", S.START: "int", S.END: "int", S.MAPQ: "int",
-        S.CIGAR: "string", S.RNEXT: "string", S.PNEXT: "int",
-        S.TLEN: "int", S.SEQUENCE: "string", S.BASEQ: "string",
-        "tags": "map<string,string>",
-    }
-    if columns is not None:
-        unknown = set(columns) - set(_COL_TYPES)
-        if unknown:
-            raise ValueError(f"unknown BAM columns: {sorted(unknown)}")
-        if not arrow:
-            raise ValueError("columns pruning requires arrow=True")
-        if typed_tags and "tags" not in columns:
-            # with_typed_tags projects the tag_* columns out of 'tags';
-            # pruning it away would otherwise fail downstream at plan time
-            # with an unresolved-column error far from the cause
-            raise ValueError(
-                "typed_tags=True needs the 'tags' column — add 'tags' to "
-                "columns (or drop the pruning list)"
-            )
-    if with_blocks and not arrow:
-        raise ValueError("with_blocks requires arrow=True")
-    keep = [c for c in _COL_TYPES if columns is None or c in columns]
-    schema_str = ", ".join(f"{c} {_COL_TYPES[c]}" for c in keep)
-    if with_blocks:
-        schema_str += ", __blocks array<struct<s:int,e:int>>"
-    if with_ordinal:
-        schema_str += ", __ord long"
 
     if arrow:
         if not spans:

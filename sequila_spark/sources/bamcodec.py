@@ -193,8 +193,11 @@ def _decode_tags(data: bytes) -> dict[str, str]:
             end = off + 5 + cnt * size
             tags[tag] = decode_tag_bytes("B", data[off:end])
             off = end
-        else:
-            break  # unknown type: cannot advance safely
+        else:  # cannot advance past a value of unknown size
+            raise ValueError(
+                f"BAM tag {tag!r}: unknown type byte {typ} ({chr(typ)!r}) "
+                f"at offset {off - 1} of the tag block"
+            )
     return tags
 
 
@@ -392,7 +395,9 @@ def encode_record(
         k[:2].encode() + b"Z" + str(v).encode() + b"\x00"
         for k, v in (tags or {}).items()
     )
-    # bin: legacy reg2bin over [pos0, pos0+1) — readers here ignore it
+    # bin: spec reg2bin over the reference span; a read that consumes no
+    # reference (or an unplaced one, pos0 = -1 -> 4680) spans [pos0, pos0+1)
+    ref_len = sum(n for n, code in ops if CIGAR_OPS[code] in _REF_CONSUMING)
     body = (
         struct.pack(
             "<iiBBHHHiiii",
@@ -400,7 +405,7 @@ def encode_record(
             pos0,
             len(qname_b),
             mapq or 0,
-            0,
+            reg2bin(pos0, pos0 + max(ref_len, 1)),
             len(ops),
             flag or 0,
             l_seq,

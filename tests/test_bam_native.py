@@ -468,17 +468,82 @@ def test_reg2bin_spec_values():
     assert reg2bin(0, (1 << 29)) == 0     # whole-reference bin
 
 
-def test_typed_tags_requires_tags_in_columns(spark):
+def test_typed_tags_requires_tags_in_columns(spark, tmp_path):
     """typed_tags projects out of 'tags'; a pruning list that omits it
     must fail at read time with a clear error, not at plan time."""
     import pytest as _pytest
 
     from sequila_spark.sources import read_bam_native
 
+    bam = str(tmp_path / "one.bam")
+    _synth_bam(bam, [("1", 1000)], [_rec("a", "1", 10)])
     with _pytest.raises(ValueError, match="typed_tags"):
         read_bam_native(
-            spark, MDBAM, typed_tags=True, columns=["qname", "contig"]
+            spark, bam, typed_tags=True, columns=["qname", "contig"]
         )
+
+
+def _spec_reg2bin(beg, end):
+    """SAM spec §5.3 reg2bin for a 0-based half-open [beg, end)."""
+    end -= 1
+    for shift, first in ((14, 4681), (17, 585), (20, 73), (23, 9), (26, 1)):
+        if beg >> shift == end >> shift:
+            return first + (beg >> shift)
+    return 0
+
+
+def test_write_bam_packs_spec_bin(spark, tmp_path):
+    """write_bam packs reg2bin over each read's reference span into the
+    record's bin field; an unplaced read (pos -1) gets bin 4680."""
+    import gzip
+    import struct
+
+    from sequila_spark.sources import write_bam
+
+    df = spark.createDataFrame(
+        [
+            ("m", 0, "1", 101, 110, 60, "10M", None, 0, 0, "A" * 10, "I" * 10),
+            # 5M 20000D 5M from 10001: [10000, 30010) crosses 16384
+            ("d", 0, "1", 10001, 30010, 60, "5M20000D5M", None, 0, 0, "A" * 10, "I" * 10),
+            ("u", 4, None, None, None, 0, "*", None, 0, 0, "A" * 10, "I" * 10),
+        ],
+        "qname string, flag int, contig string, pos_start int, pos_end int,"
+        "mapq int, cigar string, rnext string, pnext int, tlen int,"
+        "seq string, qual string",
+    )
+    out = str(tmp_path / "bins.bam")
+    write_bam(df, out, refs=[("1", 100_000)])
+
+    data = gzip.open(out, "rb").read()
+    (l_text,) = struct.unpack_from("<i", data, 4)
+    off = 8 + l_text
+    (n_ref,) = struct.unpack_from("<i", data, off)
+    off += 4
+    for _ in range(n_ref):
+        (l_name,) = struct.unpack_from("<i", data, off)
+        off += 4 + l_name + 4
+    got = {}
+    while off < len(data):
+        block_size, _rid, pos0, l_name, _mapq, bin_ = struct.unpack_from("<iiiBBH", data, off)
+        qname = data[off + 36 : off + 36 + l_name - 1].decode()
+        got[qname] = (pos0, bin_)
+        off += 4 + block_size
+    assert got == {
+        "m": (100, _spec_reg2bin(100, 110)),
+        "d": (10000, _spec_reg2bin(10000, 30010)),
+        "u": (-1, _spec_reg2bin(-1, 0)),
+    }
+    assert got["d"][1] == 585 and got["u"][1] == 4680
+
+
+def test_unknown_tag_type_raises():
+    """An unknown tag type byte names the tag, the byte and its offset
+    instead of silently dropping the record's remaining tags."""
+    import struct
+
+    blob = b"RGZgrp\x00" + b"XXq\x01\x02\x03\x04" + b"NMi" + struct.pack("<i", 3)
+    with pytest.raises(ValueError, match=r"'XX'.*113.*offset 9 "):
+        B._decode_tags(blob)
 
 
 def test_inflate_libdeflate_matches_zlib(tmp_path):

@@ -186,7 +186,7 @@ def test_mate_overlap_tweak_reads_matches_stream(spark):
     assert got == expected
 
 
-def test_fasta_contig_fai_seek_equals_full_parse():
+def test_fasta_contig_fai_seek_equals_full_parse(two_contig_fasta):
     """The lazy contig loader (shared vcf.py .fai/byte-span machinery)
     must return byte-identical sequences to the full-file parse."""
     from sequila_spark.functions.baq import (
@@ -196,10 +196,7 @@ def test_fasta_contig_fai_seek_equals_full_parse():
         _fasta_contigs,
     )
 
-    path = (
-        "/root/reference/src/test/resources/reference/"
-        "Homo_sapiens_assembly18_chr1_chrM.small.fasta"
-    )
+    path = two_contig_fasta
     full = dict(_fasta_contigs(path))
     assert full
     # force the lazy path: clear the full-map cache so _fasta_contig seeks

@@ -21,10 +21,6 @@ from sequila_spark.sources.bamcodec import (
     scan_bgzf_block_index,
 )
 
-HG18 = (
-    "/root/reference/src/test/resources/reference/"
-    "Homo_sapiens_assembly18_chr1_chrM.small.fasta"
-)
 SLICE_FASTA = "/root/reference/src/test/resources/NA12878.slice.fasta"
 SLICE_CRAM = "/root/reference/src/test/resources/NA12878.slice.cram"
 
@@ -51,69 +47,69 @@ def write_gzi(bgzf_path: str, gzi_path: str) -> None:
 
 
 @pytest.fixture(scope="module")
-def hg18_gz(tmp_path_factory):
+def fasta_gz(tmp_path_factory, two_contig_fasta):
     d = tmp_path_factory.mktemp("bgzf")
-    gz = str(d / "hg18.small.fa.gz")
-    bgzip_file(HG18, gz)
+    gz = str(d / "two_contig.fa.gz")
+    bgzip_file(two_contig_fasta, gz)
     return gz
 
 
-def test_is_bgzf_detection(tmp_path, hg18_gz):
-    assert is_bgzf(hg18_gz)
+def test_is_bgzf_detection(tmp_path, fasta_gz, two_contig_fasta):
+    assert is_bgzf(fasta_gz)
     plain_gz = str(tmp_path / "plain.fa.gz")
     with gzip.open(plain_gz, "wb") as f:
-        f.write(open(HG18, "rb").read())
+        f.write(open(two_contig_fasta, "rb").read())
     assert not is_bgzf(plain_gz)
-    assert not is_bgzf(HG18)
+    assert not is_bgzf(two_contig_fasta)
 
 
-def test_block_scan_matches_gzi_and_gzip_stream(tmp_path, hg18_gz):
-    raw = open(HG18, "rb").read()
+def test_block_scan_matches_gzi_and_gzip_stream(tmp_path, fasta_gz, two_contig_fasta):
+    raw = open(two_contig_fasta, "rb").read()
     # BGZF is valid multi-member gzip end-to-end
-    assert gzip.open(hg18_gz, "rb").read() == raw
-    idx = scan_bgzf_block_index(hg18_gz)
+    assert gzip.open(fasta_gz, "rb").read() == raw
+    idx = scan_bgzf_block_index(fasta_gz)
     assert len(idx) > 3, "fixture must span multiple blocks"
     gzi = str(tmp_path / "x.gzi")
-    write_gzi(hg18_gz, gzi)
+    write_gzi(fasta_gz, gzi)
     assert read_gzi(gzi) == idx
 
 
-def test_bgzf_fetch_range_random(hg18_gz):
-    raw = open(HG18, "rb").read()
-    idx = scan_bgzf_block_index(hg18_gz)
+def test_bgzf_fetch_range_random(fasta_gz, two_contig_fasta):
+    raw = open(two_contig_fasta, "rb").read()
+    idx = scan_bgzf_block_index(fasta_gz)
     rng = random.Random(7)
     for _ in range(25):
         a = rng.randrange(0, len(raw))
         b = min(len(raw), a + rng.randrange(1, 9000))
-        assert bgzf_fetch_range(hg18_gz, idx, a, b) == raw[a:b]
+        assert bgzf_fetch_range(fasta_gz, idx, a, b) == raw[a:b]
     # cross-everything range and tail clamp
-    assert bgzf_fetch_range(hg18_gz, idx, 0, len(raw)) == raw
-    assert bgzf_fetch_range(hg18_gz, idx, len(raw) - 5, len(raw) + 99) == raw[-5:]
+    assert bgzf_fetch_range(fasta_gz, idx, 0, len(raw)) == raw
+    assert bgzf_fetch_range(fasta_gz, idx, len(raw) - 5, len(raw) + 99) == raw[-5:]
 
 
-def test_region_index_bgzf_equals_plain(tmp_path, hg18_gz):
+def test_region_index_bgzf_equals_plain(tmp_path, fasta_gz, two_contig_fasta):
     from sequila_spark.sources.vcf import (
         fetch_contig_seq,
         load_fasta_region_index,
     )
 
-    plain = load_fasta_region_index(HG18)  # uses the real .fai
+    plain = load_fasta_region_index(two_contig_fasta)  # uses the fixture's .fai
     # (a) no .fai, no .gzi: streamed scan + reconstructed block index
-    got = load_fasta_region_index(hg18_gz)
+    got = load_fasta_region_index(fasta_gz)
     assert set(got) == set(plain)
     for k in plain:
-        assert fetch_contig_seq(hg18_gz, got[k]) == fetch_contig_seq(HG18, plain[k])
+        assert fetch_contig_seq(fasta_gz, got[k]) == fetch_contig_seq(two_contig_fasta, plain[k])
     # (b) with .fai (uncompressed offsets, samtools-faidx layout) + .gzi
     fai_dir = tmp_path / "faidx"
     fai_dir.mkdir()
-    gz2 = str(fai_dir / "hg18.fa.gz")
-    shutil.copy(hg18_gz, gz2)
-    shutil.copy(HG18 + ".fai", gz2 + ".fai")
+    gz2 = str(fai_dir / "two_contig.fa.gz")
+    shutil.copy(fasta_gz, gz2)
+    shutil.copy(two_contig_fasta + ".fai", gz2 + ".fai")
     write_gzi(gz2, gz2 + ".gzi")
     got2 = load_fasta_region_index(gz2)
     assert set(got2) == set(plain)
     for k in plain:
-        assert fetch_contig_seq(gz2, got2[k]) == fetch_contig_seq(HG18, plain[k])
+        assert fetch_contig_seq(gz2, got2[k]) == fetch_contig_seq(two_contig_fasta, plain[k])
 
 
 def _write_repeat_vcf(tmp_path):
@@ -174,14 +170,17 @@ def test_cram_decode_with_bgzf_reference(tmp_path):
     assert gzrecs == plain
 
 
-def test_read_fasta_relation_over_bgzf(spark, tmp_path):
+def test_read_fasta_relation_over_bgzf(spark, tmp_path, two_contig_fasta):
     """The Spark FASTA relation reads .fa.gz directly: BGZF is valid
     multi-member gzip, which Hadoop's codec decompresses in
     wholeTextFiles — pinned so a codec regression is loud."""
     from sequila_spark.sources import read_fasta
 
-    gz = str(tmp_path / "hg18.fa.gz")
-    bgzip_file(HG18, gz)
-    plain = {(r["contig"], r["pos_end"], r["seq"]) for r in read_fasta(spark, HG18).collect()}
+    gz = str(tmp_path / "two_contig.fa.gz")
+    bgzip_file(two_contig_fasta, gz)
+    plain = {
+        (r["contig"], r["pos_end"], r["seq"])
+        for r in read_fasta(spark, two_contig_fasta).collect()
+    }
     got = {(r["contig"], r["pos_end"], r["seq"]) for r in read_fasta(spark, gz).collect()}
     assert got == plain and len(plain) == 2

@@ -18,8 +18,8 @@ Two standard outputs:
   independent BAM codec); the gate oracle replicates that parquet
   CROSS JOIN range(copies).
 - ``testdata_big/bigcram/NA12878.slice.cram`` (--copies 4096, ~1.2 GB,
-  13.0 M records): the GB-scale anchor input (tools/cram_anchor.py
-  --spark leg), gitignored like testdata_big/bigbam.
+  13.0 M records): the GB-scale anchor input (its Spark leg),
+  gitignored like testdata_big/bigbam.
 
 Usage: python tools/make_big_cram.py [--copies 64] [--out PATH]
 """

@@ -2,7 +2,7 @@
 """Contig-level skew robustness artifact for the binned range join
 (VERDICT r13 task 4) — SKEW_r14.json.
 
-The r9 probe (tools/skew_probe.py) measured a window-level pathology with
+The r9 skew probe measured a window-level pathology with
 task-TIME stats and count()-only verification.  This artifact covers what
 that one did not:
 
