@@ -47,14 +47,15 @@ def write_alignments(
     # while ranges spread a contig across tasks AND keep each output
     # file's (contig, pos) row-group min/max spans tight for skipping.
     #
-    # ``assume_sorted=True`` skips the shuffle+sort entirely: rows from
-    # read_bam_native/read_cram_native are ALREADY (contig, pos_start)-
-    # ordered within each task (coordinate-sorted input, one genomic span
-    # per task, each span single-sample), so writing partitions as-is
-    # preserves every layout guarantee above — each output file covers
-    # its span's tight (contig, pos) range — without re-moving the
-    # (wide: seq/qual) rows through a full shuffle.  Only pass it for
-    # relations with that per-partition order.
+    # ``assume_sorted=True`` skips the shuffle+sort entirely: each task of
+    # read_bam_native/read_cram_native reads whole spans (containers) in
+    # file order, so on coordinate-sorted input its rows of one file are
+    # ALREADY in (header contig order, pos_start) order.  A task may hold
+    # several contigs and samples; partitionBy(sample_id) keeps each
+    # output file to one sample, so writing partitions as-is keeps each
+    # file coordinate-ordered with tight row-group (contig, pos) ranges —
+    # without re-moving the (wide: seq/qual) rows through a full shuffle.
+    # Only pass it for relations with that per-partition order.
     if assume_sorted:
         df.write.mode(mode).partitionBy(S.SAMPLE).parquet(path)
     else:
@@ -117,8 +118,6 @@ def list_samples(path: str) -> list[str]:
     answer it from file names).  Works on BAM globs/directories (file-name
     stems) and on write_alignments parquet stores (sample_id=... partition
     directories)."""
-    import glob as _glob
-
     if os.path.isdir(path):
         parts = sorted(
             e.split("=", 1)[1]
@@ -127,11 +126,10 @@ def list_samples(path: str) -> list[str]:
         )
         if parts:
             return parts
-        files = sorted(_glob.glob(os.path.join(path, "*.bam")))
-    elif any(ch in path for ch in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
+    try:
+        files = _expand_paths(path, "bam")
+    except FileNotFoundError:
+        return []
     return sorted({os.path.basename(p).split(".")[0] for p in files})
 
 
@@ -386,6 +384,111 @@ def write_bam(
         fragments.unpersist()
 
 
+def _expand_paths(path: str | list[str], ext: str) -> list[str]:
+    """The files a reader's ``path`` names: a list as given, a directory's
+    ``*.<ext>`` files, a glob's matches, or the one file."""
+    import glob as _glob
+
+    if isinstance(path, (list, tuple)):
+        paths = list(path)
+    elif os.path.isdir(path):
+        paths = sorted(_glob.glob(os.path.join(path, f"*.{ext}")))
+    elif any(ch in path for ch in "*?["):
+        paths = sorted(_glob.glob(path))
+    else:
+        paths = [path]
+    if not paths:
+        raise FileNotFoundError(f"no {ext.upper()} files match {path!r}")
+    return paths
+
+
+_TASK_BYTES = 32 << 20  # compressed bytes a decode task holds at scale
+
+
+def _pack_tasks(sizes: list[int], parallelism: int) -> list[list[int]]:
+    """Cut decode units (BAI spans or CRAM containers, in file order, of
+    compressed ``sizes``) into contiguous groups of indices, one per task.
+
+    A Python task pays ~0.2-0.3 s (4-vCPU host) before its function runs:
+    the worker's setup calls ``importlib.invalidate_caches()``, so each
+    zipimporter on its path re-reads its archive directory (workers are
+    reused; the cost is per task).  Hence min(n, par * ceil(total / (par *
+    32 MB))) groups: one full wave for a small input, ~32 MB a task at
+    scale.  Cuts fall on the unit boundary nearest each cumulative-byte
+    quantile; a group of several units over 32 MB is cut again, so only a
+    single oversized unit passes the cap."""
+    import bisect
+    from itertools import accumulate
+
+    n = len(sizes)
+    if not n:
+        return []
+    par = max(1, parallelism)
+    total = sum(sizes)
+    k = min(n, par * max(1, -(-total // (par * _TASK_BYTES))))
+    cum = list(accumulate(sizes))
+    bounds = [0]
+    for g in range(1, k):
+        q = total * g / k
+        j = bisect.bisect_left(cum, q)  # the unit that reaches q
+        b = j + 1 if cum[j] - q <= q - (cum[j - 1] if j else 0) else j
+        bounds.append(min(max(b, bounds[-1] + 1), n - (k - g)))
+    groups: list[list[int]] = []
+    for lo, hi in zip(bounds, bounds[1:] + [n]):
+        for i in range(lo, hi):
+            if i == lo or held + sizes[i] > _TASK_BYTES:
+                groups.append([])
+                held = 0
+            groups[-1].append(i)
+            held += sizes[i]
+    return groups
+
+
+def _plan_bam(
+    path: str | list[str], chunk: int
+) -> tuple[dict[str, list[tuple[str, int]]], list[tuple], list[int]]:
+    """Plan the decode spans of the BAM files ``path`` names, reading only
+    headers and indexes: (refs by file, spans as (file, sample, span) in
+    file order, each span's estimated compressed bytes).  A span is
+    bamvec's span model; a span's bytes run from its virtual offset to the
+    next span's, or to the end of the file for a file's last span."""
+    from sequila_spark.sources import bamcodec as B
+
+    refs_by_path: dict[str, list[tuple[str, int]]] = {}
+    spans: list[tuple] = []
+    sizes: list[int] = []
+    for p in _expand_paths(path, "bam"):
+        with open(p, "rb") as f:
+            refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
+        sample = os.path.basename(p).split(".")[0]
+        bai = next(
+            (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
+            None,
+        )
+        file_spans: list = [None]
+        if bai:
+            linear, n_no_coor = B.read_bai(bai)
+            file_spans = B.plan_spans(refs_by_path[p], linear, chunk)
+            # Trailing no-coordinate region: a sorted BAM stores records
+            # with ref_id -1 after every mapped record, a region the
+            # per-reference spans never reach — without this span an
+            # indexed file would silently drop reads the unindexed
+            # single-span path yields.  Scan from the last indexed virtual
+            # offset, keeping only ref_id < 0 records (mapped records seen
+            # on the way are owned by their mapped span).  Skipped only
+            # when the index states n_no_coor == 0.
+            if n_no_coor is None or n_no_coor > 0:
+                last_voff = max((v for il in linear for v in il if v), default=0)
+                file_spans.append(("__unmapped__", last_voff))
+        # every indexed span ends in its virtual offset; >> 16 is the
+        # offset of its first BGZF block in the file
+        starts = [0 if sp is None else sp[-1] >> 16 for sp in file_spans]
+        ends = starts[1:] + [os.path.getsize(p)]
+        spans += [(p, sample, sp) for sp in file_spans]
+        sizes += [max(e - s, 0) for s, e in zip(starts, ends)]
+    return refs_by_path, spans, sizes
+
+
 def read_bam_native(
     spark: SparkSession,
     path: str | list[str],
@@ -398,16 +501,18 @@ def read_bam_native(
     with_blocks: bool = False,
 ) -> DataFrame:
     """Decode BAM with the pure-Python BGZF/BAM/BAI codec (sources/bamcodec
-    — no pysam/htslib needed), partitioned by genomic chunk: the driver
-    reads only headers + indexes; each task seeks its chunk's virtual
+    — no pysam/htslib needed), split into genomic-chunk spans: the driver
+    reads only headers + indexes; each span seeks its chunk's virtual
     offset from the BAI linear index and keeps exactly the reads whose
     start falls in its half-open range (owner-by-start — no duplicates at
     chunk boundaries; the reference assigns each read to one split the same
     way, datasources/BAM/AlignmentRelation.scala:298-393).  Without a .bai
-    a file decodes in a single task (still correct; index it for scale).
-    Indexed and unindexed reads of the same file yield the same rows: the
-    trailing no-coordinate region (unmapped, ref_id -1) gets its own span
-    when an index is present.
+    a file is one span (still correct; index it for scale).  Indexed and
+    unindexed reads of the same file yield the same rows: the trailing
+    no-coordinate region (unmapped, ref_id -1) gets its own span when an
+    index is present.  Tasks take contiguous runs of whole spans, packed by
+    estimated compressed bytes (_pack_tasks): one task per core for a small
+    input, about 32 MB per task at scale.
 
     ``path`` may be a single file, a glob ('dir/*.bam'), a directory, or a
     list — multi-sample tables exactly like the reference's
@@ -448,8 +553,6 @@ def read_bam_native(
     disables that filtering — include them whenever reads feed a filtered
     operator.  ``typed_tags=True`` with a ``columns`` list that omits
     ``'tags'`` is rejected here (it would fail at plan time otherwise)."""
-    import glob as _glob
-
     from sequila_spark.sources import bamcodec as B
 
     _COL_TYPES = {
@@ -482,44 +585,8 @@ def read_bam_native(
     if with_ordinal:
         schema_str += ", __ord long"
 
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.bam")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no BAM files match {path!r}")
-
-    refs_by_path: dict[str, list[tuple[str, int]]] = {}
-    spans: list[tuple] = []  # (path, sample, span-or-None)
-    for p in paths:
-        with open(p, "rb") as f:
-            refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
-        sample = os.path.basename(p).split(".")[0]
-        bai = next(
-            (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
-            None,
-        )
-        if bai:
-            linear, n_no_coor = B.read_bai(bai)
-            for sp in B.plan_spans(refs_by_path[p], linear, chunk):
-                spans.append((p, sample, sp))
-            # Trailing no-coordinate region: a sorted BAM stores records
-            # with ref_id -1 after every mapped record, a region the
-            # per-reference spans never reach — without this span an
-            # indexed file would silently drop reads the unindexed
-            # single-task path yields.  Scan from the last indexed virtual
-            # offset, keeping only ref_id < 0 records (mapped records seen
-            # on the way are owned by their mapped span).  Skipped only
-            # when the index states n_no_coor == 0.
-            if n_no_coor is None or n_no_coor > 0:
-                last_voff = max((v for il in linear for v in il if v), default=0)
-                spans.append((p, sample, ("__unmapped__", last_voff)))
-        else:
-            spans.append((p, sample, None))
+    refs_by_path, spans, sizes = _plan_bam(path, chunk)
+    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
 
     if arrow:
         if not spans:
@@ -529,22 +596,23 @@ def read_bam_native(
                 from sequila_spark.sources import bamvec as BV
 
                 for b in batches:
-                    for sid in b.column(0).to_pylist():
-                        p, sample, span = spans[sid]
-                        yield from BV.iter_span_batches(
-                            p,
-                            refs_by_path[p],
-                            sample,
-                            span,
-                            span_idx=sid,
-                            with_tags=with_tags,
-                            with_ordinal=with_ordinal,
-                            columns=keep if columns is not None else None,
-                            with_blocks=with_blocks,
-                        )
+                    for gid in b.column(0).to_pylist():
+                        for sid in groups[gid]:
+                            p, sample, span = spans[sid]
+                            yield from BV.iter_span_batches(
+                                p,
+                                refs_by_path[p],
+                                sample,
+                                span,
+                                span_idx=sid,
+                                with_tags=with_tags,
+                                with_ordinal=with_ordinal,
+                                columns=keep if columns is not None else None,
+                                with_blocks=with_blocks,
+                            )
 
-            # one span per task: range(n) split into exactly n partitions
-            df = spark.range(0, len(spans), 1, len(spans)).mapInArrow(
+            # one span group per task: range(n) split into exactly n partitions
+            df = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
                 gen_batches, schema_str
             )
         if S.CONTIG in keep:
@@ -555,30 +623,17 @@ def read_bam_native(
         )
         return out
 
-    def gen(task):
-        span_idx, (p, sample, span) = task
-        refs = refs_by_path[p]
+    def gen(span_idx):
+        from sequila_spark.sources import bamvec as BV
+
+        p, sample, span = spans[span_idx]
         with open(p, "rb") as fh:
-            if span is None:
-                st = B.BgzfReader(fh)
-                B.read_bam_header(st)  # skip to records
-                it = B.parse_records(st, refs, with_tags=with_tags)
-            elif span[0] == "__unmapped__":
-                voff = span[1]
-                if voff:
-                    st = B.BgzfReader(fh, voff)
-                else:  # index exists but no mapped reads: scan from header
-                    st = B.BgzfReader(fh)
-                    B.read_bam_header(st)
-                it = B.parse_records(
-                    st, refs, with_tags=with_tags, unmapped_only=True
-                )
-            else:
-                rid, s0, e0, voff = span
-                st = B.BgzfReader(fh, voff)
-                it = B.parse_records(
-                    st, refs, ref_id=rid, start0=s0, end0=e0, with_tags=with_tags
-                )
+            st, region, unmapped_only = BV._open_span(fh, span)
+            rid, s0, e0 = region or (None, 0, None)
+            it = B.parse_records(
+                st, refs_by_path[p], ref_id=rid, start0=s0, end0=e0,
+                with_tags=with_tags, unmapped_only=unmapped_only,
+            )
             if with_ordinal:
                 base_ord = span_idx << 32
                 for i, rec in enumerate(it):
@@ -587,9 +642,9 @@ def read_bam_native(
                 for rec in it:
                     yield (sample, *rec)
 
-    rdd = spark.sparkContext.parallelize(
-        list(enumerate(spans)), max(len(spans), 1)
-    ).flatMap(gen)
+    rdd = spark.sparkContext.parallelize(groups, max(len(groups), 1)).flatMap(
+        lambda group: (row for sid in group for row in gen(sid))
+    )
     df = rdd.toDF(schema_str)
     df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     out = with_typed_tags(df) if typed_tags else df
@@ -649,59 +704,31 @@ def read_bam_coverage_events(
     — here as an opt-in reader, with the declarative operator unchanged
     for alignment-shaped relations.  ``flag_mask``/``min_mapq`` apply
     filter_reads' predicates at decode time (pass 1796 for the
-    reference's default read filter).  Span planning (BAI genomic chunks,
-    owner-by-start) is identical to read_bam_native."""
-    import glob as _glob
-
-    from sequila_spark.sources import bamcodec as B
-
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.bam")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no BAM files match {path!r}")
-
-    refs_by_path: dict[str, list[tuple[str, int]]] = {}
-    spans: list[tuple] = []
-    for p in paths:
-        with open(p, "rb") as f:
-            refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
-        bai = next(
-            (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
-            None,
-        )
-        if bai:
-            linear, _ = B.read_bai(bai)
-            for sp in B.plan_spans(refs_by_path[p], linear, chunk):
-                spans.append((p, sp))
-        else:
-            spans.append((p, None))
-
+    reference's default read filter).  Span planning and task packing
+    (_plan_bam, _pack_tasks) are those of read_bam_native."""
+    refs_by_path, spans, sizes = _plan_bam(path, chunk)
     schema_str = "contig string, chunk long, pos int, delta int"
     if not spans:
         return spark.createDataFrame([], schema_str)
+    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
 
     def gen_batches(batches):
         from sequila_spark.sources import bamvec as BV
 
         for b in batches:
-            for sid in b.column(0).to_pylist():
-                p, span = spans[sid]
-                yield from BV.iter_span_cov_events(
-                    p,
-                    refs_by_path[p],
-                    span,
-                    chunk_size=chunk_size,
-                    flag_mask=flag_mask,
-                    min_mapq=min_mapq,
-                )
+            for gid in b.column(0).to_pylist():
+                for sid in groups[gid]:
+                    p, _sample, span = spans[sid]
+                    yield from BV.iter_span_cov_events(
+                        p,
+                        refs_by_path[p],
+                        span,
+                        chunk_size=chunk_size,
+                        flag_mask=flag_mask,
+                        min_mapq=min_mapq,
+                    )
 
-    df = spark.range(0, len(spans), 1, len(spans)).mapInArrow(
+    df = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
         gen_batches, schema_str
     )
     return df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
@@ -717,7 +744,7 @@ _CRAM_SCAN_CACHE: dict[tuple, tuple] = {}
 _CRAM_SCAN_CACHE_MAX = 16
 
 
-def _cram_scan_cached(path: str) -> tuple[list[str], list[str], list[dict]]:
+def _cram_scan_cached(path: str) -> tuple[list[str], list[str], list[dict], set]:
     from sequila_spark.sources import cramcodec as C
 
     st = os.stat(path)
@@ -729,26 +756,7 @@ def _cram_scan_cached(path: str) -> tuple[list[str], list[str], list[dict]]:
         _CRAM_SCAN_CACHE[key] = hit
         while len(_CRAM_SCAN_CACHE) > _CRAM_SCAN_CACHE_MAX:
             _CRAM_SCAN_CACHE.pop(next(iter(_CRAM_SCAN_CACHE)))
-    return hit[0], hit[1], hit[2]
-
-
-def _validate_containers_cached(path: str, containers: list[dict]) -> None:
-    """validate_container_file over ``containers``, memoized per file —
-    validation decompresses only header blocks but is O(containers) of
-    seeks, which dominates re-planning on large files."""
-    from sequila_spark.sources import cramcodec as C
-
-    st = os.stat(path)
-    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
-    hit = _CRAM_SCAN_CACHE.get(key)
-    done: set = hit[3] if hit is not None else set()
-    todo = [h for h in containers if h["abs_offset"] not in done]
-    if not todo:
-        return
-    with open(path, "rb") as vf:
-        for h in todo:
-            C.validate_container_file(vf, h)  # raises NotImplementedError
-            done.add(h["abs_offset"])
+    return hit
 
 
 def plan_cram_containers(
@@ -777,7 +785,7 @@ def plan_cram_containers(
     from sequila_spark.functions.intervals import clean_contig_py
     from sequila_spark.sources import cramcodec as C
 
-    ref_names, rg_names, containers = _cram_scan_cached(path)
+    ref_names, rg_names, containers, _ = _cram_scan_cached(path)
     if contig is not None:
         want = clean_contig_py(contig)
         rids = {
@@ -799,6 +807,39 @@ def plan_cram_containers(
     return ref_names, rg_names, containers
 
 
+def _plan_cram(
+    path: str | list[str],
+    contig: str | None,
+    start: int | None,
+    end: int | None,
+) -> tuple[dict[str, tuple[list[str], list[str]]], list[tuple[str, str, dict]]]:
+    """Plan the containers of the CRAM files ``path`` names, pruned by the
+    interval and validated (NotImplementedError -> pysam fallback):
+    ((ref_names, rg_names) by file, (file, sample, container) in file
+    order)."""
+    from sequila_spark.sources import cramcodec as C
+
+    meta_by_path: dict[str, tuple[list[str], list[str]]] = {}
+    tasks: list[tuple[str, str, dict]] = []
+    for p in _expand_paths(path, "cram"):
+        ref_names, rg_names, containers = plan_cram_containers(
+            p, contig=contig, start=start, end=end
+        )
+        meta_by_path[p] = (ref_names, rg_names)
+        sample = os.path.basename(p).split(".")[0]
+        # validation reads only header blocks but seeks once per container,
+        # which dominates re-planning a large file: memoized per file
+        validated = _cram_scan_cached(p)[3]
+        todo = [h for h in containers if h["abs_offset"] not in validated]
+        if todo:
+            with open(p, "rb") as vf:
+                for h in todo:
+                    C.validate_container_file(vf, h)
+                    validated.add(h["abs_offset"])
+        tasks += [(p, sample, h) for h in containers]
+    return meta_by_path, tasks
+
+
 def read_cram_native(
     spark: SparkSession,
     path: str | list[str],
@@ -810,10 +851,12 @@ def read_cram_native(
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Decode CRAM 3.0 with the pure-Python codec (sources/cramcodec — no
-    htslib/pysam), one task per container: the driver scans container
-    HEADERS only (no block decompression) to plan byte-range tasks; each
-    task seeks to its container offset and decodes its records.  Containers
-    carry their own compression header, so tasks are independent — the same
+    htslib/pysam): the driver scans container HEADERS only (no block
+    decompression) to plan byte-range tasks; each task takes a contiguous
+    run of whole containers, packed by compressed bytes (_pack_tasks: one
+    task per core for a small input, about 32 MB per task at scale), seeks
+    to each container's offset and decodes its records.  Containers carry
+    their own compression header, so tasks are independent — the same
     scale model as the BAI-chunked BAM reader.
 
     ``path`` may be a single file, a glob ('dir/*.cram'), a directory, or a
@@ -852,33 +895,9 @@ def read_cram_native(
     columns not requested, and only the requested Arrow arrays ship to
     the JVM.  sample_id is always included; an interval filter requires
     contig/pos_start/pos_end to be present."""
-    import glob as _glob
-
     from sequila_spark.sources import cramcodec as C
 
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.cram")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no CRAM files match {path!r}")
-
-    meta_by_path: dict[str, tuple[list[str], list[str]]] = {}
-    tasks: list[tuple[str, str, dict]] = []
-    for p in paths:
-        ref_names, rg_names, containers = plan_cram_containers(
-            p, contig=contig, start=start, end=end
-        )
-        meta_by_path[p] = (ref_names, rg_names)
-        sample = os.path.basename(p).split(".")[0]
-        # NotImplementedError -> pysam fallback; memoized per file stat
-        _validate_containers_cached(p, containers)
-        for h in containers:
-            tasks.append((p, sample, h))
+    meta_by_path, tasks = _plan_cram(path, contig, start, end)
     bref = (
         spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
     )
@@ -911,26 +930,12 @@ def read_cram_native(
     )
     names = [S.SAMPLE] + keep + (["tags"] if keep_tags else [])
 
-    # Partition = a contiguous GROUP of containers packed to a byte
-    # target, not one container: real containers are ~1 MB and a Python
-    # runner costs ~0.2-0.3 s per task (worker spin-up + imports), so
-    # one-task-per-container is ~10x overhead at any scale (and 100M
-    # tasks at 100 TB).  The target adapts downward so small inputs
-    # still fill the cluster (2 waves per core when possible).
-    par = spark.sparkContext.defaultParallelism or 1
-    total_bytes = sum(t[2]["length"] for t in tasks)
-    target = max(1, min(32 << 20, total_bytes // max(1, 2 * par)))
-    groups: list[list[int]] = []
-    cur: list[int] = []
-    cur_bytes = 0
-    for ti, t in enumerate(tasks):
-        cur.append(ti)
-        cur_bytes += t[2]["length"]
-        if cur_bytes >= target:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-    if cur:
-        groups.append(cur)
+    # Partition = a contiguous GROUP of containers: real containers are
+    # ~1 MB and a Python task's fixed ~0.2-0.3 s (_pack_tasks) would make
+    # one task per container ~10x overhead (and 100M tasks at 100 TB).
+    groups = _pack_tasks(
+        [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
+    )
 
     def gen_batches(batches):
         """mapInArrow task body: one contiguous container GROUP per task
@@ -1033,32 +1038,10 @@ def read_cram_coverage_events(
     container groups) is identical to read_cram_native; an interval also
     applies the htslib-fetch overlap row filter.  ``flag_mask`` /
     ``min_mapq`` apply filter_reads' predicates at decode time."""
-    import glob as _glob
-
     from sequila_spark.functions.intervals import clean_contig_py
     from sequila_spark.sources import cramcodec as C
 
-    if isinstance(path, (list, tuple)):
-        paths = list(path)
-    elif os.path.isdir(path):
-        paths = sorted(_glob.glob(os.path.join(path, "*.cram")))
-    elif any(ch in path for ch in "*?["):
-        paths = sorted(_glob.glob(path))
-    else:
-        paths = [path]
-    if not paths:
-        raise FileNotFoundError(f"no CRAM files match {path!r}")
-
-    meta_by_path: dict[str, list[str]] = {}
-    tasks: list[tuple[str, dict]] = []
-    for p in paths:
-        ref_names, _rg, containers = plan_cram_containers(
-            p, contig=contig, start=start, end=end
-        )
-        meta_by_path[p] = ref_names
-        _validate_containers_cached(p, containers)
-        for h in containers:
-            tasks.append((p, h))
+    meta_by_path, tasks = _plan_cram(path, contig, start, end)
     bref = (
         spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
     )
@@ -1067,20 +1050,9 @@ def read_cram_coverage_events(
     if not tasks:
         return spark.createDataFrame([], schema_str)
 
-    par = spark.sparkContext.defaultParallelism or 1
-    total_bytes = sum(t[1]["length"] for t in tasks)
-    target = max(1, min(32 << 20, total_bytes // max(1, 2 * par)))
-    groups: list[list[int]] = []
-    cur: list[int] = []
-    cur_bytes = 0
-    for ti, t in enumerate(tasks):
-        cur.append(ti)
-        cur_bytes += t[1]["length"]
-        if cur_bytes >= target:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-    if cur:
-        groups.append(cur)
+    groups = _pack_tasks(
+        [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
+    )
 
     want_contig = clean_contig_py(contig) if contig is not None else None
     q_start = start if start is not None else 1
@@ -1101,8 +1073,8 @@ def read_cram_coverage_events(
         for b in batches:
             for gid in b.column(0).to_pylist():
                 for tid in groups[gid]:
-                    p, h = tasks[tid]
-                    ref_names = meta_by_path[p]
+                    p, _sample, h = tasks[tid]
+                    ref_names = meta_by_path[p][0]
                     take = ref_take_by_path.get(p)
                     if take is None:
                         take = pa.array(
@@ -1214,7 +1186,7 @@ def read_bam(
     columns: list[str] | None = None,
     with_blocks: bool = False,
 ) -> DataFrame:
-    """Decode BAM/CRAM partitioned by genomic chunk/container.  Plain BAM
+    """Decode BAM/CRAM in tasks of packed genomic chunks/containers.  Plain BAM
     and CRAM 3.0 go through the native pure-Python codecs; CRAM files using
     codecs outside the native set fall back to pysam when available.
 

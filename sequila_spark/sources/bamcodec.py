@@ -13,14 +13,14 @@ Implements the public hts-specs formats (SAM/BAM spec v1.6):
    genomic chunk's scan near its data — the same interval-chunking role as
    the reference's BGZF split assignment
    (datasources/BAM/AlignmentRelation.scala:298-393), expressed as
-   one task per genomic chunk.
+   one decode span per genomic chunk.
 
-Scale design: the driver reads only the header + index (KBs); each task
+Scale design: the driver reads only the header + index (KBs); each span
 seeks its virtual offset and decodes one chunk's records, keeping a read
 iff its 0-based start falls inside the chunk's half-open range
 (owner-by-start — no duplicates across chunk boundaries, every read owned
-by exactly one task).  Coordinate-sorted input lets a task stop at the
-first record past its range.
+by exactly one span).  Coordinate-sorted input lets a span stop at the
+first record past its range; a task decodes a run of spans (bam._pack_tasks).
 """
 
 from __future__ import annotations
@@ -124,6 +124,11 @@ def read_bam_header(stream: BgzfReader) -> tuple[list[tuple[str, int]], str]:
 
 _TAG_SCALAR_FMT = {"c": "<b", "C": "<B", "s": "<h", "S": "<H", "i": "<i", "I": "<I"}
 _TAG_ARRAY_FMT = {"c": "b", "C": "B", "s": "h", "S": "H", "i": "i", "I": "I", "f": "f"}
+# type byte -> (unpack_from, value bytes, renderer) of each fixed-size type
+_TAG_FIXED = {ord(t): (struct.Struct(f).unpack_from, struct.calcsize(f), str)
+              for t, f in _TAG_SCALAR_FMT.items()}
+_TAG_FIXED[ord("f")] = (struct.Struct("<f").unpack_from, 4, repr)
+_TAG_FIXED[ord("A")] = (struct.Struct("<c").unpack_from, 1, lambda b: b.decode("latin-1"))
 
 
 def decode_tag_bytes(typ: str, raw: bytes) -> str:
@@ -144,7 +149,12 @@ def decode_tag_bytes(typ: str, raw: bytes) -> str:
     if typ == "B":
         sub = chr(raw[0])
         cnt = struct.unpack_from("<i", raw, 1)[0]
-        fmt = _TAG_ARRAY_FMT[sub]
+        fmt = _TAG_ARRAY_FMT.get(sub)
+        if fmt is None:
+            raise ValueError(
+                f"BAM tag value type 'B': unknown array subtype {sub!r} at "
+                "offset 0 of the value"
+            )
         vals = struct.unpack_from(f"<{cnt}{fmt}", raw, 5)
         return ",".join(repr(v) if sub == "f" else str(v) for v in vals)
     return raw.hex()
@@ -153,44 +163,60 @@ def decode_tag_bytes(typ: str, raw: bytes) -> str:
 # interned 2-char tag names (a BAM has a handful of distinct tags repeated
 # across millions of records — decoding the name once each is free)
 _TAG_NAMES: dict[bytes, str] = {}
-_ifb = int.from_bytes
+
+
+def _tag_error(tag: str, typ: int, off: int, what: str) -> ValueError:
+    return ValueError(
+        f"BAM tag {tag!r} type {chr(typ)!r}: {what} at offset {off} of the "
+        "tag block"
+    )
 
 
 def _decode_tags(data: bytes) -> dict[str, str]:
+    """Render a record's tag block.  A value that runs past the block or an
+    unknown type or ``B`` subtype raises ValueError naming the tag, its
+    type and the offset; so do 1-2 bytes left over after the last tag."""
     tags: dict[str, str] = {}
     off = 0
     n = len(data)
-    while off + 3 <= n:
+    while off < n:
+        if off + 3 > n:
+            raise ValueError(
+                f"BAM tag block: {n - off} byte(s) left over at offset {off}"
+            )
         nm = data[off : off + 2]
         tag = _TAG_NAMES.get(nm)
         if tag is None:
             tag = _TAG_NAMES.setdefault(nm, nm.decode("ascii", "replace"))
         typ = data[off + 2]
         off += 3
-        if typ == 65:  # A
-            tags[tag] = chr(data[off]); off += 1
-        elif typ == 67:  # C
-            tags[tag] = str(data[off]); off += 1
-        elif typ == 99:  # c
-            tags[tag] = str(_ifb(data[off : off + 1], "little", signed=True)); off += 1
-        elif typ == 83:  # S
-            tags[tag] = str(_ifb(data[off : off + 2], "little")); off += 2
-        elif typ == 115:  # s
-            tags[tag] = str(_ifb(data[off : off + 2], "little", signed=True)); off += 2
-        elif typ == 73:  # I
-            tags[tag] = str(_ifb(data[off : off + 4], "little")); off += 4
-        elif typ == 105:  # i
-            tags[tag] = str(_ifb(data[off : off + 4], "little", signed=True)); off += 4
-        elif typ == 102:  # f
-            tags[tag] = repr(struct.unpack_from("<f", data, off)[0]); off += 4
+        fixed = _TAG_FIXED.get(typ)
+        if fixed is not None:
+            unpack, size, render = fixed
+            try:
+                tags[tag] = render(unpack(data, off)[0])
+            except struct.error:
+                raise _tag_error(
+                    tag, typ, off, f"{size}-byte value runs past the end"
+                ) from None
+            off += size
         elif typ in (90, 72):  # Z / H
-            end = data.index(b"\x00", off)
+            end = data.find(b"\x00", off)
+            if end < 0:
+                raise _tag_error(tag, typ, off, "value has no NUL terminator")
             tags[tag] = data[off:end].decode("ascii", "replace")
             off = end + 1
         elif typ == 66:  # B
-            sub = chr(data[off]); cnt = struct.unpack_from("<i", data, off + 1)[0]
-            size = struct.calcsize("<" + _TAG_ARRAY_FMT[sub])
-            end = off + 5 + cnt * size
+            if off + 5 > n:
+                raise _tag_error(tag, typ, off, "array header runs past the end")
+            sub = chr(data[off])
+            fmt = _TAG_ARRAY_FMT.get(sub)
+            if fmt is None:
+                raise _tag_error(tag, typ, off, f"unknown array subtype {sub!r}")
+            cnt = struct.unpack_from("<i", data, off + 1)[0]
+            end = off + 5 + cnt * struct.calcsize("<" + fmt)
+            if cnt < 0 or end > n:
+                raise _tag_error(tag, typ, off, f"{cnt} values run past the end")
             tags[tag] = decode_tag_bytes("B", data[off:end])
             off = end
         else:  # cannot advance past a value of unknown size

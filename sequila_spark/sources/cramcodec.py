@@ -29,8 +29,8 @@ pysam.
 
 Scale model mirrors the BAM codec: containers are self-contained decode
 units (their compression header travels with them), so the driver scans
-container *headers only* to plan one task per container, and each task
-seeks straight to its byte offset (`scan_containers` / `decode_container`).
+container *headers only* (`scan_containers`) to pack whole containers into
+tasks by bytes (bam._pack_tasks); a task seeks to each (`decode_container`).
 
 Output tuples match sources.bamcodec.parse_records exactly:
 (qname, flag, contig, pos_start, pos_end, mapq, cigar, rnext, pnext,

@@ -4,7 +4,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -62,3 +63,35 @@ def two_contig_fasta(tmp_path_factory):
     path.write_text("".join(fasta))
     (path.parent / (path.name + ".fai")).write_text("".join(fai))
     return str(path)
+
+
+@pytest.fixture(scope="session")
+def bench():
+    """perfbench's NumPy-only ``gen`` and ``truth`` modules, whose inputs
+    and expected outputs share no code with the product.  They import each
+    other as top-level modules, so perfbench/ is on sys.path only while
+    they load: left there, it would let test_imports_resolve accept a
+    script's dangling ``import gen``."""
+    saved = list(sys.path)
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    try:
+        import gen
+        import truth
+    finally:
+        sys.path[:] = saved
+        sys.modules.pop("gen", None)
+        sys.modules.pop("truth", None)
+    return gen, truth
+
+
+@pytest.fixture(scope="session")
+def gen_cohort(tmp_path_factory, bench):
+    """An indexed cohort of two coordinate-sorted BAMs, S0 and S1, of 3,000
+    reads each over perfbench's six contigs, written by perfbench's
+    generator: (directory, the generator's Reads of each sample)."""
+    gen, _ = bench
+    d = tmp_path_factory.mktemp("cohort")
+    samples = [gen.make_reads(700 + k, 3_000, sample=f"S{k}") for k in range(2)]
+    for r in samples:
+        gen.write_bam(str(d / f"{r.sample}.bam"), r)
+    return str(d), samples

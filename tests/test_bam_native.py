@@ -546,6 +546,43 @@ def test_unknown_tag_type_raises():
         B._decode_tags(blob)
 
 
+@pytest.mark.parametrize(
+    "blob, match",
+    [
+        (b"NMi\x03\x00", r"'NM' type 'i': 4-byte value .* offset 3 "),
+        (b"RGZgrp\x00XXs\x01", r"'XX' type 's': 2-byte value .* offset 10 "),
+        (b"XXf\x00\x00", r"'XX' type 'f': 4-byte value .* offset 3 "),
+        (b"RGZgrp\x00XXA", r"'XX' type 'A': 1-byte value .* offset 10 "),
+        (b"RGZgrp", r"'RG' type 'Z': value has no NUL .* offset 3 "),
+        (b"XXHbeef", r"'XX' type 'H': value has no NUL .* offset 3 "),
+        (b"XXBC\x03\x00", r"'XX' type 'B': array header .* offset 3 "),
+        (b"XXBC\x03\x00\x00\x00\x01\x02", r"'XX' type 'B': 3 values .* offset 3 "),
+        (b"XXBs\xff\xff\xff\xff", r"'XX' type 'B': -1 values .* offset 3 "),
+        (b"RGZgrp\x00NM", r"2 byte\(s\) left over at offset 7"),
+        (b"NMC\x01X", r"1 byte\(s\) left over at offset 4"),
+    ],
+)
+def test_truncated_tag_values_raise(blob, match):
+    """A tag value that runs past the tag block, or bytes left over after
+    the last tag, raise instead of decoding a short value or dropping the
+    bytes; the message names the tag, its type and the offset."""
+    with pytest.raises(ValueError, match=match):
+        B._decode_tags(blob)
+
+
+def test_unknown_b_subtype_raises():
+    """An unknown ``B`` array subtype is a named ValueError on both the
+    tag-block decoder and the single-value renderer, not a bare KeyError."""
+    with pytest.raises(ValueError, match=r"'XX' type 'B': unknown array subtype 'q' at offset 3 "):
+        B._decode_tags(b"XXBq\x01\x00\x00\x00\x05")
+    with pytest.raises(ValueError, match=r"unknown array subtype 'q' at offset 0"):
+        B.decode_tag_bytes("B", b"q\x01\x00\x00\x00\x05")
+    # the well-formed forms of the same blocks still decode
+    assert B._decode_tags(b"RGZgrp\x00NMi\x03\x00\x00\x00XXBC\x02\x00\x00\x00\x01\x02") == {
+        "RG": "grp", "NM": "3", "XX": "1,2"
+    }
+
+
 def test_inflate_libdeflate_matches_zlib(tmp_path):
     """sources/_inflate must yield byte-identical output to zlib on real
     BGZF members, use the declared out_size, and reject corrupt members."""

@@ -71,19 +71,17 @@ def test_limit_pushdown_plan(spark, tmp_path):
     assert df.count() == 7
 
 
-def test_write_alignments_assume_sorted_roundtrip(spark, tmp_path):
+def test_write_alignments_assume_sorted_roundtrip(spark, tmp_path, gen_cohort):
     """assume_sorted=True (decode output is already per-task coordinate-
     ordered) must round-trip the same multiset with the same partition
-    layout and keep per-file (contig, pos) order for row-group skipping."""
+    layout and keep per-file (contig, pos) order for row-group skipping.
+    The generated cohort has two samples over six contigs, so a decode task
+    holds spans of several contigs and, at a file boundary, two samples."""
     import os
 
     from sequila_spark.sources import read_alignments, read_bam_native, write_alignments
 
-    bam = "/root/reference/src/test/resources/NA12878.slice.bam"
-    if not os.path.exists(bam):
-        import pytest
-
-        pytest.skip("no reference BAM")
+    bam, _ = gen_cohort
     reads = read_bam_native(spark, bam, with_tags=False).drop("tags")
     p1 = str(tmp_path / "sorted_skip")
     p2 = str(tmp_path / "shuffled")
