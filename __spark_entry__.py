@@ -624,15 +624,24 @@ def _q_orders_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the example of §1.1 of the VCF 4.1 specification
+#: (https://samtools.github.io/hts-specs/VCFv4.1.pdf), copied verbatim —
+#: the same file as the reference project's vcf/test.vcf
+_VCF_SPEC_EXAMPLE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "vcf", "test.vcf"
+)
+
+
 def _q_vcf_genotypes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-sample genotype rows decoded from the reference project's own
-    multi-sample VCF (vcf/test.vcf — the surface VCFRelation.scala:25-45
-    exposes via Glow, parsed natively here).  Oracle: the 15 rows of the
-    file hand-transcribed into a VALUES table — fully independent of the
-    parser.  sf_dir is ignored — real data."""
+    """Per-sample genotype rows decoded from the multi-sample VCF 4.1 spec
+    example (fixtures/vcf/test.vcf: 5 sites, 3 samples, GT:GQ:DP:HQ — the
+    surface VCFRelation.scala:25-45 exposes via Glow, parsed natively
+    here).  Oracle: the 15 rows of the file hand-transcribed into a VALUES
+    table — fully independent of the parser.  sf_dir is ignored — real
+    data."""
     from sequila_spark.sources.vcf import read_vcf
 
-    path = "/root/reference/src/test/resources/vcf/test.vcf"
+    path = _VCF_SPEC_EXAMPLE
     g_cols = [
         F.col("contig"),
         F.col("pos_start"),
@@ -653,8 +662,7 @@ def _q_vcf_genotypes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # baffling row-count mismatch instead of a clear missing-fixture
         # diagnosis.
         raise FileNotFoundError(
-            f"vcf_genotypes gate requires the reference fixture {path}; "
-            "it is absent in this environment"
+            f"vcf_genotypes gate requires the VCF 4.1 spec example {path}"
         )
     return read_vcf(spark, path).select(
         "contig", "pos_start", "ref", "alt",
@@ -830,15 +838,20 @@ def _q_pileup_convert_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: containers in the fixtures/bigcram gate fixture (tools/make_big_cram.py)
 _BIGCRAM_COPIES = 64
 
+#: the reference FASTA both cram_decode CRAMs were encoded against
+#: (RR=true slices: the decode needs its bases, and the slice MD5 checks them)
+_CRAM_SLICE_FASTA = "/root/reference/src/test/resources/NA12878.slice.fasta"
+
 
 def _cram_fixture() -> tuple[str | None, int]:
     """ONE resolver for the cram_decode fixture, shared by the query and
     its oracle multiplier so the two can never silently diverge (r14
     ADVICE): returns (cram_path, oracle_copies) — (bigcram, 64) when the
     64-container gate fixture exists, (reference single-container, 1) as
-    the fallback, (None, 0) in fully fixture-less environments (where the
-    query returns an empty frame and the gate degrades gracefully instead
-    of failing on a row-count mismatch, r13 ADVICE)."""
+    the fallback, (None, 0) when neither CRAM exists (the query then
+    returns an empty frame).  Both CRAMs are reference-based, so with a
+    CRAM present but _CRAM_SLICE_FASTA absent the query raises instead —
+    tests/test_oracle_parity.py skips the gate on that path."""
     here = os.path.dirname(os.path.abspath(__file__))
     big = os.path.join(here, "fixtures", "bigcram", "NA12878.slice.cram")
     if os.path.exists(big):
@@ -867,7 +880,7 @@ def _q_cram_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequila_spark.sources import read_cram_native
 
     cram, _ = _cram_fixture()
-    fasta = "/root/reference/src/test/resources/NA12878.slice.fasta"
+    fasta = _CRAM_SLICE_FASTA
     if cram is None:  # fixture-less environments: empty result
         return spark.read.parquet(f"{_SLICEBAM_FIX}/reads.parquet").limit(0)
     # columns= pushes the tag prune into the DECODE (r12): the gate never
@@ -1995,8 +2008,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(MAX(CASE WHEN rk = 1 THEN order_cents END) AS BIGINT) AS top_order_cents
             FROM ranked GROUP BY r_name, n_name
         """,
-        # Hand-transcribed from vcf/test.vcf (5 sites x 3 samples) — the
-        # oracle is the file read BY EYE, independent of the parser.
+        # Hand-transcribed from fixtures/vcf/test.vcf, the VCF 4.1 spec's
+        # §1.1 example (5 sites x 3 samples) — the oracle is the file read
+        # BY EYE, independent of the parser.
         "vcf_genotypes": """
             SELECT * FROM (VALUES
               ('20', 14370,   'G',   'A',      'NA00001', TRUE,  '0/0', 48, 1, '51,51'),

@@ -157,6 +157,11 @@ def test_plain_gzip_reference_rejected(spark, tmp_path):
         ).collect()
 
 
+@pytest.mark.skipif(
+    not (os.path.exists(SLICE_FASTA) and os.path.exists(SLICE_CRAM)),
+    reason=f"reference CRAM fixture not present: needs {SLICE_FASTA} "
+    f"and {SLICE_CRAM}",
+)
 def test_cram_decode_with_bgzf_reference(tmp_path):
     """CRAM record reconstruction with a bgzipped reference FASTA must be
     record-identical to the plain-text reference path."""

@@ -3,25 +3,20 @@
 The reference surfaces Glow's full VCF schema — including the per-sample
 ``genotypes`` array — and only renames site-level columns
 (datasources/VCF/VCFRelation.scala:25-45).  Goldens below are hand-computed
-from the reference's own ``vcf/test.vcf`` (VCF 4.1 spec example: 3 samples,
-GT:GQ:DP:HQ).
+from ``fixtures/vcf/test.vcf``, the VCF 4.1 spec's §1.1 example (3 samples,
+GT:GQ:DP:HQ) — the same file as the reference's own ``vcf/test.vcf``.
 """
 
 import os
 
-import pytest
-
 from sequila_spark.sources import read_vcf
 from sequila_spark.sources.vcf import read_vcf_header, split_multiallelics
 
-REF_VCF = "/root/reference/src/test/resources/vcf/test.vcf"
-
-needs_ref = pytest.mark.skipif(
-    not os.path.exists(REF_VCF), reason="no reference fixtures"
+REF_VCF = os.path.join(
+    os.path.dirname(__file__), "..", "fixtures", "vcf", "test.vcf"
 )
 
 
-@needs_ref
 def test_header_metadata():
     h = read_vcf_header(REF_VCF)
     assert h.samples == ["NA00001", "NA00002", "NA00003"]
@@ -32,7 +27,6 @@ def test_header_metadata():
     assert h.format_numbers["HQ"] == "2"
 
 
-@needs_ref
 def test_genotypes_reference_vcf(spark):
     """Row 14370 (G>A): NA00001 0|0 phased, NA00002 1|0 phased, NA00003
     1/1 unphased; row 17330 NA00003 drops the trailing HQ field; row
@@ -56,7 +50,6 @@ def test_genotypes_reference_vcf(spark):
     assert [list(x["calls"]) for x in g3] == [[1, 2], [2, 1], [2, 2]]
 
 
-@needs_ref
 def test_split_renumbers_gt(spark):
     """vt-decompose -s semantics on rs6040355 (A>G,T; GTs 1|2, 2|1, 2/2):
     the G record keeps allele-1 calls as 1 and masks allele-2 as missing;

@@ -11,18 +11,15 @@ from sequila_spark.sources import read_vcf
 from sequila_spark.sources.vcf import normalize_variants, split_multiallelics
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
-REF_VCF = "/root/reference/src/test/resources/vcf/test.vcf"
-
-needs_ref = pytest.mark.skipif(
-    not os.path.exists(REF_VCF), reason="no reference fixtures"
+REF_VCF = os.path.join(
+    os.path.dirname(__file__), "..", "fixtures", "vcf", "test.vcf"
 )
 
 
-@needs_ref
 def test_split_multiallelics_reference_vcf(spark):
-    """The reference's own test.vcf: 5 records, 2 multi-allelic sites ->
-    7 split rows; per-alt (Number=A style) INFO values renumber by
-    position, scalar INFO values replicate."""
+    """The VCF 4.1 spec example (the reference's own test.vcf): 5 records,
+    2 multi-allelic sites -> 7 split rows; per-alt (Number=A style) INFO
+    values renumber by position, scalar INFO values replicate."""
     df = read_vcf(spark, REF_VCF, normalization_mode="split")
     rows = sorted(df.collect(), key=lambda r: (r["pos_start"], r["alt"][0]))
     assert len(rows) == 7
@@ -43,7 +40,6 @@ def test_split_multiallelics_reference_vcf(spark):
     assert bi[0]["info"]["DP"] == "14"
 
 
-@needs_ref
 def test_split_and_normalize_reference_vcf(spark, tmp_path):
     """split_and_normalize on the reference's microsat1 site
     (GTC -> G,GTCT at 1234567).  Hand-computed vt-normalize goldens:
