@@ -444,6 +444,25 @@ def _pack_tasks(sizes: list[int], parallelism: int) -> list[list[int]]:
     return groups
 
 
+def _run_tasks(
+    spark: SparkSession, groups: list[list[int]], decode, schema: str
+) -> DataFrame:
+    """The task loop of all four readers: one task per group of decode
+    units (range(n) split into exactly n partitions), whose body
+    ``decode(units)`` yields the Arrow RecordBatches of that group's unit
+    indices.  A per-task cache lives inside ``decode``.  No groups: an
+    empty frame of ``schema``."""
+    if not groups:
+        return spark.createDataFrame([], schema)
+
+    def task(batches):
+        for b in batches:
+            for gid in b.column(0).to_pylist():
+                yield from decode(groups[gid])
+
+    return spark.range(0, len(groups), 1, len(groups)).mapInArrow(task, schema)
+
+
 def _plan_bam(
     path: str | list[str], chunk: int
 ) -> tuple[dict[str, list[tuple[str, int]]], list[tuple], list[int]]:
@@ -496,7 +515,6 @@ def read_bam_native(
     with_tags: bool = True,
     typed_tags: bool = False,
     with_ordinal: bool = False,
-    arrow: bool = True,
     columns: list[str] | None = None,
     with_blocks: bool = False,
 ) -> DataFrame:
@@ -530,18 +548,20 @@ def read_bam_native(
     same owner-by-start span, where ``__ord`` is byte-exact file order) —
     the tie-break mate-overlap detection needs.
 
-    ``arrow=True`` (default) decodes through the vectorized NumPy->Arrow
-    batch codec (sources/bamvec) and feeds Spark columnar RecordBatches via
-    ``mapInArrow`` — ~20x the per-core throughput of the scalar row path
-    (which remains available as ``arrow=False`` and is the pinned semantic
-    reference).
+    Decoding is the vectorized NumPy->Arrow batch codec (sources/bamvec),
+    fed to Spark as columnar RecordBatches via ``mapInArrow``: ~20x the
+    per-core throughput of the scalar ``bamcodec.parse_records``, which
+    stays only as the tests' reference.  A file cut inside a record or a
+    BGZF block raises ValueError naming the file instead of yielding fewer
+    rows (a cut between blocks that splits no record is not detected: the
+    EOF marker is not yet required).
 
-    ``columns`` (arrow path) prunes the DECODE itself: mapInArrow is
+    ``columns`` prunes the DECODE itself: mapInArrow is
     opaque to Catalyst's column pruning, so a caller that only needs
     position/flag columns passes them here and the codec never renders
     seq/qual/qname/tags bytes — the manual analog of parquet ReadSchema
     pruning, and of htsjdk's lazy per-field decode (the reference relies
-    on both).  ``with_blocks=True`` (arrow path) appends
+    on both).  ``with_blocks=True`` appends
     ``__blocks list<struct<s:int,e:int>>`` — per-read M/=/X aligned
     blocks computed vectorized from the raw cigar ops at decode time
     (Read.scala:27-54's getAlignmentBlocks); operators/coverage consumes
@@ -553,8 +573,6 @@ def read_bam_native(
     disables that filtering — include them whenever reads feed a filtered
     operator.  ``typed_tags=True`` with a ``columns`` list that omits
     ``'tags'`` is rejected here (it would fail at plan time otherwise)."""
-    from sequila_spark.sources import bamcodec as B
-
     _COL_TYPES = {
         S.SAMPLE: "string", S.QNAME: "string", S.FLAG: "int",
         S.CONTIG: "string", S.START: "int", S.END: "int", S.MAPQ: "int",
@@ -566,8 +584,6 @@ def read_bam_native(
         unknown = set(columns) - set(_COL_TYPES)
         if unknown:
             raise ValueError(f"unknown BAM columns: {sorted(unknown)}")
-        if not arrow:
-            raise ValueError("columns pruning requires arrow=True")
         if typed_tags and "tags" not in columns:
             # with_typed_tags projects the tag_* columns out of 'tags';
             # pruning it away would otherwise fail downstream at plan time
@@ -576,8 +592,6 @@ def read_bam_native(
                 "typed_tags=True needs the 'tags' column — add 'tags' to "
                 "columns (or drop the pruning list)"
             )
-    if with_blocks and not arrow:
-        raise ValueError("with_blocks requires arrow=True")
     keep = [c for c in _COL_TYPES if columns is None or c in columns]
     schema_str = ", ".join(f"{c} {_COL_TYPES[c]}" for c in keep)
     if with_blocks:
@@ -586,69 +600,30 @@ def read_bam_native(
         schema_str += ", __ord long"
 
     refs_by_path, spans, sizes = _plan_bam(path, chunk)
-    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
 
-    if arrow:
-        if not spans:
-            df = spark.createDataFrame([], schema_str)
-        else:
-            def gen_batches(batches):
-                from sequila_spark.sources import bamvec as BV
-
-                for b in batches:
-                    for gid in b.column(0).to_pylist():
-                        for sid in groups[gid]:
-                            p, sample, span = spans[sid]
-                            yield from BV.iter_span_batches(
-                                p,
-                                refs_by_path[p],
-                                sample,
-                                span,
-                                span_idx=sid,
-                                with_tags=with_tags,
-                                with_ordinal=with_ordinal,
-                                columns=keep if columns is not None else None,
-                                with_blocks=with_blocks,
-                            )
-
-            # one span group per task: range(n) split into exactly n partitions
-            df = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
-                gen_batches, schema_str
-            )
-        if S.CONTIG in keep:
-            df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
-        out = with_typed_tags(df) if typed_tags else df
-        _attach_bam_provenance(
-            out, path, chunk, columns=columns, with_blocks=with_blocks
-        )
-        return out
-
-    def gen(span_idx):
+    def decode(units):
         from sequila_spark.sources import bamvec as BV
 
-        p, sample, span = spans[span_idx]
-        with open(p, "rb") as fh:
-            st, region, unmapped_only = BV._open_span(fh, span)
-            rid, s0, e0 = region or (None, 0, None)
-            it = B.parse_records(
-                st, refs_by_path[p], ref_id=rid, start0=s0, end0=e0,
-                with_tags=with_tags, unmapped_only=unmapped_only,
+        for sid in units:
+            p, sample, span = spans[sid]
+            yield from BV.iter_span_batches(
+                p,
+                refs_by_path[p],
+                sample,
+                span,
+                span_idx=sid,
+                with_tags=with_tags,
+                with_ordinal=with_ordinal,
+                columns=keep if columns is not None else None,
+                with_blocks=with_blocks,
             )
-            if with_ordinal:
-                base_ord = span_idx << 32
-                for i, rec in enumerate(it):
-                    yield (sample, *rec, base_ord | i)
-            else:
-                for rec in it:
-                    yield (sample, *rec)
 
-    rdd = spark.sparkContext.parallelize(groups, max(len(groups), 1)).flatMap(
-        lambda group: (row for sid in group for row in gen(sid))
-    )
-    df = rdd.toDF(schema_str)
-    df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
+    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
+    df = _run_tasks(spark, groups, decode, schema_str)
+    if S.CONTIG in keep:
+        df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     out = with_typed_tags(df) if typed_tags else df
-    _attach_bam_provenance(out, path, chunk, columns=None, with_blocks=False)
+    _attach_bam_provenance(out, path, chunk, columns=columns, with_blocks=with_blocks)
     return out
 
 
@@ -707,29 +682,24 @@ def read_bam_coverage_events(
     reference's default read filter).  Span planning and task packing
     (_plan_bam, _pack_tasks) are those of read_bam_native."""
     refs_by_path, spans, sizes = _plan_bam(path, chunk)
-    schema_str = "contig string, chunk long, pos int, delta int"
-    if not spans:
-        return spark.createDataFrame([], schema_str)
-    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
 
-    def gen_batches(batches):
+    def decode(units):
         from sequila_spark.sources import bamvec as BV
 
-        for b in batches:
-            for gid in b.column(0).to_pylist():
-                for sid in groups[gid]:
-                    p, _sample, span = spans[sid]
-                    yield from BV.iter_span_cov_events(
-                        p,
-                        refs_by_path[p],
-                        span,
-                        chunk_size=chunk_size,
-                        flag_mask=flag_mask,
-                        min_mapq=min_mapq,
-                    )
+        for sid in units:
+            p, _sample, span = spans[sid]
+            yield from BV.iter_span_cov_events(
+                p,
+                refs_by_path[p],
+                span,
+                chunk_size=chunk_size,
+                flag_mask=flag_mask,
+                min_mapq=min_mapq,
+            )
 
-    df = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
-        gen_batches, schema_str
+    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
+    df = _run_tasks(
+        spark, groups, decode, "contig string, chunk long, pos int, delta int"
     )
     return df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
 
@@ -840,6 +810,14 @@ def _plan_cram(
     return meta_by_path, tasks
 
 
+def _read_container(path: str, h: dict) -> tuple[bytes, dict]:
+    """One planned container's bytes and its header rebased onto them."""
+    with open(path, "rb") as f:
+        f.seek(h["abs_data_offset"])
+        blob = f.read(h["length"])
+    return blob, dict(h, data_offset=0)
+
+
 def read_cram_native(
     spark: SparkSession,
     path: str | list[str],
@@ -937,11 +915,10 @@ def read_cram_native(
         [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
     )
 
-    def gen_batches(batches):
-        """mapInArrow task body: one contiguous container GROUP per task
-        id, columnar decode straight into Arrow RecordBatches (no
-        per-row pickle — the same transfer model as the vectorized BAM
-        reader)."""
+    def decode(units):
+        """One task: a contiguous GROUP of containers decoded column-wise
+        straight into Arrow RecordBatches (no per-row pickle — the same
+        transfer model as the vectorized BAM reader)."""
         import pyarrow as pa
 
         from sequila_spark.sources import cramcodec as CC
@@ -949,40 +926,29 @@ def read_cram_native(
         s = pa.string()
         i32 = pa.int32()
         mtype = pa.map_(pa.string(), pa.string())
-        for b in batches:
-            for gid in b.column(0).to_pylist():
-                for tid in groups[gid]:
-                    p, sample, h = tasks[tid]
-                    ref_names, rg_names = meta_by_path[p]
-                    with open(p, "rb") as f:
-                        f.seek(h["abs_data_offset"])
-                        blob = f.read(h["length"])
-                    hh = dict(h, data_offset=0)
-                    refs = bref.value if bref is not None else None
-                    for cols in CC.decode_container_columns(
-                        blob, hh, ref_names, refs, rg_names=rg_names,
-                        columns=decode_cols,
-                    ):
-                        n = len(cols["flag"])
-                        arrays = [pa.array([sample] * n, s)] + [
-                            pa.array(cols[c], i32 if c in _INT else s)
-                            for c in keep
-                        ]
-                        if keep_tags:
-                            tag_items = (
-                                [list(d.items()) for d in cols["tags"]]
-                                if with_tags
-                                else [[]] * n
-                            )
-                            arrays.append(pa.array(tag_items, mtype))
-                        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        refs = bref.value if bref is not None else None
+        for tid in units:
+            p, sample, h = tasks[tid]
+            ref_names, rg_names = meta_by_path[p]
+            blob, hh = _read_container(p, h)
+            for cols in CC.decode_container_columns(
+                blob, hh, ref_names, refs, rg_names=rg_names,
+                columns=decode_cols,
+            ):
+                n = len(cols["flag"])
+                arrays = [pa.array([sample] * n, s)] + [
+                    pa.array(cols[c], i32 if c in _INT else s) for c in keep
+                ]
+                if keep_tags:
+                    tag_items = (
+                        [list(d.items()) for d in cols["tags"]]
+                        if with_tags
+                        else [[]] * n
+                    )
+                    arrays.append(pa.array(tag_items, mtype))
+                yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    if not tasks:
-        df = spark.createDataFrame([], schema_str)
-    else:
-        df = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
-            gen_batches, schema_str
-        )
+    df = _run_tasks(spark, groups, decode, schema_str)
     if S.CONTIG in keep:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     if contig is not None:
@@ -1046,10 +1012,6 @@ def read_cram_coverage_events(
         spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
     )
 
-    schema_str = "contig string, chunk long, pos int, delta int"
-    if not tasks:
-        return spark.createDataFrame([], schema_str)
-
     groups = _pack_tasks(
         [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
     )
@@ -1058,7 +1020,7 @@ def read_cram_coverage_events(
     q_start = start if start is not None else 1
     q_end = end if end is not None else 2**62
 
-    def gen_batches(batches):
+    def decode(units):
         import numpy as np
         import pyarrow as pa
 
@@ -1070,111 +1032,84 @@ def read_cram_coverage_events(
         k1 = ((1 << 31) // chunk_size + 2) * k2
         decode_cols = {"flag", "contig", "pos_start", "mapq", "__cig_raw"}
         ref_take_by_path: dict[str, pa.Array] = {}
-        for b in batches:
-            for gid in b.column(0).to_pylist():
-                for tid in groups[gid]:
-                    p, _sample, h = tasks[tid]
-                    ref_names = meta_by_path[p][0]
-                    take = ref_take_by_path.get(p)
-                    if take is None:
-                        take = pa.array(
-                            [ccp(nm) for nm in ref_names], type=pa.string()
-                        )
-                        ref_take_by_path[p] = take
-                    with open(p, "rb") as f:
-                        f.seek(h["abs_data_offset"])
-                        blob = f.read(h["length"])
-                    hh = dict(h, data_offset=0)
-                    refs = bref.value if bref is not None else None
-                    for cols in CC.decode_container_columns(
-                        blob, hh, ref_names, refs, columns=decode_cols,
-                    ):
-                        raw = cols.get("__cig_raw")
-                        if raw is not None:
-                            buf, co = raw
-                            co = np.asarray(co, dtype=np.int64)
-                            ap = np.asarray(cols["__ap"], dtype=np.int64)
-                            bf = np.asarray(cols["__bf"], dtype=np.int64)
-                            mq = np.asarray(cols["__mapq"], dtype=np.int64)
-                            rid = np.full(
-                                len(ap), int(cols["__s_ref"]), dtype=np.int64
-                            )
-                        else:
-                            # per-record fallback slice (multi-ref, exotic
-                            # layouts): rebuild the text buffer from the
-                            # rendered cigar strings
-                            cigs = [c or "*" for c in cols["cigar"]]
-                            buf = np.frombuffer(
-                                "".join(cigs).encode("ascii"), dtype=np.uint8
-                            )
-                            co = np.zeros(len(cigs) + 1, dtype=np.int64)
-                            np.cumsum(
-                                [len(c) for c in cigs], out=co[1:]
-                            )
-                            ap = np.asarray(cols["pos_start"], dtype=np.int64)
-                            bf = np.asarray(cols["flag"], dtype=np.int64)
-                            mq = np.asarray(
-                                [m if m is not None else 0 for m in cols["mapq"]],
-                                dtype=np.int64,
-                            )
-                            name_to_rid = {
-                                nm: i for i, nm in enumerate(ref_names)
-                            }
-                            rid = np.asarray(
-                                [
-                                    name_to_rid.get(cg, -1)
-                                    if cg is not None
-                                    else -1
-                                    for cg in cols["contig"]
-                                ],
-                                dtype=np.int64,
-                            )
-                        cig_u32, op_cum = BV.cigar_text_to_ops(buf, co)
-                        keep = rid >= 0
-                        if flag_mask:
-                            keep &= (bf & flag_mask) == 0
-                        if min_mapq:
-                            keep &= mq >= min_mapq
-                        if want_contig is not None:
-                            names_ok = np.asarray(
-                                [
-                                    ccp(nm) == want_contig
-                                    for nm in ref_names
-                                ]
-                            )
-                            keep &= np.where(rid >= 0, names_ok[np.maximum(rid, 0)], False)
-                            # per-record ref-consumed length via the
-                            # cumulative-difference trick (robust to
-                            # zero-op records, unlike reduceat)
-                            ref_adv = (
-                                (cig_u32 >> 4).astype(np.int64)
-                                * BV._REF_CONSUME[cig_u32 & 0xF]
-                            )
-                            cum = np.zeros(len(ref_adv) + 1, dtype=np.int64)
-                            np.cumsum(ref_adv, out=cum[1:])
-                            rec_len = cum[op_cum[1:]] - cum[op_cum[:-1]]
-                            rec_end = ap + np.maximum(rec_len - 1, 0)
-                            keep &= (ap <= q_end) & (rec_end >= q_start)
-                        # _blocks_raw expects BAM's 0-based pos; CRAM's
-                        # pos_start is 1-based
-                        bs, be, rec_of, _ = BV._blocks_raw(
-                            cig_u32, op_cum, ap - 1
-                        )
-                        if not len(bs):
-                            continue
-                        bmask = keep[rec_of]
-                        if not bmask.all():
-                            bs, be, rec_of = bs[bmask], be[bmask], rec_of[bmask]
-                        if not len(bs):
-                            continue
-                        batch = BV.events_from_blocks(
-                            bs, be, rid[rec_of], take, chunk_size, k1, k2
-                        )
-                        if batch is not None:
-                            yield batch
+        refs = bref.value if bref is not None else None
+        for tid in units:
+            p, _sample, h = tasks[tid]
+            ref_names = meta_by_path[p][0]
+            take = ref_take_by_path.get(p)
+            if take is None:
+                take = pa.array([ccp(nm) for nm in ref_names], type=pa.string())
+                ref_take_by_path[p] = take
+            blob, hh = _read_container(p, h)
+            for cols in CC.decode_container_columns(
+                blob, hh, ref_names, refs, columns=decode_cols,
+            ):
+                raw = cols.get("__cig_raw")
+                if raw is not None:
+                    buf, co = raw
+                    co = np.asarray(co, dtype=np.int64)
+                    ap = np.asarray(cols["__ap"], dtype=np.int64)
+                    bf = np.asarray(cols["__bf"], dtype=np.int64)
+                    mq = np.asarray(cols["__mapq"], dtype=np.int64)
+                    rid = np.full(len(ap), int(cols["__s_ref"]), dtype=np.int64)
+                else:
+                    # per-record fallback slice (multi-ref, exotic layouts):
+                    # rebuild the text buffer from the rendered cigar strings
+                    cigs = [c or "*" for c in cols["cigar"]]
+                    buf = np.frombuffer("".join(cigs).encode("ascii"), dtype=np.uint8)
+                    co = np.zeros(len(cigs) + 1, dtype=np.int64)
+                    np.cumsum([len(c) for c in cigs], out=co[1:])
+                    ap = np.asarray(cols["pos_start"], dtype=np.int64)
+                    bf = np.asarray(cols["flag"], dtype=np.int64)
+                    mq = np.asarray(
+                        [m if m is not None else 0 for m in cols["mapq"]],
+                        dtype=np.int64,
+                    )
+                    name_to_rid = {nm: i for i, nm in enumerate(ref_names)}
+                    rid = np.asarray(
+                        [name_to_rid.get(cg, -1) if cg is not None else -1
+                         for cg in cols["contig"]],
+                        dtype=np.int64,
+                    )
+                cig_u32, op_cum = BV.cigar_text_to_ops(buf, co)
+                keep = rid >= 0
+                if flag_mask:
+                    keep &= (bf & flag_mask) == 0
+                if min_mapq:
+                    keep &= mq >= min_mapq
+                if want_contig is not None:
+                    names_ok = np.asarray([ccp(nm) == want_contig for nm in ref_names])
+                    keep &= np.where(rid >= 0, names_ok[np.maximum(rid, 0)], False)
+                    # per-record ref-consumed length via the cumulative-
+                    # difference trick (robust to zero-op records, unlike
+                    # reduceat)
+                    ref_adv = (
+                        (cig_u32 >> 4).astype(np.int64)
+                        * BV._REF_CONSUME[cig_u32 & 0xF]
+                    )
+                    cum = np.zeros(len(ref_adv) + 1, dtype=np.int64)
+                    np.cumsum(ref_adv, out=cum[1:])
+                    rec_len = cum[op_cum[1:]] - cum[op_cum[:-1]]
+                    rec_end = ap + np.maximum(rec_len - 1, 0)
+                    keep &= (ap <= q_end) & (rec_end >= q_start)
+                # _blocks_raw expects BAM's 0-based pos; CRAM's pos_start
+                # is 1-based
+                bs, be, rec_of, _ = BV._blocks_raw(cig_u32, op_cum, ap - 1)
+                if not len(bs):
+                    continue
+                bmask = keep[rec_of]
+                if not bmask.all():
+                    bs, be, rec_of = bs[bmask], be[bmask], rec_of[bmask]
+                if not len(bs):
+                    continue
+                batch = BV.events_from_blocks(
+                    bs, be, rid[rec_of], take, chunk_size, k1, k2
+                )
+                if batch is not None:
+                    yield batch
 
-    return spark.range(0, len(groups), 1, len(groups)).mapInArrow(
-        gen_batches, schema_str
+    return _run_tasks(
+        spark, groups, decode, "contig string, chunk long, pos int, delta int"
     )
 
 

@@ -55,21 +55,31 @@ class BgzfReader:
         self._raw = raw
         self._buf = b""
         self._pos = 0
-        raw.seek(voffset >> 16)
+        self._coff = voffset >> 16  # compressed offset of the next block
+        self._name = getattr(raw, "name", "stream")
+        raw.seek(self._coff)
         skip = voffset & 0xFFFF
         if skip:
             self._fill()
             self._pos = skip
 
     def _fill(self) -> bool:
+        """Inflate the next block; False at the end of the file.  A block
+        cut short (header or body) raises, naming its compressed offset."""
+        at = self._coff
+        where = f"compressed offset {at} of {self._name}"
         header = self._raw.read(18)
-        if len(header) < 18:
+        if not header:
             return False
+        if len(header) < 18:
+            raise ValueError(
+                f"truncated BGZF block at {where}: {len(header)} of 18 header bytes"
+            )
         if header[:2] != b"\x1f\x8b":
-            raise ValueError("not a BGZF stream (bad gzip magic)")
+            raise ValueError(f"not a BGZF stream (bad gzip magic at {where})")
         xlen = struct.unpack_from("<H", header, 10)[0]
         if xlen < 6:
-            raise ValueError("BGZF block missing BC/BSIZE subfield")
+            raise ValueError(f"BGZF block at {where} missing BC/BSIZE subfield")
         extra = header[12:18] + (self._raw.read(xlen - 6) if xlen > 6 else b"")
         # find the BC subfield holding BSIZE (total block size - 1)
         bsize = None
@@ -81,13 +91,24 @@ class BgzfReader:
                 break
             off += 4 + slen
         if bsize is None:
-            raise ValueError("BGZF block missing BC/BSIZE subfield")
-        rest = self._raw.read(bsize + 1 - 12 - xlen)
+            raise ValueError(f"BGZF block at {where} missing BC/BSIZE subfield")
+        want = bsize + 1 - 12 - xlen
+        rest = self._raw.read(want)
+        if len(rest) < want:
+            raise ValueError(
+                f"truncated BGZF block at {where}: "
+                f"{12 + len(extra) + len(rest)} of BSIZE+1 = {bsize + 1} bytes"
+            )
         block = header[:12] + extra + rest
         # libdeflate when the system has it (htslib's own accelerator,
-        # ~2.3x zlib here), zlib otherwise — identical bytes either way
-        self._buf = _inflate.gzip_decompress(block)
+        # ~2.3x zlib here), zlib otherwise — identical bytes either way;
+        # both check the member's CRC32 and ISIZE
+        try:
+            self._buf = _inflate.gzip_decompress(block)
+        except zlib.error as exc:
+            raise ValueError(f"corrupt BGZF block at {where}: {exc}") from None
         self._pos = 0
+        self._coff = at + bsize + 1
         return True
 
     def read(self, n: int) -> bytes:
@@ -250,6 +271,10 @@ def parse_records(
     ``unmapped_only`` keeps only placement-less records (ref_id < 0 — the
     trailing no-coordinate region of a sorted BAM); mapped records are
     skipped without decoding.
+
+    This scalar decoder is the tests' reference: the readers decode
+    through ``bamvec``, and tests pin that decoder record-for-record to
+    this one.  It stops silently at a truncated trailing record.
     """
     while True:
         head = stream.read(4)

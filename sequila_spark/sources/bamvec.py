@@ -1,11 +1,11 @@
 """Vectorized BAM record decode — NumPy batch parse -> Arrow RecordBatches.
 
-``bamcodec.parse_records`` decodes one record per Python iteration (struct
-unpack + per-field string assembly) and feeds Spark through pickled row
-tuples — measured ~18k reads/s/core end-to-end on a real 1 GB BAM set,
-~21x off the reference's htsjdk path (BASELINE.md benchmarking.rst:535).
-This module removes both Python-per-record costs while keeping
-``bamcodec`` as the scalar reference implementation (and the writer side):
+This is the one BAM decoder of the product.  ``bamcodec.parse_records``
+(one record per Python iteration: struct unpack + per-field string
+assembly, ~18k reads/s/core end-to-end on a real 1 GB BAM set, ~21x off
+the reference's htsjdk path, BASELINE.md benchmarking.rst:535) stays in
+``bamcodec`` only as the scalar reference the tests compare against.
+This module removes both Python-per-record costs:
 
  - the fixed 32-byte record headers of a whole decompressed batch are
    parsed in ONE NumPy structured-dtype view (no per-record ``struct``),
@@ -17,16 +17,28 @@ This module removes both Python-per-record costs while keeping
  - batches flow to the JVM through ``mapInArrow`` (columnar Arrow IPC)
    instead of pickled Row tuples.
 
+Both consumers — the row decoder (``iter_span_batches``) and the fused
+coverage-events decoder (``iter_span_cov_events``) — sit on one
+record-framing loop, ``_span_records``: it streams a span, carries a split
+record over to the next batch, scans record offsets, views the headers,
+applies the owner-by-start region cut and checks every record's field
+extents.  A span whose stream ends inside a record raises ``ValueError``
+naming the file and the span instead of returning fewer rows.
+
 Only the optional-tag decode (``with_tags=True``) stays per-record: tag
 streams are variable-typed (hts-specs SAM v1.6 §4.2.4) and reuse
-``bamcodec._decode_tags`` so both paths render identically.
+``bamcodec._decode_tags``.
 
-Semantics parity with ``parse_records`` is pinned by
-``tests/test_bam_vec.py`` (multiset equality on the reference's own BAM
-fixtures) and by the unchanged samtools byte-exact pileup golden.
+Parity with ``parse_records`` is pinned by ``tests/test_bam_vec.py``
+(record-for-record equality on generated BAMs and, where present, the
+reference's own fixtures) and by the unchanged samtools byte-exact pileup
+golden.
 """
 
 from __future__ import annotations
+
+import struct
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -144,7 +156,7 @@ def _cigar_column(
     Decimal rendering is vectorized: per-op digit counts, then one scatter
     per digit position (<=10 passes over shrinking masks) into a flat byte
     buffer, op letters via table lookup.  Empty cigars render as '*'
-    (parse_records parity)."""
+    (SAM's missing-cigar value)."""
     nums = (cig_u32 >> 4).astype(np.int64)
     ops = (cig_u32 & 0xF).astype(np.int64)
     ref_len = _segment_sums(nums * _REF_CONSUME[ops], op_cum)
@@ -291,9 +303,27 @@ _ALL_COLS = (
 )
 
 
+class _Records(NamedTuple):
+    """One batch of complete records a span owns, after the region cut and
+    the field-extent check: the decompressed bytes, the header view and
+    each record's field extents (byte offsets into ``data``)."""
+
+    data: bytes
+    u8: np.ndarray
+    h: np.ndarray  # _HDR_DT view, one row per record
+    offs: np.ndarray  # offset of each record's block_size field
+    rid: np.ndarray
+    pos0: np.ndarray
+    l_qname: np.ndarray
+    n_cigar: np.ndarray
+    l_seq: np.ndarray
+    cg_off: np.ndarray  # first cigar op
+    tg_off: np.ndarray  # first tag byte
+    rec_end: np.ndarray
+
+
 def _decode_batch(
-    data: bytes,
-    offs: np.ndarray,
+    recs: _Records,
     ref_take: pa.Array,
     nref: int,
     sample: str,
@@ -301,69 +331,24 @@ def _decode_batch(
     with_tags: bool,
     with_ordinal: bool,
     ord_base: int,
-    region: tuple | None,
-    unmapped_only: bool,
     want: frozenset | None = None,
     with_blocks: bool = False,
-) -> tuple[pa.RecordBatch | None, bool]:
-    """Decode the complete records at ``offs`` inside ``data`` into one
-    Arrow RecordBatch (columns in canonical read_bam_native order, minus
-    nothing).  Returns (batch or None, finished) where finished=True means
-    the sorted-scan stop condition fired (region scans only)."""
-    u8 = np.frombuffer(data, dtype=np.uint8)
-    hdr = u8[offs[:, None] + np.arange(36)]
-    h = hdr.view(_HDR_DT).ravel()
-    rid = h["rid"].astype(np.int64)
-    pos0 = h["pos"].astype(np.int64)
-
-    finished = False
-    if region is not None:
-        ref_id, start0, end0 = region
-        bad = (rid > ref_id) | (rid < 0)
-        if end0 is not None:
-            bad |= (rid == ref_id) & (pos0 >= end0)
-        if bad.any():
-            cut = int(np.argmax(bad))
-            finished = True
-            h, offs, rid, pos0 = h[:cut], offs[:cut], rid[:cut], pos0[:cut]
-        keep = (rid == ref_id) & (pos0 >= start0)
-    elif unmapped_only:
-        keep = rid < 0
-    else:
-        keep = None
-    if keep is not None and not keep.all():
-        h, offs, rid, pos0 = h[keep], offs[keep], rid[keep], pos0[keep]
+) -> pa.RecordBatch:
+    """Decode one batch of records into an Arrow RecordBatch, columns in
+    canonical read_bam_native order, pruned to ``want``."""
+    data, u8, h, rid, pos0 = recs.data, recs.u8, recs.h, recs.rid, recs.pos0
+    l_qname, n_cigar, l_seq = recs.l_qname, recs.n_cigar, recs.l_seq
     n = len(h)
-    if n == 0:
-        return None, finished
-
     if want is None:
         want = frozenset(_ALL_COLS)
 
-    l_qname = h["l_qname"].astype(np.int64)
-    n_cigar = h["n_cigar"].astype(np.int64)
-    l_seq = h["l_seq"].astype(np.int64)
-    qn_off = offs + 36
-    cg_off = qn_off + l_qname
+    qn_off = recs.offs + 36
+    cg_off = recs.cg_off
     cg_bytes = 4 * n_cigar
     sq_off = cg_off + cg_bytes
     sq_bytes = (l_seq + 1) // 2
     ql_off = sq_off + sq_bytes
-    tg_off = ql_off + l_seq
-    rec_end = offs + 4 + h["bs"].astype(np.int64)
-    # Field-extent validation BEFORE any gather: the offset scan only
-    # checks block_size, so corrupt inner fields (l_qname=0, negative
-    # l_seq, n_cigar/l_seq overstating the record) would otherwise drive
-    # the C memcpy gather out of bounds (worker crash / foreign-memory
-    # bytes in Arrow buffers) where the scalar parser raises cleanly.
-    bad = (l_qname < 1) | (l_seq < 0) | (tg_off > rec_end)
-    if bad.any():
-        j = int(np.argmax(bad))
-        raise ValueError(
-            f"corrupt BAM record fields at offset {int(offs[j])}: "
-            f"l_qname={int(l_qname[j])} n_cigar={int(n_cigar[j])} "
-            f"l_seq={int(l_seq[j])} exceed block_size"
-        )
+    tg_off, rec_end = recs.tg_off, recs.rec_end
 
     out: dict[str, pa.Array] = {}
 
@@ -496,7 +481,7 @@ def _decode_batch(
     if with_ordinal:
         cols.append(pa.array(ord_base + np.arange(n, dtype=np.int64)))
         names.append("__ord")
-    return pa.RecordBatch.from_arrays(cols, names), finished
+    return pa.RecordBatch.from_arrays(cols, names)
 
 
 def _open_span(fh, span):
@@ -524,6 +509,115 @@ def _open_span(fh, span):
     return st, region, unmapped_only
 
 
+_I4 = struct.Struct("<i").unpack_from
+
+
+def _scan_offsets(data: bytes) -> tuple[np.ndarray, int]:
+    """(offsets of the complete records in ``data``, where the partial
+    record after them starts), by the C kernel or, when it did not build,
+    this loop.  A block_size below the 32-byte fixed section raises: <= -4
+    would stall the scan on one offset, and anything below 32 would view
+    garbage as a header."""
+    found = CK.scan_offsets(np.frombuffer(data, dtype=np.uint8), len(data))
+    if found is not None:
+        return found
+    total = len(data)
+    offs = []
+    off = 0
+    while off + 4 <= total:
+        (bs,) = _I4(data, off)
+        if bs < 32:
+            raise ValueError(
+                f"corrupt BAM record: block_size at offset {off} below the "
+                "32-byte fixed section"
+            )
+        end = off + 4 + bs
+        if end > total:
+            break
+        offs.append(off)
+        off = end
+    return np.asarray(offs, dtype=np.int64), off
+
+
+def _span_records(path: str, span, batch_bytes: int):
+    """The one record-framing loop of both span decoders: yield a _Records
+    for each ~``batch_bytes`` of decompressed stream that holds records the
+    span owns.
+
+    A record split across the batch boundary carries over to the next
+    batch.  A region span keeps records by owner-by-start and stops at the
+    first record past its region (coordinate-sorted input); the unmapped
+    span keeps ref_id < 0 records.  Every kept record's field extents are
+    checked here, before any consumer gathers: the offset scan only checks
+    block_size, and corrupt inner fields (l_qname 0, negative l_seq,
+    n_cigar/l_seq overstating the record) would drive the C memcpy gather
+    out of bounds.  A stream that ends inside a record raises."""
+    with open(path, "rb") as fh:
+        st, region, unmapped_only = _open_span(fh, span)
+        carry = b""
+        while True:
+            chunk = st.read(batch_bytes)
+            if not chunk:
+                if carry:
+                    raise ValueError(
+                        f"truncated BAM {path}: span {span} ends inside a "
+                        f"record ({len(carry)} bytes left over)"
+                    )
+                return
+            data = carry + chunk if carry else chunk
+            try:
+                offs, end = _scan_offsets(data)
+            except ValueError as exc:
+                raise ValueError(f"{exc} (file {path})") from None
+            carry = data[end:]
+            if not len(offs):
+                continue
+            u8 = np.frombuffer(data, dtype=np.uint8)
+            h = u8[offs[:, None] + np.arange(36)].view(_HDR_DT).ravel()
+            rid = h["rid"].astype(np.int64)
+            pos0 = h["pos"].astype(np.int64)
+
+            finished = False
+            keep = None
+            if region is not None:
+                ref_id, start0, end0 = region
+                past = (rid > ref_id) | (rid < 0)
+                if end0 is not None:
+                    past |= (rid == ref_id) & (pos0 >= end0)
+                if past.any():
+                    cut = int(np.argmax(past))
+                    finished = True
+                    h, offs, rid, pos0 = h[:cut], offs[:cut], rid[:cut], pos0[:cut]
+                keep = (rid == ref_id) & (pos0 >= start0)
+            elif unmapped_only:
+                keep = rid < 0
+            if keep is not None and not keep.all():
+                h, offs, rid, pos0 = h[keep], offs[keep], rid[keep], pos0[keep]
+
+            if len(h):
+                l_qname = h["l_qname"].astype(np.int64)
+                n_cigar = h["n_cigar"].astype(np.int64)
+                l_seq = h["l_seq"].astype(np.int64)
+                cg_off = offs + 36 + l_qname
+                tg_off = cg_off + 4 * n_cigar + (l_seq + 1) // 2 + l_seq
+                rec_end = offs + 4 + h["bs"].astype(np.int64)
+                bad = (l_qname < 1) | (l_seq < 0) | (tg_off > rec_end)
+                if bad.any():
+                    j = int(np.argmax(bad))
+                    raise ValueError(
+                        f"corrupt BAM record fields at offset {int(offs[j])} "
+                        f"of span {span} in {path}: l_qname={int(l_qname[j])} "
+                        f"n_cigar={int(n_cigar[j])} l_seq={int(l_seq[j])} "
+                        "exceed block_size"
+                    )
+                yield _Records(
+                    data, u8, h, offs, rid, pos0, l_qname, n_cigar, l_seq,
+                    cg_off, tg_off, rec_end,
+                )
+            if finished:
+                return
+
+
 def iter_span_batches(
     path: str,
     refs: list[tuple[str, int]],
@@ -542,8 +636,8 @@ def iter_span_batches(
     ``('__unmapped__', voff)`` = trailing no-coordinate region,
     ``(rid, start0, end0, voff)`` = owner-by-start genomic chunk.
 
-    Streams ~``batch_bytes`` of decompressed records per batch; a record
-    split across the boundary carries over to the next batch.
+    Streams ~``batch_bytes`` of decompressed records per batch through
+    _span_records.
 
     ``columns`` prunes the decode itself (htsjdk-style lazy fields: a
     skipped column's bytes are never rendered); ``with_blocks`` appends a
@@ -553,78 +647,21 @@ def iter_span_batches(
     ref_take = pa.array(names + [None], type=pa.string())
     nref = len(names)
     want = frozenset(columns) if columns is not None else None
-
-    with open(path, "rb") as fh:
-        st, region, unmapped_only = _open_span(fh, span)
-
-        import struct as _struct
-
-        carry = b""
-        n_out = 0
-        unpack_i4 = _struct.Struct("<i").unpack_from
-        use_ck = CK.available()
-        while True:
-            chunk = st.read(batch_bytes)
-            data = carry + chunk if carry else chunk
-            if not data:
-                return
-            total = len(data)
-            if use_ck:
-                # C kernel: same chain, same corrupt-block guard, ~300x
-                # the Python loop (the scan was the dominant per-record
-                # Python cost left in this decoder)
-                try:
-                    offs_arr, off = CK.scan_offsets(
-                        np.frombuffer(data, dtype=np.uint8), total
-                    )
-                except ValueError as exc:
-                    raise ValueError(f"{exc} (file {path})") from None
-            else:
-                limit = total - 4
-                offs = []
-                off = 0
-                append = offs.append
-                while off <= limit:
-                    bs = unpack_i4(data, off)[0]
-                    if bs < 32:
-                        # corrupt block_size: <= -4 would stall the scan on
-                        # the same offset forever, and anything below the
-                        # 32-byte fixed section would view garbage as a
-                        # header; mirror the scalar parser's failure instead
-                        # (parse_records raises struct.error on same input)
-                        raise ValueError(
-                            f"corrupt BAM record at {path}: block_size={bs}"
-                        )
-                    end = off + 4 + bs
-                    if end > total:
-                        break
-                    append(off)
-                    off = end
-                offs_arr = np.asarray(offs, dtype=np.int64)
-            carry = data[off:]
-            if len(offs_arr):
-                batch, finished = _decode_batch(
-                    data,
-                    offs_arr,
-                    ref_take,
-                    nref,
-                    sample,
-                    with_tags=with_tags,
-                    with_ordinal=with_ordinal,
-                    ord_base=(span_idx << 32) | n_out,
-                    region=region,
-                    unmapped_only=unmapped_only,
-                    want=want,
-                    with_blocks=with_blocks,
-                )
-                if batch is not None:
-                    n_out += batch.num_rows
-                    yield batch
-                if finished:
-                    return
-            if not chunk:
-                # truncated trailing record: parse_records parity (silent stop)
-                return
+    n_out = 0
+    for recs in _span_records(path, span, batch_bytes):
+        batch = _decode_batch(
+            recs,
+            ref_take,
+            nref,
+            sample,
+            with_tags=with_tags,
+            with_ordinal=with_ordinal,
+            ord_base=(span_idx << 32) | n_out,
+            want=want,
+            with_blocks=with_blocks,
+        )
+        n_out += batch.num_rows
+        yield batch
 
 
 def iter_span_cov_events(
@@ -640,9 +677,9 @@ def iter_span_cov_events(
     """Fused decode -> CLIPPED coverage events, aggregated per batch.
 
     For depth-of-coverage the per-read columns never need to leave the
-    decode task: this generator walks the same span stream as
-    iter_span_batches, extracts the M/=/X aligned blocks vectorized
-    (_blocks_raw), CLIPS them at ``chunk_size`` boundaries (the
+    decode task: this generator frames the same span stream as
+    iter_span_batches (_span_records), extracts the M/=/X aligned blocks
+    vectorized (_blocks_raw), CLIPS them at ``chunk_size`` boundaries (the
     self-contained-chunk contract of operators/coverage), and aggregates
     the +-1 deltas per (ref, chunk, pos) with one radix-style composite
     sort per batch.  What crosses the Arrow boundary is the batch's
@@ -663,103 +700,33 @@ def iter_span_cov_events(
         chunk_size + 2
     ):
         raise ValueError(f"chunk_size {chunk_size} out of range")
+    if span is not None and span[0] == "__unmapped__":
+        return  # unmapped records have no aligned blocks
     names = [nm for nm, _ in refs]
     ref_take = pa.array(names, type=pa.string())
     k2 = chunk_size + 2  # local position in [1, chunk_size+1]
     k1 = ((1 << 31) // chunk_size + 2) * k2
-
-    import struct as _struct
-
-    unpack_i4 = _struct.Struct("<i").unpack_from
-    use_ck = CK.available()
-    with open(path, "rb") as fh:
-        st, region, unmapped_only = _open_span(fh, span)
-        if unmapped_only:
-            return  # unmapped records have no aligned blocks
-        carry = b""
-        while True:
-            chunk = st.read(batch_bytes)
-            data = carry + chunk if carry else chunk
-            if not data:
-                return
-            total = len(data)
-            if use_ck:
-                try:
-                    offs, off = CK.scan_offsets(
-                        np.frombuffer(data, dtype=np.uint8), total
-                    )
-                except ValueError as exc:
-                    raise ValueError(f"{exc} (file {path})") from None
-            else:
-                limit = total - 4
-                lst = []
-                off = 0
-                append = lst.append
-                while off <= limit:
-                    bs_ = unpack_i4(data, off)[0]
-                    if bs_ < 32:
-                        raise ValueError(
-                            f"corrupt BAM record at {path}: block_size={bs_}"
-                        )
-                    end = off + 4 + bs_
-                    if end > total:
-                        break
-                    append(off)
-                    off = end
-                offs = np.asarray(lst, dtype=np.int64)
-            carry = data[off:]
-            finished = False
-            if len(offs):
-                u8 = np.frombuffer(data, dtype=np.uint8)
-                hdr = u8[offs[:, None] + np.arange(36)]
-                h = hdr.view(_HDR_DT).ravel()
-                rid = h["rid"].astype(np.int64)
-                pos0 = h["pos"].astype(np.int64)
-                if region is not None:
-                    ref_id, start0, end0 = region
-                    bad = (rid > ref_id) | (rid < 0)
-                    if end0 is not None:
-                        bad |= (rid == ref_id) & (pos0 >= end0)
-                    if bad.any():
-                        cut = int(np.argmax(bad))
-                        finished = True
-                        h, offs, rid, pos0 = h[:cut], offs[:cut], rid[:cut], pos0[:cut]
-                    keep = (rid == ref_id) & (pos0 >= start0)
-                else:
-                    keep = rid >= 0
-                if flag_mask:
-                    keep = keep & ((h["flag"].astype(np.int64) & flag_mask) == 0)
-                if min_mapq:
-                    keep = keep & (h["mapq"].astype(np.int64) >= min_mapq)
-                if not keep.all():
-                    h, offs, rid, pos0 = h[keep], offs[keep], rid[keep], pos0[keep]
-                if len(h):
-                    batch = _cov_event_batch(
-                        u8, h, offs, rid, pos0, ref_take, chunk_size, k1, k2
-                    )
-                    if batch is not None:
-                        yield batch
-            if finished or not chunk:
-                return
+    for recs in _span_records(path, span, batch_bytes):
+        keep = recs.rid >= 0
+        if flag_mask:
+            keep &= (recs.h["flag"].astype(np.int64) & flag_mask) == 0
+        if min_mapq:
+            keep &= recs.h["mapq"].astype(np.int64) >= min_mapq
+        if keep.any():
+            batch = _cov_event_batch(recs, keep, ref_take, chunk_size, k1, k2)
+            if batch is not None:
+                yield batch
 
 
 def _cov_event_batch(
-    u8, h, offs, rid, pos0, ref_take, chunk_size, k1, k2
+    recs: _Records, keep: np.ndarray, ref_take, chunk_size, k1, k2
 ) -> pa.RecordBatch | None:
-    """One batch's aggregated clipped coverage events (see
-    iter_span_cov_events)."""
-    n_cigar = h["n_cigar"].astype(np.int64)
-    l_qname = h["l_qname"].astype(np.int64)
-    cg_off = offs + 36 + l_qname
-    rec_end = offs + 4 + h["bs"].astype(np.int64)
-    bad = (l_qname < 1) | (cg_off + 4 * n_cigar > rec_end)
-    if bad.any():
-        j = int(np.argmax(bad))
-        raise ValueError(
-            f"corrupt BAM record fields at offset {int(offs[j])}: cigar "
-            "extent exceeds block_size"
-        )
-    cg_vals, cg_cum = _ragged_take(u8, cg_off, 4 * n_cigar)
+    """One batch's aggregated clipped coverage events from its ``keep``
+    records (see iter_span_cov_events)."""
+    cg_off, n_cigar, rid, pos0 = recs.cg_off, recs.n_cigar, recs.rid, recs.pos0
+    if not keep.all():
+        cg_off, n_cigar, rid, pos0 = cg_off[keep], n_cigar[keep], rid[keep], pos0[keep]
+    cg_vals, cg_cum = _ragged_take(recs.u8, cg_off, 4 * n_cigar)
     cig_u32 = np.ascontiguousarray(cg_vals).view("<u4")
     bs, be, rec_of, _ = _blocks_raw(cig_u32, cg_cum // 4, pos0)
     if not len(bs):

@@ -1,10 +1,13 @@
 """Vectorized BAM decode (sources/bamvec) parity with the scalar codec.
 
-The scalar ``bamcodec.parse_records`` is the pinned semantic reference
+The scalar ``bamcodec.parse_records`` is the tests' reference decoder
 (itself pinned to the reference project's fixtures in test_bam_native);
 the NumPy->Arrow batch decoder must reproduce it record-for-record —
 including tags rendering, null seq/qual, '*' cigars, region ownership and
-the trailing no-coordinate span.
+the trailing no-coordinate span.  The parity tests run on the generated
+cohort's indexed ``S0.bam`` everywhere, and on the reference project's
+BAMs where they exist.  Damaged input (a cut file, corrupt record fields)
+must raise through both span decoders and the Spark readers.
 """
 
 import os
@@ -19,6 +22,18 @@ MDBAM = (
     "/root/reference/src/test/resources/multichrom/mdbam/"
     "NA12878.multichrom.md.bam"
 )
+GEN_S0 = "gen_cohort/S0.bam"  # resolved by _bam_path to the fixture's file
+
+
+def _inputs(*paths):
+    """The generated S0.bam, then each reference BAM that exists."""
+    return [GEN_S0] + [p for p in paths if os.path.exists(p)]
+
+
+def _bam_path(request, path):
+    if path == GEN_S0:
+        return os.path.join(request.getfixturevalue("gen_cohort")[0], "S0.bam")
+    return path
 
 
 def _scalar(path, **kw):
@@ -37,28 +52,28 @@ def _vec(path, refs, span=None, **kw):
     return rows
 
 
-@pytest.mark.parametrize(
-    "path", [p for p in (SLICE, MDBAM) if os.path.exists(p)]
-)
-def test_whole_file_exact(path):
+@pytest.mark.parametrize("path", _inputs(SLICE, MDBAM))
+def test_whole_file_exact(request, path):
     """Every field of every record identical, in order — tags included."""
+    path = _bam_path(request, path)
     refs, recs = _scalar(path)
     assert recs, "fixture decoded empty"
     assert _vec(path, refs) == [("S",) + r for r in recs]
 
 
-@pytest.mark.skipif(not os.path.exists(SLICE), reason="no reference BAM")
-def test_region_spans_ownership():
+@pytest.mark.parametrize("path", _inputs(SLICE))
+def test_region_spans_ownership(request, path):
     """Chunked region decode reproduces the whole-file mapped multiset
     (owner-by-start), exactly like the scalar span scan."""
     from collections import Counter
 
-    refs, recs = _scalar(SLICE)
+    path = _bam_path(request, path)
+    refs, recs = _scalar(path)
     whole = Counter((r[0], r[1], r[3]) for r in recs if r[2] is not None)
-    linear = B.read_bai_linear(SLICE + ".bai")
+    linear = B.read_bai_linear(path + ".bai")
     got = Counter()
     for span in B.plan_spans(refs, linear, 7_000):
-        for r in _vec(SLICE, refs, span=span):
+        for r in _vec(path, refs, span=span):
             got[(r[1], r[2], r[4])] += 1
     assert got == whole
 
@@ -97,12 +112,13 @@ def test_synthetic_edge_records(tmp_path):
     assert _vec(path, srefs) == [("S",) + r for r in scalar]
 
 
-@pytest.mark.skipif(not os.path.exists(SLICE), reason="no reference BAM")
-def test_batch_boundary_carry():
+@pytest.mark.parametrize("path", _inputs(SLICE))
+def test_batch_boundary_carry(request, path):
     """A record split across the streaming batch boundary must carry over
     intact — tiny batch_bytes forces a split inside nearly every record."""
-    refs, recs = _scalar(SLICE)
-    got = _vec(SLICE, refs, batch_bytes=257)
+    path = _bam_path(request, path)
+    refs, recs = _scalar(path)
+    got = _vec(path, refs, batch_bytes=257)
     assert got == [("S",) + r for r in recs]
 
 
@@ -192,28 +208,32 @@ def test_blocks_respects_explicit_use_cigar_false(spark):
     assert bad == 0 and rows.count() == df.count()
 
 
+def _span_decoders(path, refs):
+    """The row and the events decoder over the whole file, each a call
+    that consumes it."""
+    return (
+        lambda: list(BV.iter_span_batches(path, refs, "S", None)),
+        lambda: list(BV.iter_span_cov_events(path, refs, None, chunk_size=16_384)),
+    )
+
+
 def test_corrupt_block_size_raises(tmp_path):
     """A record whose int32 block_size is negative (or below the 32-byte
-    fixed section) must raise, not stall the offset scan on the same
-    position forever (the <= -4 case made end == off)."""
+    fixed section) must raise in both span decoders, not stall the offset
+    scan on the same position forever (the <= -4 case made end == off)."""
     import struct
 
     refs = [("c1", 1000)]
     path = str(tmp_path / "bad.bam")
-    with open(path, "wb") as f:
-        w = B.BgzfWriter(f)
-        B.write_bam_header(w, refs, "")
-        w.write(struct.pack("<i", -4) + b"\x00" * 64)
-        w.close()
-    with pytest.raises(ValueError, match="block_size"):
-        list(BV.iter_span_batches(path, refs, "S", None))
-    with open(path, "wb") as f:
-        w = B.BgzfWriter(f)
-        B.write_bam_header(w, refs, "")
-        w.write(struct.pack("<i", 8) + b"\x00" * 64)
-        w.close()
-    with pytest.raises(ValueError, match="block_size"):
-        list(BV.iter_span_batches(path, refs, "S", None))
+    for block_size in (-4, 8):
+        with open(path, "wb") as f:
+            w = B.BgzfWriter(f)
+            B.write_bam_header(w, refs, "")
+            w.write(struct.pack("<i", block_size) + b"\x00" * 64)
+            w.close()
+        for decode in _span_decoders(path, refs):
+            with pytest.raises(ValueError, match="block_size"):
+                decode()
 
 
 def test_utf8_array_rejects_int32_offset_overflow():
@@ -226,23 +246,35 @@ def test_utf8_array_rejects_int32_offset_overflow():
         BV._utf8_array(np.zeros(8, dtype=np.uint8), cum)
 
 
-def test_ckern_and_python_scan_identical(tmp_path, monkeypatch):
+@pytest.mark.parametrize("path", _inputs(SLICE))
+def test_ckern_and_python_scan_identical(request, path, monkeypatch):
     """The C offset-scan/gather kernel and the pure-Python/NumPy fallback
-    must produce byte-identical decode output (when the kernel built)."""
+    must produce byte-identical decode output and coverage events (when
+    the kernel built)."""
     from sequila_spark.sources import _ckern
 
     if not _ckern.available():
         pytest.skip("C kernel unavailable on this host")
-    path = SLICE if os.path.exists(SLICE) else None
-    if path is None:
-        pytest.skip("no reference BAM")
+    path = _bam_path(request, path)
     refs, recs = _scalar(path)
-    with_c = _vec(path, refs, batch_bytes=100_000)
+
+    def decode():
+        events = [
+            b.to_pydict()
+            for b in BV.iter_span_cov_events(
+                path, refs, None, chunk_size=1_000, batch_bytes=100_000
+            )
+        ]
+        return _vec(path, refs, batch_bytes=100_000), events
+
+    with_c = decode()
     monkeypatch.setattr(_ckern, "_LIB", False)  # force fallback paths
     assert not _ckern.available()
-    without_c = _vec(path, refs, batch_bytes=100_000)
+    without_c = decode()
     monkeypatch.setattr(_ckern, "_LIB", None)
-    assert with_c == without_c == [("S",) + r for r in recs]
+    assert with_c == without_c
+    assert with_c[0] == [("S",) + r for r in recs]
+    assert with_c[1]
 
 
 def test_corrupt_inner_fields_raise_before_gather(tmp_path):
@@ -263,6 +295,7 @@ def test_corrupt_inner_fields_raise_before_gather(tmp_path):
     for bad in (
         rec(l_qname=0, n_cigar=0, l_seq=0, body_len=4),
         rec(l_qname=2, n_cigar=0, l_seq=1000, body_len=4),  # l_seq > record
+        rec(l_qname=2, n_cigar=1, l_seq=-1, body_len=8),  # negative l_seq
     ):
         path = str(tmp_path / "inner.bam")
         with open(path, "wb") as f:
@@ -270,8 +303,91 @@ def test_corrupt_inner_fields_raise_before_gather(tmp_path):
             B.write_bam_header(w, refs, "")
             w.write(bad)
             w.close()
-        with pytest.raises(ValueError, match="corrupt BAM record"):
-            list(BV.iter_span_batches(path, refs, "S", None))
+        # the events decoder checks the same extents: an l_seq past the
+        # record must not yield coverage for its cigar
+        for decode in _span_decoders(path, refs):
+            with pytest.raises(ValueError, match="corrupt BAM record"):
+                decode()
+
+
+def _damaged_copies(gen, tmp_path):
+    """A 2,000-read generated BAM (12 BGZF blocks) and three damaged
+    copies, each with the intact file's .bai: cut at the start of its last
+    data block, cut 7 bytes into a middle block's header, and a middle
+    block whose CRC32 has one bit flipped."""
+    import shutil
+    import struct
+
+    path = str(tmp_path / "whole.bam")
+    gen.write_bam(path, gen.make_reads(5, 2_000))
+    raw = open(path, "rb").read()
+    blocks, off = [], 0
+    while off < len(raw):
+        blocks.append(off)
+        off += struct.unpack_from("<H", raw, off + 16)[0] + 1  # BSIZE + 1
+    mid = blocks[len(blocks) // 2]
+    bad_crc = bytearray(raw)
+    bad_crc[blocks[len(blocks) // 2 + 1] - 8] ^= 1  # first CRC32 byte
+    damaged = {
+        "last_block": raw[: blocks[-2]],
+        "mid_header": raw[: mid + 7],
+        "bad_crc": bytes(bad_crc),
+    }
+    out = {}
+    for name, data in damaged.items():
+        out[name] = str(tmp_path / f"{name}.bam")
+        with open(out[name], "wb") as f:
+            f.write(data)
+        shutil.copy(path + ".bai", out[name] + ".bai")
+    return path, out
+
+
+_DAMAGE_ERRORS = {
+    "last_block": "truncated BAM .* ends inside a record",
+    "mid_header": "truncated BGZF block at compressed offset",
+    "bad_crc": "corrupt BGZF block at compressed offset",
+}
+
+
+@pytest.mark.parametrize("damage", sorted(_DAMAGE_ERRORS))
+def test_damaged_bam_raises_in_both_decoders(tmp_path, bench, damage):
+    """A BAM cut at a block boundary or inside a block header, or with a
+    bad block CRC, raises in the row and the events decoder, whole-file
+    and by BAI spans; the intact file decodes every record."""
+    gen, _ = bench
+    whole, paths = _damaged_copies(gen, tmp_path)
+    refs, recs = gen.read_bam_records(whole)
+    n_rows = sum(b.num_rows for b in BV.iter_span_batches(whole, refs, "S", None))
+    assert n_rows == len(recs) == 2_000
+
+    path, error = paths[damage], _DAMAGE_ERRORS[damage]
+    for decode in _span_decoders(path, refs):
+        with pytest.raises(ValueError, match=error):
+            decode()
+    spans = B.plan_spans(refs, B.read_bai_linear(path + ".bai"), 10_000_000)
+    with pytest.raises(ValueError, match=error):
+        for span in spans:
+            list(BV.iter_span_batches(path, refs, "S", span))
+    with pytest.raises(ValueError, match=error):
+        for span in spans:
+            list(BV.iter_span_cov_events(path, refs, span, chunk_size=16_384))
+
+
+@pytest.mark.parametrize("damage", sorted(_DAMAGE_ERRORS))
+def test_damaged_bam_raises_through_spark(spark, tmp_path, bench, damage):
+    """The Spark readers surface the same error: read_bam_native's count and
+    the fused coverage() plan over a damaged, indexed BAM both fail instead
+    of returning fewer rows."""
+    from sequila_spark.operators.coverage import coverage
+    from sequila_spark.sources.bam import read_bam_native
+
+    gen, _ = bench
+    _, paths = _damaged_copies(gen, tmp_path)
+    path, error = paths[damage], _DAMAGE_ERRORS[damage]
+    with pytest.raises(Exception, match=error):
+        read_bam_native(spark, path).count()
+    with pytest.raises(Exception, match=error):
+        coverage(read_bam_native(spark, path), mode="blocks").count()
 
 
 def test_cigar_text_to_ops_parses_like_python():
