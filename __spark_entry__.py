@@ -19,11 +19,7 @@ from pyspark.sql import functions as F
 from sequila_spark import testdata as TD
 from sequila_spark import schemas as S
 from sequila_spark.functions import intervals as IV
-from sequila_spark.operators.coverage import (
-    coverage,
-    coverage_blocks_walks,
-    filter_reads,
-)
+from sequila_spark.operators.coverage import coverage, filter_reads
 from sequila_spark.operators.pileup import pileup, pileup_md
 from sequila_spark.operators.range_join import range_join
 
@@ -144,18 +140,17 @@ def _q_read_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_coverage_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both aligned-block walks under one gate (round 11 folded the
     former coverage_cigar slot in): span blocks (use_cigar=False) and the
-    CIGAR-walk path (use_cigar=True), discriminated by ``walk``.  The
+    CIGAR-walk path (use_cigar=True), each tagged by ``walk``.  The
     synthetic reads carry all-M cigars, so both sides share one oracle;
-    indel/clip CIGAR semantics are pinned by tests/test_coverage.py.
-
-    r16: computed by the fused multi-walk pipeline — one tagged block
-    explode feeds ONE events aggregation / prefix-sum window / boundary
-    merge for both walks (guide §2.4), instead of two full per-walk
-    pipelines unioned.  Row-identical to the union form (pinned by
-    tests/test_coverage.py::test_coverage_blocks_walks_matches_union and
-    the oracle gate)."""
+    indel/clip CIGAR semantics are pinned by tests/test_coverage.py."""
     reads = TD.reads(spark, sf_dir)
-    return coverage_blocks_walks(reads)
+    return coverage(reads, mode="blocks", use_cigar=False).select(
+        F.lit("span").alias("walk"), "*"
+    ).unionByName(
+        coverage(reads, mode="blocks", use_cigar=True).select(
+            F.lit("cigar").alias("walk"), "*"
+        )
+    )
 
 
 def _q_coverage_bases_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,7 +5,8 @@ Semantics match the reference's coverage TVF
 end, for CIGAR ops that consume both read and reference (M, =, X); D/N advance
 the reference with no coverage; pileup/model/ContigAggregateRDD.scala:183-232
 — running cumulative sum, adjacent equal-coverage runs merged into blocks).
-Output blocks are 1-based end-inclusive with coverage > 0.
+Output blocks are 1-based end-inclusive with coverage > 0.  Aligned blocks
+come from cigar_blocks, the one CIGAR walk, which pileup shares.
 
 Architecture.  The reference keeps per-partition Short arrays and fixes up
 partition boundaries with driver-side interval trees
@@ -35,6 +36,9 @@ prefix offsets back; it computed the data-sized deltas relation in two
 plan branches — the clip design needs one branch, one big shuffle, no
 broadcast, and measured 1.3x faster end-to-end at equal chunk size.)
 
+merge_touching_blocks (interval union) and pileup.pileup_blocks number
+their runs with one chunked stitcher, chunked_run_ids.
+
 Partitioning invariance is free: the shuffle aligns events by key, so results
 do not depend on input splits (the reference needs dedicated machinery + tests
 for this, tests/pileup/SamtoolsTestSuite.scala:50-64).
@@ -42,7 +46,7 @@ for this, tests/pileup/SamtoolsTestSuite.scala:50-64).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sequila_spark import schemas as S
@@ -76,30 +80,63 @@ def filter_reads(
     return out
 
 
+def _advance(field: str, codes: str) -> str:
+    """SQL: the fold's ``field`` after the op, advanced by the op's length
+    when its code is one of ``codes``."""
+    codes_in = ", ".join(f"'{c}'" for c in codes)
+    return (
+        f"CAST(CASE WHEN substring(op, -1, 1) IN ({codes_in}) "
+        f"THEN acc.{field} + CAST(substring(op, 1, length(op) - 1) AS INT) "
+        f"ELSE acc.{field} END AS INT)"
+    )
+
+
+# The fold is SQL text: one parse builds it, where the same expression
+# tree built through the Column API took about a thousand py4j calls.
+# Gapless fast path: single-run CIGARs (e.g. '100M') skip the fold
+# entirely (CaseWhen branches evaluate lazily per row).
+_CIGAR_BLOCKS_SQL = f"""
+CASE WHEN {S.CIGAR} RLIKE '^[0-9]+[M=X]$'
+THEN array(named_struct('s', CAST({S.START} AS INT), 'q', 0, 'm', 0,
+  'n', CAST(substring({S.CIGAR}, 1, length({S.CIGAR}) - 1) AS INT)))
+ELSE aggregate(
+  regexp_extract_all({S.CIGAR}, '([0-9]+)([MIDNSHP=X])', 0),
+  named_struct('r', CAST({S.START} AS INT), 'q', 0, 'm', 0,
+    'blocks', CAST(array() AS ARRAY<STRUCT<s: INT, q: INT, m: INT, n: INT>>)),
+  (acc, op) -> named_struct(
+    'r', {_advance("r", "MDN=X")},
+    'q', {_advance("q", "MIS=X")},
+    'm', {_advance("m", "MD=X")},
+    'blocks', CASE WHEN substring(op, -1, 1) IN ('M', '=', 'X')
+      THEN concat(acc.blocks, array(named_struct('s', acc.r, 'q', acc.q, 'm', acc.m,
+        'n', CAST(substring(op, 1, length(op) - 1) AS INT))))
+      ELSE acc.blocks END)
+).blocks
+END"""
+
+
+def cigar_blocks() -> Column:
+    """The one CIGAR walk over the ``cigar`` and ``pos_start`` columns:
+    ``array<struct<s, q, m, n>>`` of each aligned block's reference start,
+    0-based query offset, MD-space offset and length (Read.scala:27-69).
+
+    M/=/X consume reference and query and emit a block; D/N advance the
+    reference; I/S advance the query; H/P consume nothing.  The MD tag
+    covers aligned and deleted bases only, so N consumes no MD space.  A
+    native fold (aggregate over regexp-extracted ops) — no Python in the
+    hot path; a NULL CIGAR gives NULL and ``*`` no blocks."""
+    return F.expr(_CIGAR_BLOCKS_SQL)
+
+
 def aligned_blocks(reads: DataFrame, use_cigar: bool | None = None) -> DataFrame:
     """One row per reference-consuming aligned block of each read:
-    (contig, pos_start, pos_end, <passthrough read columns>).
+    (<read columns>, __sq_bs, __sq_be) — the block's first and last
+    reference position.
 
-    With a CIGAR column, M/=/X emit blocks, D/N advance the reference
-    without coverage, I/S/H/P consume no reference (Read.scala:27-54).  The
-    CIGAR walk is a native fold (aggregate over regexp-extracted ops) — no
-    Python in the hot path.
-
-    When the relation carries a ``__blocks`` column (read_bam_native
-    ``with_blocks=True`` — blocks computed vectorized at decode time from
-    the raw cigar ops), it is exploded directly: same semantics as the
-    CIGAR walk, no SQL re-parse.  An EXPLICIT ``use_cigar=False`` still
-    wins (whole-span pos_start..pos_end coverage, e.g. physical/fragment
-    coverage ignoring deletions) — the fast path only replaces the walk
-    it is equivalent to.
-    """
-    if "__blocks" in reads.columns and use_cigar is not False:
-        exploded = reads.select("*", F.explode("__blocks").alias("__sq_blk"))
-        return exploded.select(
-            "*",
-            F.col("__sq_blk.s").alias("__sq_bs"),
-            F.col("__sq_blk.e").alias("__sq_be"),
-        ).drop("__sq_blk")
+    With a CIGAR column (``use_cigar`` default: on when one exists) the
+    blocks come from :func:`cigar_blocks`; without it each read is one
+    block from pos_start to pos_end (e.g. physical/fragment coverage that
+    ignores deletions)."""
     if use_cigar is None:
         use_cigar = S.CIGAR in reads.columns
     if not use_cigar:
@@ -108,259 +145,89 @@ def aligned_blocks(reads: DataFrame, use_cigar: bool | None = None) -> DataFrame
             F.col(S.START).alias("__sq_bs"),
             F.col(S.END).alias("__sq_be"),
         )
-
-    blocks = _cigar_blocks_col()
-    exploded = reads.select("*", F.explode(blocks).alias("__sq_blk"))
+    exploded = reads.select("*", F.explode(cigar_blocks()).alias("__sq_blk"))
     return exploded.select(
         "*",
         F.col("__sq_blk.s").alias("__sq_bs"),
-        F.col("__sq_blk.e").alias("__sq_be"),
+        (F.col("__sq_blk.s") + F.col("__sq_blk.n") - 1).cast("int").alias("__sq_be"),
     ).drop("__sq_blk")
 
 
-def _cigar_blocks_col():
-    """``array<struct<s,e>>`` of reference-consuming aligned blocks from the
-    CIGAR walk (shared by :func:`aligned_blocks` and the multi-walk
-    variant): M/=/X emit, D/N advance, I/S/H/P consume nothing."""
-    ops = F.regexp_extract_all(F.col(S.CIGAR), F.lit(r"(\d+)([MIDNSHP=X])"), 0)
-    init = F.struct(
-        F.col(S.START).cast("int").alias("off"),
-        F.expr("CAST(array() AS ARRAY<STRUCT<s: INT, e: INT>>)").alias("blocks"),
-    )
-
-    def step(acc, op):
-        n = F.substring(op, 1, F.length(op) - 1).cast("int")
-        code = F.substring(op, -1, 1)
-        consumes_ref = code.isin("M", "D", "N", "=", "X")
-        emits = code.isin("M", "=", "X")
-        new_blocks = F.when(
-            emits,
-            F.concat(
-                acc["blocks"],
-                F.array(
-                    F.struct(
-                        acc["off"].alias("s"), (acc["off"] + n - 1).cast("int").alias("e")
-                    )
-                ),
-            ),
-        ).otherwise(acc["blocks"])
-        new_off = F.when(consumes_ref, acc["off"] + n).otherwise(acc["off"]).cast("int")
-        return F.struct(new_off.alias("off"), new_blocks.alias("blocks"))
-
-    folded = F.aggregate(ops, init, step)["blocks"]
-    # Gapless fast path: single-run CIGARs (e.g. '100M') skip the fold
-    # entirely (CaseWhen branches evaluate lazily per row).
-    n1 = F.substring(F.col(S.CIGAR), 1, F.length(S.CIGAR) - 1).cast("int")
-    gapless = F.array(
-        F.struct(
-            F.col(S.START).cast("int").alias("s"),
-            (F.col(S.START) + n1 - 1).cast("int").alias("e"),
-        )
-    )
-    return F.when(F.col(S.CIGAR).rlike("^[0-9]+[M=X]$"), gapless).otherwise(folded)
-
-
-def coverage_blocks_walks(
-    reads: DataFrame,
-    walks: tuple[tuple[str, bool], ...] = (("span", False), ("cigar", True)),
-    chunk_size: int = DEFAULT_CHUNK,
-    walk_col: str = "walk",
+def chunked_run_ids(
+    rows: DataFrame, chunk_size: int, key: str | None = None
 ) -> DataFrame:
-    """Blocks-mode coverage for SEVERAL block walks of the same reads in ONE
-    shared pipeline — row-identical to the union of per-walk
-    ``coverage(reads, mode='blocks', use_cigar=uc)`` tagged with the walk
-    name, but the input relation is scanned once (both walks' blocks come
-    out of one tagged explode), the events cross one aggregation pipeline
-    instead of one per walk, and one prefix-sum window / one boundary-merge
-    pass serve every walk (guide §2.4: operations keyed the same way share
-    the exchange — the walk tag only widens the key, it never changes which
-    partition a (contig, chunk) group lands in).
+    """``rows`` — disjoint (contig, pos_start, pos_end) intervals — with a
+    ``run`` column numbering their runs: a row continues the run of the
+    row before it (by pos_start, within its contig) when it starts one
+    past that row's end and, given ``key``, carries the same ``key``
+    value.  Ids are unique per contig.
 
-    ``walks`` maps output tag -> use_cigar.  Every stage carries a tinyint
-    walk id; the name attaches in the final projection.  A CIGAR walk
-    reads the decoder's ``__blocks`` column when the relation carries it,
-    as :func:`aligned_blocks` does, instead of re-parsing the CIGAR.
-    """
-    names = [n for n, _ in walks]
-    arrays = []
-    has_blocks = "__blocks" in reads.columns
-    for i, (_, use_cigar) in enumerate(walks):
-        if use_cigar and (has_blocks or S.CIGAR in reads.columns):
-            blocks = F.col("__blocks") if has_blocks else _cigar_blocks_col()
-            # NOTE: one-arg lambda built by a factory — a `lambda b, i=i`
-            # two-parameter form would make F.transform pass the ARRAY
-            # INDEX as the second argument, silently shadowing the walk id
-            def _tag(i):
-                return lambda b: F.struct(
-                    F.lit(i).cast("tinyint").alias("w"),
-                    b["s"].cast("int").alias("s"),
-                    b["e"].cast("int").alias("e"),
-                )
-
-            # NULL cigar makes the walk's block array NULL, which would
-            # nullify the whole concat and silently drop the read from
-            # EVERY walk — coalesce to empty so only this walk skips it
-            # (exactly what explode(NULL blocks) does in aligned_blocks)
-            arrays.append(
-                F.coalesce(
-                    F.transform(blocks, _tag(i)),
-                    F.expr(
-                        "CAST(array() AS "
-                        "ARRAY<STRUCT<w: TINYINT, s: INT, e: INT>>)"
-                    ),
-                )
-            )
-        else:
-            arrays.append(
-                F.array(
-                    F.struct(
-                        F.lit(i).cast("tinyint").alias("w"),
-                        F.col(S.START).cast("int").alias("s"),
-                        F.col(S.END).cast("int").alias("e"),
-                    )
-                )
-            )
-    tagged = reads.select(
-        S.CONTIG, F.explode(F.concat(*arrays)).alias("__tb")
-    ).select(
-        S.CONTIG,
-        F.col("__tb.w").alias("__w"),
-        F.col("__tb.s").alias("bs"),
-        F.col("__tb.e").alias("be"),
+    Chunked, so no window spans a whole contig: run breaks are found
+    inside each (contig, chunk) in parallel, and one aggregate over the
+    same pre-partitioned rows gives each chunk's boundary rows and run
+    count.  That tiny per-chunk relation decides which chunk-initial runs
+    continue the previous non-empty chunk's last run (by its end
+    coordinate, so a row spanning many chunks stitches) and offsets the
+    local run numbers to global ids; it is broadcast back."""
+    b = rows.withColumn("__chunk", F.floor(F.col(S.START) / chunk_size))
+    # pre-partition once: the run-break window AND the per-chunk aggregate
+    # both cluster on (contig, chunk), so they share this single exchange
+    b = b.repartition(F.col(S.CONTIG), F.col("__chunk"))
+    w_local = Window.partitionBy(S.CONTIG, "__chunk").orderBy(S.START)
+    prev_end = F.lag(S.END).over(w_local)
+    brk = prev_end.isNull() | (F.col(S.START) != prev_end + 1)
+    if key is not None:
+        brk = brk | (F.col(key) != F.lag(key).over(w_local))
+    # two projections: a window function result cannot feed another window
+    # function within one select
+    loc = b.withColumn("__brk", brk.cast("long")).withColumn(
+        "__lrun", F.sum("__brk").over(w_local)
     )
 
-    c_lo = F.floor((F.col("bs") - 1) / chunk_size)
-    c_hi = F.floor((F.col("be") - 1) / chunk_size)
-    per_chunk = tagged.select(
-        S.CONTIG, "__w", "bs", "be", F.explode(F.sequence(c_lo, c_hi)).alias("chunk")
-    )
-    cbs = F.greatest(F.col("bs"), (F.col("chunk") * chunk_size + 1).cast("int"))
-    cbe = F.least(F.col("be"), ((F.col("chunk") + 1) * chunk_size).cast("int"))
-    events = per_chunk.select(
-        S.CONTIG,
-        "__w",
-        "chunk",
-        F.explode(
-            F.array(
-                F.struct(cbs.alias("pos"), F.lit(1).alias("delta")),
-                F.struct((cbe + 1).alias("pos"), F.lit(-1).alias("delta")),
+    # ONE aggregation over loc yields the whole per-chunk info row (a
+    # separate boundary aggregate joined to a run-count aggregate
+    # re-evaluates the rows' lineage)
+    edges = [
+        F.min(S.START).alias("__first"),
+        F.max(S.END).alias("__last"),
+        F.max("__lrun").alias("__m"),
+    ]
+    w_chunks = Window.partitionBy(S.CONTIG).orderBy("__chunk")
+    cont = F.lag("__last").over(w_chunks) + 1 == F.col("__first")
+    if key is not None:
+        edges += [
+            F.min_by(key, S.START).alias("__first_key"),
+            F.max_by(key, S.START).alias("__last_key"),
+        ]
+        cont = cont & (F.lag("__last_key").over(w_chunks) == F.col("__first_key"))
+    info = (
+        loc.groupBy(S.CONTIG, "__chunk")
+        .agg(*edges)
+        .withColumn("__cont", F.coalesce(cont.cast("long"), F.lit(0)))
+        .withColumn(
+            "__offset",
+            F.coalesce(
+                F.sum("__m").over(w_chunks.rowsBetween(Window.unboundedPreceding, -1)),
+                F.lit(0),
             )
-        ).alias("ev"),
-    ).select(
-        S.CONTIG, "__w", "chunk", F.col("ev.pos").alias("pos"), F.col("ev.delta").alias("delta")
-    )
-    # Blocks-mode shape (see _events_to_deltas): the groupBy's own exchange
-    # is the AQE stage-reuse point between the interior/merged branches.
-    deltas = (
-        events.groupBy("__w", S.CONTIG, "chunk", "pos")
-        .agg(F.sum("delta").alias("delta"))
-        .where(F.col("delta") != 0)
-    )
-    w_local = Window.partitionBy("__w", S.CONTIG, "chunk").orderBy("pos")
-    local = deltas.select(
-        "__w",
-        S.CONTIG,
-        "chunk",
-        "pos",
-        F.sum("delta").over(w_local).alias(S.COVERAGE),
-        F.lead("pos").over(w_local).alias("next_pos"),
-    )
-    raw_blocks = local.where(
-        (F.col(S.COVERAGE) > 0) & F.col("next_pos").isNotNull()
-    ).select(
-        "__w",
-        S.CONTIG,
-        F.col("pos").cast("int").alias(S.START),
-        (F.col("next_pos") - 1).cast("int").alias(S.END),
-        F.col(S.COVERAGE).cast("int").alias(S.COVERAGE),
-    )
-    at_boundary = (F.col(S.END) % chunk_size == 0) | (
-        (F.col(S.START) - 1) % chunk_size == 0
-    )
-    interior = raw_blocks.where(~at_boundary)
-    cand = raw_blocks.where(at_boundary)
-    w_merge = Window.partitionBy("__w", S.CONTIG).orderBy(S.START)
-    brk = (
-        F.lag(S.END).over(w_merge).isNull()
-        | (F.col(S.START) != F.lag(S.END).over(w_merge) + 1)
-        | (F.col(S.COVERAGE) != F.lag(S.COVERAGE).over(w_merge))
-    ).cast("long")
-    merged = (
-        cand.withColumn("brk", brk)
-        .withColumn("run", F.sum("brk").over(w_merge))
-        .groupBy("__w", S.CONTIG, "run")
-        .agg(
-            F.min(S.START).alias(S.START),
-            F.max(S.END).alias(S.END),
-            F.first(S.COVERAGE).alias(S.COVERAGE),
+            - F.sum("__cont").over(w_chunks.rowsBetween(Window.unboundedPreceding, 0)),
         )
-        .select("__w", S.CONTIG, S.START, S.END, S.COVERAGE)
+        .select(S.CONTIG, "__chunk", "__offset")
     )
-    out = interior.unionByName(merged)
-    name = F.element_at(F.array(*[F.lit(n) for n in names]), F.col("__w") + 1)
-    return out.select(
-        name.alias(walk_col), S.CONTIG, S.START, S.END, S.COVERAGE
+    return loc.join(F.broadcast(info), [S.CONTIG, "__chunk"]).select(
+        *rows.columns, (F.col("__offset") + F.col("__lrun")).alias("run")
     )
 
 
 def merge_touching_blocks(blocks: DataFrame, chunk_size: int = DEFAULT_CHUNK) -> DataFrame:
     """Merge consecutive blocks that touch (next start == prev end + 1)
     into maximal islands, ignoring coverage values — the union-of-intervals
-    primitive.  Two-phase chunked stitching (same design as the prefix
-    sum): per-(contig, chunk) run breaks in parallel, a tiny per-chunk
-    relation carries offsets and cross-chunk continuation (by boundary
-    coordinates of the previous non-empty chunk, so blocks spanning many
-    chunks stitch correctly)."""
-    b = blocks.select(S.CONTIG, S.START, S.END).withColumn(
-        "chunk", F.floor(F.col(S.START) / chunk_size)
-    )
-    # pre-partition once: the run-break window AND the per-chunk info
-    # aggregation below both cluster on (contig, chunk), so they share
-    # this single exchange
-    b = b.repartition(F.col(S.CONTIG), F.col("chunk"))
-    w_local = Window.partitionBy(S.CONTIG, "chunk").orderBy(S.START)
-    prev_end = F.lag(S.END).over(w_local)
-    brk = (prev_end.isNull() | (F.col(S.START) != prev_end + 1)).cast("long")
-    loc = b.withColumn("brk", brk).withColumn("lrun", F.sum("brk").over(w_local))
-
-    # ONE aggregation over loc yields the whole per-chunk info row (the
-    # old separate ci-over-b + m-over-loc pair joined back re-evaluated
-    # the blocks lineage a third time)
-    w_chunks = Window.partitionBy(S.CONTIG).orderBy("chunk")
-    info = (
-        loc.groupBy(S.CONTIG, "chunk")
-        .agg(
-            F.min(S.START).alias("first_start"),
-            F.max(S.END).alias("last_end"),
-            F.max("lrun").alias("m"),
-        )
-        .withColumn(
-            "cont",
-            F.coalesce(
-                (F.lag("last_end").over(w_chunks) + 1 == F.col("first_start")).cast("long"),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
-            "adj_offset",
-            F.coalesce(
-                F.sum("m").over(w_chunks.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            )
-            - F.sum("cont").over(w_chunks.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .select(S.CONTIG, "chunk", "adj_offset")
-    )
-    return (
-        loc.join(F.broadcast(info), [S.CONTIG, "chunk"])
-        .withColumn("run", F.col("adj_offset") + F.col("lrun"))
-        .groupBy(S.CONTIG, "run")
-        .agg(
-            F.min(S.START).cast("int").alias(S.START),
-            F.max(S.END).cast("int").alias(S.END),
-        )
-        .select(S.CONTIG, S.START, S.END)
-    )
+    primitive, stitched across chunks by :func:`chunked_run_ids`."""
+    runs = chunked_run_ids(blocks.select(S.CONTIG, S.START, S.END), chunk_size)
+    return runs.groupBy(S.CONTIG, "run").agg(
+        F.min(S.START).cast("int").alias(S.START),
+        F.max(S.END).cast("int").alias(S.END),
+    ).select(S.CONTIG, S.START, S.END)
 
 
 def coverage(

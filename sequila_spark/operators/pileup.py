@@ -10,10 +10,12 @@ in schemas.py: alts are ``map<string,int>`` keyed by 1-char base strings,
 quals ``map<string, array<int>>`` indexed by (possibly binned) quality value.
 
 Architecture.  The reference walks each read against the MD tag inside a
-custom physical operator.  Here each read is exploded to per-base rows with
-native expressions (sequence + substr — stays in whole-stage codegen), the
-reference base comes from a joined reference relation (or an expression), and
-everything else is two hash aggregations:
+custom physical operator.  Here each read's aligned blocks come from
+coverage.cigar_blocks — the one CIGAR walk, shared with coverage — and are
+exploded to per-base rows with native expressions (substring + split —
+stays in whole-stage codegen), the reference base comes from a joined
+reference relation (or an expression), and everything else is two hash
+aggregations:
 
   g1 = groupBy(contig, pos, base [, qual_bin]).count()      -- map-side combine
   g2 = groupBy(contig, pos): coverage, countRef, countNonRef,
@@ -21,17 +23,22 @@ everything else is two hash aggregations:
 
 At scale this is one shuffle keyed by genomic position — no driver state, no
 partition-boundary fix-ups (shuffle alignment replaces
-AlignmentsRDD.scala:148-236).
+AlignmentsRDD.scala:148-236).  The two sparse plans — mismatches against a
+reference expression (_pileup_sparse) and from the MD tag (pileup_md) —
+share one tail (_sparse_tail) that counts only mismatch rows and joins them
+onto coverage's per-base rows.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sequila_spark import schemas as S
+from sequila_spark.operators.coverage import chunked_run_ids, cigar_blocks, filter_reads
+from sequila_spark.operators.coverage import coverage as _coverage
 
 RefExpr = Callable[[Column, Column], Column]  # (contig, pos) -> ref base
 
@@ -65,120 +72,11 @@ def _ci_eq(a: Column, b: Column) -> Column:
         return F.upper(a) == F.upper(b)
 
 
-# A CIGAR that is one reference-consuming run (e.g. '100M') — the common
-# short-read case, expanded without the fold.
-_GAPLESS_RE = "^[0-9]+[M=X]$"
-
 # at most ONE BAQ'd reads relation stays persisted per session: repeated
 # pileup(baq=..., mate_overlap=True) calls unpersist the previous call's
 # cache here (LRU eviction alone never reclaims disk-spilled blocks of a
 # still-referenced plan — same registry pattern as dedup._VERIFY_BCASTS)
 _BAQ_CACHE: list = []
-
-
-def _cigar_query_blocks(cigar: Column, start: Column) -> Column:
-    """Fold the CIGAR into per-aligned-block structs
-    ``(s: ref start, q: 0-based query offset, n: length)``.
-
-    M/=/X consume reference AND query (and emit a block); D/N consume
-    reference only; I/S consume query only; H/P consume nothing
-    (pileup/model/Read.scala:56-69, pileup/MDTagParser.scala:24-53 —
-    semantics matched, mechanism is a native Catalyst fold, not an MD-tag
-    walk: we have the full seq column, so mismatches come from comparing
-    expanded bases against the reference relation/expression).
-    """
-    ops = F.regexp_extract_all(cigar, F.lit(r"(\d+)([MIDNSHP=X])"), 0)
-    init = F.struct(
-        start.cast("int").alias("r"),
-        F.lit(0).cast("int").alias("q"),
-        F.expr("CAST(array() AS ARRAY<STRUCT<s: INT, q: INT, n: INT>>)").alias("blocks"),
-    )
-
-    def step(acc, op):
-        n = F.substring(op, 1, F.length(op) - 1).cast("int")
-        code = F.substring(op, -1, 1)
-        consumes_ref = code.isin("M", "D", "N", "=", "X")
-        consumes_query = code.isin("M", "I", "S", "=", "X")
-        emits = code.isin("M", "=", "X")
-        new_blocks = F.when(
-            emits,
-            F.concat(
-                acc["blocks"],
-                F.array(F.struct(acc["r"].alias("s"), acc["q"].alias("q"), n.alias("n"))),
-            ),
-        ).otherwise(acc["blocks"])
-        return F.struct(
-            F.when(consumes_ref, acc["r"] + n).otherwise(acc["r"]).cast("int").alias("r"),
-            F.when(consumes_query, acc["q"] + n).otherwise(acc["q"]).cast("int").alias("q"),
-            new_blocks.alias("blocks"),
-        )
-
-    folded = F.aggregate(ops, init, step)["blocks"]
-    # Gapless fast path: skip the fold for single-run CIGARs (CaseWhen
-    # evaluates lazily per row, so all-M data never pays the fold).
-    gapless = F.array(
-        F.struct(
-            start.cast("int").alias("s"),
-            F.lit(0).cast("int").alias("q"),
-            F.substring(cigar, 1, F.length(cigar) - 1).cast("int").alias("n"),
-        )
-    )
-    return F.when(cigar.rlike(_GAPLESS_RE), gapless).otherwise(folded)
-
-
-def _cigar_query_blocks_md(cigar: Column, start: Column) -> Column:
-    """Like _cigar_query_blocks, but each block also carries its MD-space
-    offset ``m``: cumulative ref-consumed bases of M/=/X and D ops before
-    the block.  The MD tag string covers aligned and deleted bases only —
-    N splices consume reference but NOT MD space, I/S consume neither."""
-    ops = F.regexp_extract_all(cigar, F.lit(r"(\d+)([MIDNSHP=X])"), 0)
-    init = F.struct(
-        start.cast("int").alias("r"),
-        F.lit(0).cast("int").alias("q"),
-        F.lit(0).cast("int").alias("m"),
-        F.expr(
-            "CAST(array() AS ARRAY<STRUCT<s: INT, q: INT, m: INT, n: INT>>)"
-        ).alias("blocks"),
-    )
-
-    def step(acc, op):
-        n = F.substring(op, 1, F.length(op) - 1).cast("int")
-        code = F.substring(op, -1, 1)
-        consumes_ref = code.isin("M", "D", "N", "=", "X")
-        consumes_query = code.isin("M", "I", "S", "=", "X")
-        consumes_md = code.isin("M", "D", "=", "X")
-        emits = code.isin("M", "=", "X")
-        new_blocks = F.when(
-            emits,
-            F.concat(
-                acc["blocks"],
-                F.array(
-                    F.struct(
-                        acc["r"].alias("s"),
-                        acc["q"].alias("q"),
-                        acc["m"].alias("m"),
-                        n.alias("n"),
-                    )
-                ),
-            ),
-        ).otherwise(acc["blocks"])
-        return F.struct(
-            F.when(consumes_ref, acc["r"] + n).otherwise(acc["r"]).cast("int").alias("r"),
-            F.when(consumes_query, acc["q"] + n).otherwise(acc["q"]).cast("int").alias("q"),
-            F.when(consumes_md, acc["m"] + n).otherwise(acc["m"]).cast("int").alias("m"),
-            new_blocks.alias("blocks"),
-        )
-
-    folded = F.aggregate(ops, init, step)["blocks"]
-    gapless = F.array(
-        F.struct(
-            start.cast("int").alias("s"),
-            F.lit(0).cast("int").alias("q"),
-            F.lit(0).cast("int").alias("m"),
-            F.substring(cigar, 1, F.length(cigar) - 1).cast("int").alias("n"),
-        )
-    )
-    return F.when(cigar.rlike(_GAPLESS_RE), gapless).otherwise(folded)
 
 
 def _md_mismatch_offsets(md: Column) -> Column:
@@ -246,7 +144,7 @@ def mismatches_from_md(
     rows = reads.where(md.isNotNull() & (F.col(S.CIGAR) != "*")).select(
         *keep,
         F.col(S.SEQUENCE).alias("__seq"),
-        _cigar_query_blocks_md(F.col(S.CIGAR), F.col(S.START)).alias("__blks"),
+        cigar_blocks().alias("__blks"),
         F.explode(_md_mismatch_offsets(md)).alias("__mm"),
     )
     o = F.col("__mm")["o"]
@@ -292,9 +190,6 @@ def pileup_md(
     base at mismatch positions and NULL at all-ref positions (the MD walk
     cannot know the rest of the genome — callers needing a full ref column
     attach a reference relation instead)."""
-    from sequila_spark.operators.coverage import coverage as _coverage
-    from sequila_spark.operators.coverage import filter_reads
-
     if flag_mask or min_mapq:
         reads = filter_reads(reads, flag_mask=flag_mask, min_mapq=min_mapq)
     if use_cigar is None:
@@ -304,39 +199,7 @@ def pileup_md(
         S.CONTIG, F.col(S.START).alias("pos"), S.COVERAGE
     )
     mism = mismatches_from_md(reads, strand_case=strand_case)
-    g1 = mism.groupBy(S.CONTIG, "pos", "base").agg(
-        F.count("*").cast("int").alias("cnt"), F.max("ref_base").alias("ref_base")
-    )
-    alt_agg = [
-        F.sum("cnt").cast("int").alias(S.COUNT_NONREF),
-        F.max("ref_base").alias("__ref"),
-    ]
-    if alts:
-        alt_agg.append(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct(F.col("base"), F.col("cnt"))))
-            ).alias(S.ALTS)
-        )
-    alt_pos = g1.groupBy(S.CONTIG, "pos").agg(*alt_agg)
-
-    joined = cov.join(alt_pos, [S.CONTIG, "pos"], "left")
-    nonref = F.coalesce(F.col(S.COUNT_NONREF), F.lit(0)).cast("int")
-    cols = [
-        F.col(S.CONTIG),
-        F.col("pos").cast("int").alias(S.START),
-        F.col("pos").cast("int").alias(S.END),
-        F.col("__ref").alias(S.REF),
-        F.col(S.COVERAGE).cast("int").alias(S.COVERAGE),
-        (F.col(S.COVERAGE) - nonref).cast("int").alias(S.COUNT_REF),
-        nonref.alias(S.COUNT_NONREF),
-    ]
-    if alts:
-        cols.append(
-            F.coalesce(
-                F.col(S.ALTS), F.expr("map()").cast("map<string,int>")
-            ).alias(S.ALTS)
-        )
-    return joined.select(*cols)
+    return _sparse_tail(cov, mism, alts, F.col("ref_base"))
 
 
 def expand_bases(
@@ -368,7 +231,7 @@ def expand_bases(
     base = lambda c: c  # noqa: E731 — casing already applied string-level
 
     if use_cigar:
-        blocks = _cigar_query_blocks(F.col(S.CIGAR), F.col(S.START))
+        blocks = cigar_blocks()
         keep = [S.CONTIG] + (
             [S.FLAG] if strand_case and S.FLAG in reads.columns else []
         ) + list(carry)
@@ -515,8 +378,6 @@ def pileup(
     plain ``.select()`` over the relation also strips the provenance);
     ``fuse=True`` raises when there is no provenance to prune on.
     """
-    from sequila_spark.operators.coverage import filter_reads
-
     if strategy not in ("auto", "sparse", "dense"):
         raise ValueError(f"unknown pileup strategy: {strategy!r}")
 
@@ -721,82 +582,34 @@ def pileup_blocks(p: DataFrame, chunk_size: int = 100_000) -> DataFrame:
     bases concatenated; mismatch positions stay single rows carrying their
     alts (and quals when present).
 
-    Scalable stitching, same design as coverage's prefix sum: run breaks
-    are detected inside (contig, chunk) windows in parallel; a tiny
-    per-chunk relation decides which chunk-initial runs continue the
-    previous chunk's last run and assigns global run offsets — no
+    Runs are numbered by coverage.chunked_run_ids (keyed on coverage) —
+    the chunked stitcher merge_touching_blocks uses, with no
     single-task-per-contig window.
     """
     has_quals = S.QUALS in p.columns
-    # NOTE (r15, measured): do NOT persist p here.  The four consumers'
+    # NOTE (r15, measured): do NOT persist p here.  Its consumers'
     # upstream shuffles canonicalize identically, so AQE runtime exchange
     # reuse already dedupes the heavy pileup lineage; an explicit persist
     # added a materialization barrier and measured 6.4x SLOWER on the
     # sliced gate (0.27s -> 1.7s interleaved A/B) with identical rows.
     has_alts = F.coalesce(F.col(S.COUNT_NONREF), F.lit(0)) > 0
     alt_rows = p.where(has_alts)
-    af = (
-        p.where(~has_alts)
-        .select(S.CONTIG, F.col(S.START).alias("pos"), S.REF, S.COVERAGE)
-        .withColumn("chunk", F.floor(F.col("pos") / chunk_size))
-    )
-
-    w_local = Window.partitionBy(S.CONTIG, "chunk").orderBy("pos")
-    prev_pos = F.lag("pos").over(w_local)
-    prev_cov = F.lag(S.COVERAGE).over(w_local)
-    brk = (
-        prev_pos.isNull()
-        | (F.col("pos") != prev_pos + 1)
-        | (F.col(S.COVERAGE) != prev_cov)
-    ).cast("long")
-    # two projections: a window function result cannot feed another window
-    # function within one select
-    loc = af.withColumn("brk", brk).withColumn("lrun", F.sum("brk").over(w_local))
-
-    # Tiny per-chunk relation: boundary positions/coverages + local run count.
-    ci = af.groupBy(S.CONTIG, "chunk").agg(
-        F.min("pos").alias("first_pos"),
-        F.max("pos").alias("last_pos"),
-        F.min_by(S.COVERAGE, "pos").alias("first_cov"),
-        F.max_by(S.COVERAGE, "pos").alias("last_cov"),
-    )
-    m = loc.groupBy(S.CONTIG, "chunk").agg(F.max("lrun").alias("m"))
-    w_chunks = Window.partitionBy(S.CONTIG).orderBy("chunk")
-    info = (
-        ci.join(m, [S.CONTIG, "chunk"])
-        .withColumn(
-            "cont",
-            (
-                (F.lag("chunk").over(w_chunks) == F.col("chunk") - 1)
-                & (F.lag("last_pos").over(w_chunks) == F.col("first_pos") - 1)
-                & (F.lag("last_cov").over(w_chunks) == F.col("first_cov"))
-            ).cast("long"),
-        )
-        .withColumn("cont", F.coalesce(F.col("cont"), F.lit(0)))
-        .withColumn(
-            "adj_offset",
-            F.coalesce(
-                F.sum("m").over(w_chunks.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            )
-            - F.sum("cont").over(w_chunks.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .select(S.CONTIG, "chunk", "adj_offset")
-    )
-
+    af = p.where(~has_alts).select(S.CONTIG, S.START, S.END, S.REF, S.COVERAGE)
     runs = (
-        loc.join(F.broadcast(info), [S.CONTIG, "chunk"])
-        .withColumn("run", F.col("adj_offset") + F.col("lrun"))
+        chunked_run_ids(af, chunk_size, key=S.COVERAGE)
         .groupBy(S.CONTIG, "run")
         .agg(
-            F.min("pos").cast("int").alias(S.START),
-            F.max("pos").cast("int").alias(S.END),
+            F.min(S.START).cast("int").alias(S.START),
+            F.max(S.END).cast("int").alias(S.END),
             F.concat_ws(
                 "",
                 F.transform(
                     F.array_sort(
                         F.collect_list(
-                            F.struct(F.col("pos"), F.coalesce(F.col(S.REF), F.lit("")).alias("r"))
+                            F.struct(
+                                F.col(S.START),
+                                F.coalesce(F.col(S.REF), F.lit("")).alias("r"),
+                            )
                         )
                     ),
                     lambda x: x["r"],
@@ -855,8 +668,6 @@ def _pileup_sparse(
     Output is identical to the dense path (verified by the oracle parity
     suite); only the plan differs.
     """
-    from sequila_spark.operators.coverage import coverage as _coverage
-
     if use_cigar is None:
         use_cigar = S.CIGAR in reads.columns
     cov = _coverage(reads, mode="bases", use_cigar=use_cigar).select(
@@ -871,18 +682,29 @@ def _pileup_sparse(
     )
     # collation-based case-insensitive compare: no per-row UTF8String
     # allocation on the 165M-row hot filter (see _ci_eq)
-    mism = per_base.withColumn(
-        "ref_base", ref(F.col(S.CONTIG), F.col("pos"))
-    ).where(~_ci_eq(F.col("base"), F.col("ref_base")))
+    mism = per_base.where(~_ci_eq(F.col("base"), ref(F.col(S.CONTIG), F.col("pos"))))
+    return _sparse_tail(
+        cov, mism.select(S.CONTIG, "pos", "base"), alts, ref(F.col(S.CONTIG), F.col("pos"))
+    )
+
+
+def _sparse_tail(cov: DataFrame, mism: DataFrame, alts: bool, ref: Column) -> DataFrame:
+    """The tail both sparse pileups share: mismatch rows (contig, pos,
+    base[, ref_base]) counted per (contig, pos, base), rolled up per
+    (contig, pos) into countNonRef (and alts) — ``ref_base``, when
+    present, carried through both as its max — then left-joined onto the
+    per-base coverage rows (contig, pos, coverage): countRef = coverage -
+    countNonRef.  ``ref`` is the output ref column over the joined rows."""
     # ONE shuffle for both aggregations below: HashPartitioning(contig,pos)
     # satisfies the clustering of groupBy(contig,pos,base) AND of the
     # (contig,pos) rollup, so EnsureRequirements inserts no second
     # exchange (two exchanges of the mismatch set collapse to one)
     mism = mism.repartition(F.col(S.CONTIG), F.col("pos"))
-    g1 = mism.groupBy(S.CONTIG, "pos", "base").agg(F.count("*").cast("int").alias("cnt"))
-    alt_agg = [
-        F.sum("cnt").cast("int").alias(S.COUNT_NONREF),
-    ]
+    carried = [F.max("ref_base").alias("ref_base")] if "ref_base" in mism.columns else []
+    g1 = mism.groupBy(S.CONTIG, "pos", "base").agg(
+        F.count("*").cast("int").alias("cnt"), *carried
+    )
+    alt_agg = [F.sum("cnt").cast("int").alias(S.COUNT_NONREF), *carried]
     if alts:
         alt_agg.append(
             F.map_from_entries(
@@ -897,7 +719,7 @@ def _pileup_sparse(
         F.col(S.CONTIG),
         F.col("pos").cast("int").alias(S.START),
         F.col("pos").cast("int").alias(S.END),
-        ref(F.col(S.CONTIG), F.col("pos")).alias(S.REF),
+        ref.alias(S.REF),
         F.col(S.COVERAGE).cast("int").alias(S.COVERAGE),
         (F.col(S.COVERAGE) - nonref).cast("int").alias(S.COUNT_REF),
         nonref.alias(S.COUNT_NONREF),

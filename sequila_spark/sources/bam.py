@@ -516,7 +516,6 @@ def read_bam_native(
     typed_tags: bool = False,
     with_ordinal: bool = False,
     columns: list[str] | None = None,
-    with_blocks: bool = False,
 ) -> DataFrame:
     """Decode BAM with the pure-Python BGZF/BAM/BAI codec (sources/bamcodec
     — no pysam/htslib needed), split into genomic-chunk spans: the driver
@@ -552,20 +551,16 @@ def read_bam_native(
     fed to Spark as columnar RecordBatches via ``mapInArrow``: ~20x the
     per-core throughput of the scalar ``bamcodec.parse_records``, which
     stays only as the tests' reference.  A file cut inside a record or a
-    BGZF block raises ValueError naming the file instead of yielding fewer
-    rows (a cut between blocks that splits no record is not detected: the
-    EOF marker is not yet required).
+    BGZF block, a file without the BGZF EOF marker and an index offset
+    past the end of the file raise ValueError naming the file instead of
+    yielding fewer rows.
 
     ``columns`` prunes the DECODE itself: mapInArrow is
     opaque to Catalyst's column pruning, so a caller that only needs
     position/flag columns passes them here and the codec never renders
     seq/qual/qname/tags bytes — the manual analog of parquet ReadSchema
     pruning, and of htsjdk's lazy per-field decode (the reference relies
-    on both).  ``with_blocks=True`` appends
-    ``__blocks list<struct<s:int,e:int>>`` — per-read M/=/X aligned
-    blocks computed vectorized from the raw cigar ops at decode time
-    (Read.scala:27-54's getAlignmentBlocks); operators/coverage consumes
-    it directly and skips its SQL cigar walk.
+    on both).
 
     Pruning interacts with downstream feature detection: filter_reads /
     coverage apply their flag/mapq predicates only when those columns are
@@ -594,8 +589,6 @@ def read_bam_native(
             )
     keep = [c for c in _COL_TYPES if columns is None or c in columns]
     schema_str = ", ".join(f"{c} {_COL_TYPES[c]}" for c in keep)
-    if with_blocks:
-        schema_str += ", __blocks array<struct<s:int,e:int>>"
     if with_ordinal:
         schema_str += ", __ord long"
 
@@ -615,7 +608,6 @@ def read_bam_native(
                 with_tags=with_tags,
                 with_ordinal=with_ordinal,
                 columns=keep if columns is not None else None,
-                with_blocks=with_blocks,
             )
 
     groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
@@ -623,7 +615,7 @@ def read_bam_native(
     if S.CONTIG in keep:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     out = with_typed_tags(df) if typed_tags else df
-    _attach_bam_provenance(out, path, chunk, columns=columns, with_blocks=with_blocks)
+    _attach_bam_provenance(out, path, chunk, columns=columns)
     return out
 
 
@@ -633,7 +625,6 @@ def _attach_bam_provenance(
     chunk: int,
     *,
     columns: list[str] | None,
-    with_blocks: bool,
 ) -> None:
     """Stamp reader provenance on a read_bam_native result so
     operators.coverage can auto-route the declarative
@@ -648,9 +639,9 @@ def _attach_bam_provenance(
     df._sequila_bam_source = {
         "path": path,
         "chunk": chunk,
-        # aligned-block semantics require the cigar walk (or decode-time
-        # blocks); span-only relations must not fuse
-        "has_cigar": columns is None or S.CIGAR in columns or with_blocks,
+        # aligned-block semantics require the cigar walk; span-only
+        # relations must not fuse
+        "has_cigar": columns is None or S.CIGAR in columns,
         # filter pushdown parity: the declarative filter applies flag/mapq
         # predicates only when those columns exist on the relation
         "has_flag": columns is None or S.FLAG in columns,
@@ -672,8 +663,9 @@ def read_bam_coverage_events(
     decode batch (sources/bamvec.iter_span_cov_events).  Feed the result
     to ``operators.coverage.coverage_from_events`` with the SAME
     chunk_size — together they compute exactly
-    ``coverage(read_bam_native(..., with_blocks=True), chunk_size=...)``
-    while shuffling ~10x fewer rows and rendering zero strings: the
+    ``coverage(read_bam_native(...), chunk_size=..., fuse=False)`` (the
+    declarative plan over the cigar column) while shuffling ~10x fewer
+    rows and rendering zero strings: the
     per-read columns never leave the decode task, the way the reference
     fuses coverage into its scan partitions (pileup/PileupStrategy.scala)
     — here as an opt-in reader, with the declarative operator unchanged
@@ -1119,23 +1111,17 @@ def read_bam(
     ref_path: str | None = None,
     chunk: int = 10_000_000,
     columns: list[str] | None = None,
-    with_blocks: bool = False,
 ) -> DataFrame:
     """Decode BAM/CRAM in tasks of packed genomic chunks/containers.  Plain BAM
     and CRAM 3.0 go through the native pure-Python codecs; CRAM files using
     codecs outside the native set fall back to pysam when available.
 
-    ``columns``/``with_blocks`` (BAM only) push column pruning and
-    aligned-block extraction into the decode itself — see
+    ``columns`` pushes column pruning into the decode itself — see
     read_bam_native; an analytics-only caller (coverage, read counting)
     should pass the positional columns it needs and skip seq/qual/tag
     rendering entirely."""
     if not path.endswith(".cram"):
-        return read_bam_native(
-            spark, path, chunk=chunk, columns=columns, with_blocks=with_blocks
-        )
-    if with_blocks:
-        raise ValueError("with_blocks extraction is BAM-only for now")
+        return read_bam_native(spark, path, chunk=chunk, columns=columns)
     try:
         return read_cram_native(spark, path, ref_path=ref_path, columns=columns)
     except NotImplementedError:

@@ -49,7 +49,13 @@ LINEAR_WINDOW = 16384
 
 class BgzfReader:
     """Sequential reader over decompressed BGZF bytes, seekable to a
-    virtual offset.  Each BGZF block is one complete gzip member."""
+    virtual offset.  Each BGZF block is one complete gzip member.
+
+    The end of the data is checked: a nonzero virtual offset at or past
+    the end of the file raises, and so does a read that reaches the end of
+    the file when the last block was not the EOF marker (SAMv1 §4.1.2) —
+    after the bytes before that end have been returned, so a caller sees
+    a record cut at the end before the missing marker."""
 
     def __init__(self, raw: BinaryIO, voffset: int = 0):
         self._raw = raw
@@ -57,6 +63,17 @@ class BgzfReader:
         self._pos = 0
         self._coff = voffset >> 16  # compressed offset of the next block
         self._name = getattr(raw, "name", "stream")
+        self._marker = False  # the last block read was the EOF marker
+        if voffset:
+            size = raw.seek(0, os.SEEK_END)
+            if self._coff >= size:
+                # the block the offset names is cut away whole: phrased as
+                # a block cut inside its header is
+                raise ValueError(
+                    f"truncated BGZF block at compressed offset {self._coff} "
+                    f"of {self._name}: virtual offset {voffset} starts past "
+                    f"the end of the file ({size} bytes)"
+                )
         raw.seek(self._coff)
         skip = voffset & 0xFFFF
         if skip:
@@ -100,6 +117,7 @@ class BgzfReader:
                 f"{12 + len(extra) + len(rest)} of BSIZE+1 = {bsize + 1} bytes"
             )
         block = header[:12] + extra + rest
+        self._marker = block == BGZF_EOF
         # libdeflate when the system has it (htslib's own accelerator,
         # ~2.3x zlib here), zlib otherwise — identical bytes either way;
         # both check the member's CRC32 and ISIZE
@@ -117,6 +135,12 @@ class BgzfReader:
         while need > 0:
             if self._pos >= len(self._buf):
                 if not self._fill():
+                    if not self._marker and need == n:
+                        raise ValueError(
+                            f"BGZF data of {self._name} ends at compressed "
+                            f"offset {self._coff} without the 28-byte BGZF "
+                            "EOF marker"
+                        )
                     break
                 if not self._buf:  # EOF marker block (empty payload)
                     continue

@@ -282,20 +282,6 @@ def cigar_text_to_ops(
     return cig_u32, op_cum
 
 
-def _blocks_column(
-    cig_u32: np.ndarray, op_cum: np.ndarray, pos0: np.ndarray
-) -> pa.Array:
-    """Aligned-block list column as ``list<struct<s:int, e:int>>``."""
-    bs, be, _, per_rec = _blocks_raw(cig_u32, op_cum, pos0)
-    offsets = np.zeros(len(per_rec) + 1, dtype=np.int32)
-    np.cumsum(per_rec, out=offsets[1:])
-    struct = pa.StructArray.from_arrays(
-        [pa.array(bs.astype(np.int32)), pa.array(be.astype(np.int32))],
-        ["s", "e"],
-    )
-    return pa.ListArray.from_arrays(pa.array(offsets), struct)
-
-
 # canonical column order; 'want' prunes the expensive renders
 _ALL_COLS = (
     "sample_id", "qname", "flag", "contig", "pos_start", "pos_end",
@@ -332,7 +318,6 @@ def _decode_batch(
     with_ordinal: bool,
     ord_base: int,
     want: frozenset | None = None,
-    with_blocks: bool = False,
 ) -> pa.RecordBatch:
     """Decode one batch of records into an Arrow RecordBatch, columns in
     canonical read_bam_native order, pruned to ``want``."""
@@ -367,18 +352,17 @@ def _decode_batch(
         else:
             out["qname"] = _utf8_array(qn_vals, qn_cum)
 
-    # cigar ops drive pos_end and the blocks column too
-    need_ops = with_blocks or not want.isdisjoint(("cigar", "pos_end"))
-    if need_ops:
+    # cigar ops drive pos_end too
+    if not want.isdisjoint(("cigar", "pos_end")):
         cg_vals, cg_cum = _ragged_take(u8, cg_off, cg_bytes)
         cig_u32 = np.ascontiguousarray(cg_vals).view("<u4")
         op_cum = cg_cum // 4
-    if "cigar" in want:
-        out["cigar"], ref_len = _cigar_column(cig_u32, op_cum)
-    elif need_ops:
-        ref_len = _segment_sums(
-            (cig_u32 >> 4).astype(np.int64) * _REF_CONSUME[cig_u32 & 0xF], op_cum
-        )
+        if "cigar" in want:
+            out["cigar"], ref_len = _cigar_column(cig_u32, op_cum)
+        else:
+            ref_len = _segment_sums(
+                (cig_u32 >> 4).astype(np.int64) * _REF_CONSUME[cig_u32 & 0xF], op_cum
+            )
 
     if "seq" in want:
         # unpack nibbles over the whole batch, then compact away the pad
@@ -475,9 +459,6 @@ def _decode_batch(
 
     cols = [out[c] for c in _ALL_COLS if c in want]
     names = [c for c in _ALL_COLS if c in want]
-    if with_blocks:
-        cols.append(_blocks_column(cig_u32, op_cum, pos0))
-        names.append("__blocks")
     if with_ordinal:
         cols.append(pa.array(ord_base + np.arange(n, dtype=np.int64)))
         names.append("__ord")
@@ -551,25 +532,28 @@ def _span_records(path: str, span, batch_bytes: int):
     checked here, before any consumer gathers: the offset scan only checks
     block_size, and corrupt inner fields (l_qname 0, negative l_seq,
     n_cigar/l_seq overstating the record) would drive the C memcpy gather
-    out of bounds.  A stream that ends inside a record raises."""
+    out of bounds.  A stream that ends inside a record raises; so does
+    one that ends without the BGZF EOF marker (BgzfReader)."""
     with open(path, "rb") as fh:
         st, region, unmapped_only = _open_span(fh, span)
         carry = b""
         while True:
             chunk = st.read(batch_bytes)
-            if not chunk:
-                if carry:
-                    raise ValueError(
-                        f"truncated BAM {path}: span {span} ends inside a "
-                        f"record ({len(carry)} bytes left over)"
-                    )
-                return
             data = carry + chunk if carry else chunk
+            if not data:
+                return
             try:
                 offs, end = _scan_offsets(data)
             except ValueError as exc:
                 raise ValueError(f"{exc} (file {path})") from None
             carry = data[end:]
+            # a short read is the end of the data: checked for a cut
+            # record here, the next read checks the BGZF EOF marker
+            if carry and len(chunk) < batch_bytes:
+                raise ValueError(
+                    f"truncated BAM {path}: span {span} ends inside a "
+                    f"record ({len(carry)} bytes left over)"
+                )
             if not len(offs):
                 continue
             u8 = np.frombuffer(data, dtype=np.uint8)
@@ -628,7 +612,6 @@ def iter_span_batches(
     with_tags: bool = True,
     with_ordinal: bool = False,
     columns: list[str] | None = None,
-    with_blocks: bool = False,
     batch_bytes: int = 8 << 20,
 ):
     """Yield Arrow RecordBatches for one decode span (same span model as
@@ -640,9 +623,7 @@ def iter_span_batches(
     _span_records.
 
     ``columns`` prunes the decode itself (htsjdk-style lazy fields: a
-    skipped column's bytes are never rendered); ``with_blocks`` appends a
-    ``__blocks list<struct<s,e>>`` column of M/=/X aligned blocks computed
-    from the raw cigar ops — coverage consumers skip the SQL cigar walk."""
+    skipped column's bytes are never rendered)."""
     names = [nm for nm, _ in refs]
     ref_take = pa.array(names + [None], type=pa.string())
     nref = len(names)
@@ -658,7 +639,6 @@ def iter_span_batches(
             with_ordinal=with_ordinal,
             ord_base=(span_idx << 32) | n_out,
             want=want,
-            with_blocks=with_blocks,
         )
         n_out += batch.num_rows
         yield batch
@@ -694,8 +674,8 @@ def iter_span_cov_events(
     operators.coverage.coverage_from_events completes the global
     aggregation (same chunk_size required).  ``flag_mask``/``min_mapq``
     apply filter_reads' predicates at decode time.  Unmapped records
-    carry no cigar ops, so they contribute nothing — identical to the
-    __blocks-based batch path."""
+    carry no cigar ops, so they contribute nothing — as in the
+    declarative coverage() over the same reads' cigar column."""
     if chunk_size < 32 or (1 << 31) // chunk_size + 1 >= (1 << 62) // (
         chunk_size + 2
     ):

@@ -11,6 +11,7 @@ must raise through both span decoders and the Spark readers.
 """
 
 import os
+import shutil
 
 import pytest
 
@@ -162,50 +163,6 @@ def test_pruned_decode_matches_full():
     # rnext pnext tlen seq qual tags
     want = [(r[0], r[2], r[3], r[4], r[10]) for r in recs]
     assert got == want
-
-
-@pytest.mark.skipif(not os.path.exists(MDBAM), reason="no reference BAM")
-def test_with_blocks_matches_sql_cigar_walk(spark):
-    """__blocks (decode-time vectorized M/=/X extraction) explodes to the
-    exact (start, end) block multiset the SQL CIGAR fold produces on the
-    same real reads — the equivalence operators/coverage relies on."""
-    from collections import Counter
-
-    from sequila_spark.operators.coverage import aligned_blocks
-    from sequila_spark.sources.bam import read_bam_native
-
-    with_b = read_bam_native(
-        spark, MDBAM, with_tags=False,
-        columns=["qname", "contig", "pos_start", "pos_end"], with_blocks=True,
-    )
-    fast = Counter(
-        (r["qname"], r["contig"], r["__sq_bs"], r["__sq_be"])
-        for r in aligned_blocks(with_b).collect()
-    )
-    full = read_bam_native(spark, MDBAM, with_tags=False).drop("__blocks")
-    slow = Counter(
-        (r["qname"], r["contig"], r["__sq_bs"], r["__sq_be"])
-        for r in aligned_blocks(full, use_cigar=True).collect()
-    )
-    assert fast == slow and len(fast) > 0
-
-
-@pytest.mark.skipif(not os.path.exists(MDBAM), reason="no reference BAM")
-def test_blocks_respects_explicit_use_cigar_false(spark):
-    """An explicit use_cigar=False must win over a __blocks column:
-    whole-span (pos_start..pos_end) rows, not per-M-block rows."""
-    from sequila_spark.operators.coverage import aligned_blocks
-    from sequila_spark.sources.bam import read_bam_native
-
-    df = read_bam_native(
-        spark, MDBAM, with_tags=False,
-        columns=["qname", "contig", "pos_start", "pos_end"], with_blocks=True,
-    )
-    rows = aligned_blocks(df, use_cigar=False)
-    bad = rows.where(
-        (rows["__sq_bs"] != rows["pos_start"]) | (rows["__sq_be"] != rows["pos_end"])
-    ).count()
-    assert bad == 0 and rows.count() == df.count()
 
 
 def _span_decoders(path, refs):
@@ -388,6 +345,109 @@ def test_damaged_bam_raises_through_spark(spark, tmp_path, bench, damage):
         read_bam_native(spark, path).count()
     with pytest.raises(Exception, match=error):
         coverage(read_bam_native(spark, path), mode="blocks").count()
+
+
+def _eof_copies(gen, tmp_path):
+    """The 2,000-read generated BAM written with a BGZF block that starts
+    exactly at the first record of its fourth contig, and two damaged
+    copies carrying the intact file's .bai: cut at that block, so the
+    fourth to sixth contigs' spans start past the end of the file and no
+    record is split, and with only the 28-byte EOF marker dropped."""
+    import numpy as np
+
+    reads = gen.make_reads(5, 2_000)
+    body, starts = gen.encode_records(reads)
+    first4 = int(np.argmax(reads.cid == 3))
+    path = str(tmp_path / "whole.bam")
+    voff = []
+    with open(path, "wb") as f:
+        w = B.BgzfWriter(f, level=1)
+        B.write_bam_header(w, gen.CONTIGS)
+        for k in range(len(reads)):
+            if k == first4:
+                w.flush_blocks()
+                cut = w.tell_virtual() >> 16
+            voff.append(w.tell_virtual())
+            w.write(body[starts[k]:starts[k + 1]])
+        w.flush_blocks()
+        voff.append(w.tell_virtual())
+        w.close()
+    gen._write_bai(path + ".bai", reads, np.array(voff, dtype=np.int64))
+    raw = open(path, "rb").read()
+    assert raw.endswith(B.BGZF_EOF)
+    out = {}
+    for name, data in {"past_end": raw[:cut], "no_eof": raw[: -len(B.BGZF_EOF)]}.items():
+        out[name] = str(tmp_path / f"{name}.bam")
+        with open(out[name], "wb") as f:
+            f.write(data)
+        shutil.copy(path + ".bai", out[name] + ".bai")
+    return path, out
+
+
+# case -> (error of a whole-file read, error of a span that starts past the
+# end or reads to it)
+_EOF_ERRORS = {
+    "past_end": ("without the 28-byte BGZF EOF marker",
+                 "virtual offset \\d+ .* past the end of the file|without the 28-byte BGZF EOF marker"),
+    "no_eof": ("without the 28-byte BGZF EOF marker", "without the 28-byte BGZF EOF marker"),
+}
+
+
+def _decoded_rows(decoder, path, refs, span):
+    if decoder == "rows":
+        batches = BV.iter_span_batches(path, refs, "S", span)
+    else:
+        batches = BV.iter_span_cov_events(path, refs, span, chunk_size=16_384)
+    return sum(b.num_rows for b in batches)
+
+
+@pytest.mark.parametrize("case", sorted(_EOF_ERRORS))
+def test_bgzf_end_of_data_raises_in_both_decoders(tmp_path, bench, case):
+    """A BAM that ends without the EOF marker, or whose BAI points past
+    its end, raises in the row and the events decoder: read whole, and
+    span by span, where every span either decodes exactly the rows it
+    decodes from the intact file or raises naming the file."""
+    import re
+
+    gen, _ = bench
+    whole, paths = _eof_copies(gen, tmp_path)
+    path, (whole_error, span_error) = paths[case], _EOF_ERRORS[case]
+    refs, recs = gen.read_bam_records(whole)
+    spans = B.plan_spans(refs, B.read_bai_linear(whole + ".bai"), 10_000_000)
+    assert _decoded_rows("rows", whole, refs, None) == len(recs) == 2_000
+    for decoder in ("rows", "events"):
+        with pytest.raises(ValueError, match=whole_error):
+            _decoded_rows(decoder, path, refs, None)
+        raised = []
+        for span in spans:
+            intact = _decoded_rows(decoder, whole, refs, span)
+            try:
+                got = _decoded_rows(decoder, path, refs, span)
+            except ValueError as exc:
+                assert path in str(exc)
+                raised.append(str(exc))
+                continue
+            assert got == intact, f"{decoder} span {span}: {got} of {intact} rows, no error"
+        assert raised and all(re.search(span_error, m) for m in raised), raised
+    if case == "past_end":
+        assert any("past the end" in m for m in raised), raised
+
+
+@pytest.mark.parametrize("case", sorted(_EOF_ERRORS))
+def test_bgzf_end_of_data_raises_through_spark(spark, tmp_path, bench, case):
+    """read_bam_native(...).count() over the same files fails instead of
+    counting fewer rows: read whole (no .bai) and by BAI span."""
+    from sequila_spark.sources.bam import read_bam_native
+
+    gen, _ = bench
+    _, paths = _eof_copies(gen, tmp_path)
+    indexed = paths[case]
+    unindexed = str(tmp_path / f"{case}_unindexed.bam")
+    shutil.copy(indexed, unindexed)
+    whole_error, span_error = _EOF_ERRORS[case]
+    for path, error in ((unindexed, whole_error), (indexed, span_error)):
+        with pytest.raises(Exception, match=error):
+            read_bam_native(spark, path).count()
 
 
 def test_cigar_text_to_ops_parses_like_python():

@@ -5,6 +5,7 @@ chunk-boundary stitching, windows weighting, partitioning invariance."""
 from pyspark.sql import functions as F
 
 from sequila_spark.operators.coverage import aligned_blocks, coverage
+from tests.test_bam_vec import MDBAM, SLICE
 
 
 def reads_df(spark, rows):
@@ -144,81 +145,139 @@ def test_boundary_real_change_point_not_merged(spark):
     assert got == [("1", 1, 10, 2), ("1", 11, 20, 1)]
 
 
-def test_coverage_blocks_walks_matches_union(spark):
-    """The fused multi-walk pipeline (one tagged explode, one events
-    aggregation, one window — r16) must be row-identical to the union of
-    per-walk coverage() calls, on reads where the walks genuinely differ
-    (mixed CIGARs: deletions split blocks) and across chunk boundaries."""
-    from sequila_spark.operators.coverage import coverage_blocks_walks
+def _walk_blocks(row, use_cigar):
+    """A read's aligned blocks, walked here op by op: M/=/X emit, D/N
+    advance the reference, I/S/H/P consume none of it; no CIGAR, no
+    blocks."""
+    import re
 
-    df = reads_df(
-        spark,
-        [
-            ("r1", "1", 1, 30, "10M5D15M"),   # cigar walk splits; span does not
-            ("r2", "1", 8, 27, "20M"),         # crosses chunk boundary at 10/20
-            ("r3", "2", 5, 24, "5S10M3I10M"),  # soft-clip + insertion
-            ("r4", "2", 15, 34, None),         # no cigar: span walk only; cigar walk drops the read
-        ],
-    )
-    # read_bam_native(with_blocks=True) shape: the decoder's aligned blocks
-    # and no cigar column, so the cigar walk can only come from __blocks
-    with_blocks = df.withColumn(
-        "__blocks",
-        F.expr(
-            "CASE qname WHEN 'r1' THEN array(named_struct('s', 1, 'e', 10), named_struct('s', 16, 'e', 30)) "
-            "WHEN 'r2' THEN array(named_struct('s', 8, 'e', 27)) "
-            "WHEN 'r3' THEN array(named_struct('s', 5, 'e', 14), named_struct('s', 15, 'e', 24)) "
-            "END"
-        ),
-    ).drop("cigar")
-    key = lambda r: (r["walk"], r["contig"], r["pos_start"], r["pos_end"], r["coverage"])  # noqa: E731
-    results = []
-    for reads in (df, with_blocks):
-        union = (
-            coverage(reads, mode="blocks", use_cigar=False, chunk_size=10)
-            .select(F.lit("span").alias("walk"), "*")
-            .unionByName(
-                coverage(reads, mode="blocks", use_cigar=True, chunk_size=10).select(
-                    F.lit("cigar").alias("walk"), "*"
-                )
-            )
-        )
-        fused = sorted(map(key, coverage_blocks_walks(reads, chunk_size=10).collect()))
-        assert fused == sorted(map(key, union.collect()))
-        results.append(fused)
-    # the decoder's blocks give the same rows as the CIGAR walk
-    assert results[0] == results[1]
-    # both walks present and differ where the deletion splits the block
-    assert {k[0] for k in results[0]} == {"span", "cigar"}
+    _, _, start, end, cigar = row
+    if not use_cigar:
+        return [(start, end)]
+    out, r = [], start
+    for n, op in re.findall(r"(\d+)([MIDNSHP=X])", cigar or ""):
+        if op in "M=X":
+            out.append((r, r + int(n) - 1))
+        if op in "MDN=X":
+            r += int(n)
+    return out
 
 
-def test_fused_coverage_events_matches_batch_operator(spark):
-    """read_bam_coverage_events + coverage_from_events must produce exactly
-    the rows coverage(read_bam_native(..., with_blocks=True)) produces —
-    unfiltered AND with the reference's 1796/mapq filter, on both real
-    fixtures (incl. the dense-bincount and sorted event paths)."""
+def _runs_of_depth(rows, use_cigar):
+    """Maximal runs of equal non-zero depth from a per-base count."""
+    depth = {}
+    for row in rows:
+        for s, e in _walk_blocks(row, use_cigar):
+            for pos in range(s, e + 1):
+                depth[(row[1], pos)] = depth.get((row[1], pos), 0) + 1
+    runs = []
+    for (contig, pos), cov in sorted(depth.items()):
+        last = runs[-1] if runs else None
+        if last and last[0] == contig and last[2] == pos - 1 and last[3] == cov:
+            runs[-1] = (contig, last[1], pos, cov)
+        else:
+            runs.append((contig, pos, pos, cov))
+    return runs
+
+
+def test_coverage_walks_match_per_base_count(spark):
+    """Both block walks (span and CIGAR) against a per-base count: reads
+    whose walks differ (a deletion splits one block, a soft clip and an
+    insertion shift none), one read across the chunk boundaries at 10 and
+    20, and one read without a CIGAR, which only the span walk covers."""
+    rows = [
+        ("r1", "1", 1, 30, "10M5D15M"),
+        ("r2", "1", 8, 27, "20M"),
+        ("r3", "2", 5, 24, "5S10M3I10M"),
+        ("r4", "2", 15, 34, None),
+    ]
+    df = reads_df(spark, rows)
+    got = {
+        use_cigar: blocks_of(coverage(df, mode="blocks", use_cigar=use_cigar, chunk_size=10))
+        for use_cigar in (False, True)
+    }
+    for use_cigar, blocks in got.items():
+        assert blocks == _runs_of_depth(rows, use_cigar), f"use_cigar={use_cigar}"
+    assert got[True] != got[False]
+
+
+def _digest(df, keys):
+    """contig -> tuple of integer sums over ``keys`` (name -> Column)."""
+    out = df.groupBy("contig").agg(*[v.alias(k) for k, v in keys.items()])
+    return {r["contig"]: tuple(int(r[k]) for k in keys) for r in out.collect()}
+
+
+def test_declarative_paths_match_numpy_truth(spark, gen_cohort, bench):
+    """The declarative coverage and pileup plans over the generated cohort
+    (70% gapless, 10% soft-clipped, 10% one deletion, 10% one insertion)
+    against perfbench's NumPy truth, which shares no code with the
+    product: blocks over the pooled cohort, windows over one sample, and
+    the sparse and dense pileup of one sample."""
     import os
 
-    import pytest as _pytest
+    from sequila_spark.operators.pileup import pileup
+    from sequila_spark.sources.bam import read_bam_native
 
+    gen, truth = bench
+    cohort, samples = gen_cohort
+    s0 = os.path.join(cohort, "S0.bam")
+
+    s, e, c = (F.col(k).cast("long") for k in ("pos_start", "pos_end", "coverage"))
+    blocks = coverage(read_bam_native(spark, cohort), mode="blocks", fuse=False)
+    got = _digest(blocks, {
+        "n": F.count("*"),
+        "bases": F.sum((e - s + 1) * c),
+        "h": F.sum(truth.block_hash(s, e, c)),
+    })
+    assert got == truth.coverage_blocks(samples)
+
+    win = coverage(read_bam_native(spark, s0), mode="windows", window_size=1000, fuse=False)
+    # each window's mean times its length is the integer depth sum
+    got = {k: v[0] for k, v in _digest(
+        win, {"s": F.sum(F.round(F.col("coverage") * 1000))}
+    ).items()}
+    assert got == truth.window_sums(samples[0])
+
+    expected = truth.pileup(samples[0])
+    for strategy in ("sparse", "dense"):
+        p = pileup(read_bam_native(spark, s0), ref=gen.ref_base_col, strategy=strategy)
+        got = _digest(p, {
+            "positions": F.count("*"),
+            "coverage": F.sum("coverage"),
+            "ref": F.sum("countRef"),
+            "nonref": F.sum("countNonRef"),
+            "pos_nonref": F.sum(F.col("pos_start").cast("long") * F.col("countNonRef")),
+            **{b: F.sum(F.coalesce(F.col("alts")[b], F.lit(0))) for b in "ACGT"},
+        })
+        assert got == expected, strategy
+
+
+def _fused_inputs(gen_cohort, *paths):
+    """The generated cohort's two indexed BAMs, then each reference BAM
+    that exists."""
+    import os
+
+    cohort, samples = gen_cohort
+    return [os.path.join(cohort, f"{r.sample}.bam") for r in samples] + [
+        p for p in paths if os.path.exists(p)
+    ]
+
+
+def test_fused_coverage_events_matches_batch_operator(spark, gen_cohort):
+    """read_bam_coverage_events + coverage_from_events must produce exactly
+    the rows the declarative coverage(read_bam_native(...), fuse=False)
+    produces from the cigar column — unfiltered AND with the reference's
+    1796/mapq filter, on the generated cohort and the real fixtures
+    (incl. the dense-bincount and sorted event paths)."""
     from sequila_spark.sources import read_bam_native
     from sequila_spark.sources.bam import read_bam_coverage_events
     from sequila_spark.operators.coverage import coverage_from_events
 
-    bams = [
-        "/root/reference/src/test/resources/NA12878.slice.bam",
-        "/root/reference/src/test/resources/multichrom/mdbam/"
-        "NA12878.multichrom.md.bam",
-    ]
-    bams = [b for b in bams if os.path.exists(b)]
-    if not bams:
-        _pytest.skip("no reference BAMs")
-    for bam in bams:
+    for bam in _fused_inputs(gen_cohort, SLICE, MDBAM):
         a = coverage(
             read_bam_native(
                 spark, bam, with_tags=False,
-                columns=["sample_id", "contig", "pos_start", "pos_end"],
-                with_blocks=True,
+                columns=["sample_id", "contig", "pos_start", "pos_end", "cigar"],
             ),
             fuse=False,
         )
@@ -228,8 +287,7 @@ def test_fused_coverage_events_matches_batch_operator(spark):
             read_bam_native(
                 spark, bam, with_tags=False,
                 columns=["sample_id", "contig", "pos_start", "pos_end",
-                         "flag", "mapq"],
-                with_blocks=True,
+                         "flag", "mapq", "cigar"],
             ),
             flag_mask=1796, min_mapq=10, fuse=False,
         )
@@ -239,68 +297,52 @@ def test_fused_coverage_events_matches_batch_operator(spark):
         assert sorted(map(tuple, c.collect())) == sorted(map(tuple, d.collect()))
 
 
-def test_fused_coverage_events_chunk_sizes(spark):
+def test_fused_coverage_events_chunk_sizes(spark, gen_cohort):
     """The fused path must be chunk_size-invariant (clip + merge round
     trip) including TINY chunks that force the boundary-end bincount and
     multi-chunk spans."""
-    import os
-
-    import pytest as _pytest
-
     from sequila_spark.sources.bam import read_bam_coverage_events
     from sequila_spark.operators.coverage import coverage_from_events
 
-    bam = "/root/reference/src/test/resources/NA12878.slice.bam"
-    if not os.path.exists(bam):
-        _pytest.skip("no reference BAM")
-    ref = sorted(
-        map(tuple, coverage_from_events(
-            read_bam_coverage_events(spark, bam)).collect())
-    )
-    for cs in (64, 1009, 1_000_000):
-        got = sorted(
+    for bam in _fused_inputs(gen_cohort, SLICE):
+        ref = sorted(
             map(tuple, coverage_from_events(
-                read_bam_coverage_events(spark, bam, chunk_size=cs),
-                chunk_size=cs,
-            ).collect())
+                read_bam_coverage_events(spark, bam)).collect())
         )
-        assert got == ref, f"chunk_size={cs}"
+        for cs in (64, 1009, 1_000_000):
+            got = sorted(
+                map(tuple, coverage_from_events(
+                    read_bam_coverage_events(spark, bam, chunk_size=cs),
+                    chunk_size=cs,
+                ).collect())
+            )
+            assert got == ref, f"chunk_size={cs}"
 
 
-def test_fused_events_chunk_size_mismatch_is_loud(spark):
+def test_fused_events_chunk_size_mismatch_is_loud(spark, gen_cohort):
     """Events clipped at one chunk_size consumed with another must raise
     (a silent mismatch would leave boundary splits unmerged)."""
-    import os
-
     import pytest as _pytest
 
     from sequila_spark.sources.bam import read_bam_coverage_events
     from sequila_spark.operators.coverage import coverage_from_events
 
-    bam = "/root/reference/src/test/resources/NA12878.slice.bam"
-    if not os.path.exists(bam):
-        _pytest.skip("no reference BAM")
-    ev = read_bam_coverage_events(spark, bam, chunk_size=16_384)
-    with _pytest.raises(Exception, match="different chunk_size"):
-        coverage_from_events(ev, chunk_size=1_000_000).count()
+    for bam in _fused_inputs(gen_cohort, SLICE):
+        ev = read_bam_coverage_events(spark, bam, chunk_size=16_384)
+        with _pytest.raises(Exception, match="different chunk_size"):
+            coverage_from_events(ev, chunk_size=1_000_000).count()
 
 
-def test_coverage_auto_fuses_native_reader(spark):
+def test_coverage_auto_fuses_native_reader(spark, gen_cohort):
     """coverage(read_bam_native(...)) must auto-plan the fused
     decode->events path (the per-read columns never enter the plan), stay
     row-exact vs fuse=False, and NOT fuse once the relation is
     transformed or the needed columns are pruned."""
-    import os
+    import re
 
     import pytest as _pytest
 
     from sequila_spark.sources import read_bam_native
-
-    bam = "/root/reference/src/test/resources/NA12878.slice.bam"
-    if not os.path.exists(bam):
-        _pytest.skip("no reference BAM")
-
-    import re
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -311,39 +353,40 @@ def test_coverage_auto_fuses_native_reader(spark):
             re.search(r"MapInArrow [^\[]*\[contig#\d+, chunk#", plan(df))
         )
 
-    auto = coverage(read_bam_native(spark, bam), flag_mask=1796, min_mapq=10)
-    unfused = coverage(
-        read_bam_native(spark, bam), flag_mask=1796, min_mapq=10, fuse=False
-    )
-    # the fused scan emits (contig, chunk, pos, delta)
-    assert is_fused(auto)
-    assert not is_fused(unfused)
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, unfused.collect())
-    )
+    for bam in _fused_inputs(gen_cohort, SLICE):
+        auto = coverage(read_bam_native(spark, bam), flag_mask=1796, min_mapq=10)
+        unfused = coverage(
+            read_bam_native(spark, bam), flag_mask=1796, min_mapq=10, fuse=False
+        )
+        # the fused scan emits (contig, chunk, pos, delta)
+        assert is_fused(auto)
+        assert not is_fused(unfused)
+        assert sorted(map(tuple, auto.collect())) == sorted(
+            map(tuple, unfused.collect())
+        )
 
-    # windows mode fuses too
-    w = coverage(read_bam_native(spark, bam), mode="windows", window_size=500)
-    assert is_fused(w)
-    assert w.count() > 0
+        # windows mode fuses too
+        w = coverage(read_bam_native(spark, bam), mode="windows", window_size=500)
+        assert is_fused(w)
+        assert w.count() > 0
 
-    # a TRANSFORMED relation must not fuse (provenance does not propagate)
-    filtered = read_bam_native(spark, bam).where("mapq > 0")
-    assert not is_fused(coverage(filtered))
-    with _pytest.raises(ValueError, match="fuse=True"):
-        coverage(filtered, fuse=True)
+        # a TRANSFORMED relation must not fuse (provenance does not propagate)
+        filtered = read_bam_native(spark, bam).where("mapq > 0")
+        assert not is_fused(coverage(filtered))
+        with _pytest.raises(ValueError, match="fuse=True"):
+            coverage(filtered, fuse=True)
 
-    # pruning flag away + flag_mask: declarative filter would be a no-op,
-    # so the fused reader must not filter either -> no fusion
-    pruned = read_bam_native(
-        spark, bam, with_tags=False,
-        columns=["sample_id", "contig", "pos_start", "pos_end", "cigar"],
-    )
-    assert not is_fused(coverage(pruned, flag_mask=1796))
-    # ...but without the filter it fuses (cigar is available)
-    assert is_fused(coverage(pruned))
+        # pruning flag away + flag_mask: declarative filter would be a no-op,
+        # so the fused reader must not filter either -> no fusion
+        pruned = read_bam_native(
+            spark, bam, with_tags=False,
+            columns=["sample_id", "contig", "pos_start", "pos_end", "cigar"],
+        )
+        assert not is_fused(coverage(pruned, flag_mask=1796))
+        # ...but without the filter it fuses (cigar is available)
+        assert is_fused(coverage(pruned))
 
-    # span coverage (use_cigar=False) is a different operator: never fuse
-    assert not is_fused(
-        coverage(read_bam_native(spark, bam), use_cigar=False)
-    )
+        # span coverage (use_cigar=False) is a different operator: never fuse
+        assert not is_fused(
+            coverage(read_bam_native(spark, bam), use_cigar=False)
+        )

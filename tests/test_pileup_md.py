@@ -98,16 +98,32 @@ def test_pileup_md_counts(spark):
     assert out[104] == (3, 3, 0, {}, None)
 
 
-@pytest.mark.skipif(not os.path.exists(BAM), reason="no mdbam fixture")
-def test_pileup_md_equals_seq_vs_ref_on_real_bam(spark):
+FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "mdbam"
+)
+
+
+def _real_inputs():
+    """The MD BAM's reads and reference as the repo's parquet fixture
+    (decoded from the BAM by the native codec), then as the reference
+    project's BAM and FASTA where they exist."""
+    return ["fixture"] + (["reference"] if os.path.exists(BAM) else [])
+
+
+@pytest.mark.parametrize("source", _real_inputs())
+def test_pileup_md_equals_seq_vs_ref_on_real_bam(spark, source):
     """Two independent mismatch derivations must agree on the real MD BAM:
     pileup_md (MD walk, no genome) vs pileup (seq compared against the
     FASTA the aligner's calmd used)."""
-    from sequila_spark.sources import read_bam_native
-    from sequila_spark.sources.fasta import read_fasta_bases
+    if source == "fixture":
+        reads = spark.read.parquet(f"{FIXTURE_DIR}/reads.parquet")
+        ref = spark.read.parquet(f"{FIXTURE_DIR}/ref_bases.parquet")
+    else:
+        from sequila_spark.sources import read_bam_native
+        from sequila_spark.sources.fasta import read_fasta_bases
 
-    reads = read_bam_native(spark, BAM, chunk=2_000_000)
-    ref = read_fasta_bases(spark, FASTA)
+        reads = read_bam_native(spark, BAM, chunk=2_000_000)
+        ref = read_fasta_bases(spark, FASTA)
 
     a = {
         (r["contig"], r["pos_start"]): (
