@@ -257,23 +257,28 @@ def coverage(
     bases mode, matching the reference Coverage row schema
     (utvf/ResolveTableValuedFunctionsSeq.scala:239).
 
-    ``fuse`` (default auto): when ``reads`` is the UNTRANSFORMED result of
-    sources.read_bam_native, the plan is rewritten to the fused
-    decode->events reader (read_bam_coverage_events +
-    coverage_from_events) — same rows (pinned by
-    tests/test_coverage.py), ~10x fewer shuffled rows, zero string
-    rendering, the way the reference fuses coverage into its scan
-    (pileup/PileupStrategy.scala:37-56).  ``fuse=False`` forces the
-    declarative plan; ``fuse=True`` raises if the relation has no reader
-    provenance to fuse on.
+    ``fuse`` (default auto): when ``reads`` is a read_bam_native relation
+    by plan identity (sources.bam.reader_of: the reader's result, or a view
+    or ``spark.table`` of it; a transformed relation misses), the plan is
+    rewritten to the fused decode->events reader
+    (read_bam_coverage_events + coverage_from_events) over the registered
+    path and chunk — same rows (pinned by tests/test_coverage.py), ~10x
+    fewer shuffled rows, zero string rendering, the way the reference fuses
+    coverage into its scan (pileup/PileupStrategy.scala:37-56).  A
+    read_cram_native relation fuses through read_cram_coverage_events the
+    same way.  ``fuse=False`` forces the declarative plan; ``fuse=True``
+    raises when there is no reader relation to fuse.
     """
     if mode not in ("blocks", "bases", "windows"):
         raise ValueError(f"unsupported mode={mode!r}")
     if mode == "windows" and not window_size:
         raise ValueError("mode='windows' requires window_size")
 
-    csrc = getattr(reads, "_sequila_cram_source", None)
-    if csrc is not None and fuse is not False and csrc["columns"] is None:
+    from sequila_spark.sources.bam import reader_of
+
+    src = None if fuse is False else reader_of(reads)
+    if src is not None and src.kind == "cram" and src.options["columns"] is None:
+        opts = src.options
         if use_cigar is not False:
             # FULL CRAM fusion (r13): decode -> clipped coverage events
             # inside the container task — zero per-record strings, the
@@ -284,14 +289,14 @@ def coverage(
 
             events = read_cram_coverage_events(
                 reads.sparkSession,
-                csrc["path"],
-                ref_path=csrc["ref_path"],
+                src.path,
+                ref_path=opts["ref_path"],
                 chunk_size=chunk_size,
                 flag_mask=flag_mask,
                 min_mapq=min_mapq,
-                contig=csrc["contig"],
-                start=csrc["start"],
-                end=csrc["end"],
+                contig=opts["contig"],
+                start=opts["start"],
+                end=opts["end"],
             )
             return coverage_from_events(
                 events,
@@ -308,39 +313,46 @@ def coverage(
 
         reads = read_cram_native(
             reads.sparkSession,
-            csrc["path"],
-            ref_path=csrc["ref_path"],
-            contig=csrc["contig"],
-            start=csrc["start"],
-            end=csrc["end"],
+            src.path,
+            ref_path=opts["ref_path"],
+            contig=opts["contig"],
+            start=opts["start"],
+            end=opts["end"],
             columns=[S.FLAG, S.CONTIG, S.START, S.END, S.MAPQ],
         )
+        src = None
 
-    src = getattr(reads, "_sequila_bam_source", None)
+    bam = src is not None and src.kind == "bam"
+    cols = src.options["columns"] if bam else None
+
+    def has(c: str) -> bool:
+        return cols is None or c in cols
+
     fusable = (
-        src is not None
+        bam
         and use_cigar is not False
-        and src["has_cigar"]
+        # aligned-block semantics require the cigar walk
+        and has(S.CIGAR)
         # the declarative filter is a no-op when the column is absent —
         # the fused reader must not filter where the unfused plan cannot
-        and (flag_mask == 0 or src["has_flag"])
-        and (min_mapq == 0 or src["has_mapq"])
+        and (flag_mask == 0 or has(S.FLAG))
+        and (min_mapq == 0 or has(S.MAPQ))
     )
     if fuse is True and not fusable:
         raise ValueError(
-            "fuse=True requires an untransformed read_bam_native relation "
+            "fuse=True requires a read_bam_native relation or a view of one "
             "(with cigar/flag/mapq available for the requested filters)"
         )
-    if fusable and fuse is not False:
+    if fusable:
         from sequila_spark.sources.bam import read_bam_coverage_events
 
         events = read_bam_coverage_events(
             reads.sparkSession,
-            src["path"],
+            src.path,
             chunk_size=chunk_size,
             flag_mask=flag_mask,
             min_mapq=min_mapq,
-            chunk=src["chunk"],
+            chunk=src.options["chunk"],
         )
         return coverage_from_events(
             events,

@@ -372,24 +372,26 @@ def pileup(
     ONE such cache per session — the next baq+mate_overlap call
     unpersists the previous one.
 
-    ``fuse`` mirrors coverage(): default auto applies the reader-provenance
-    CRAM decode prune below when ``reads`` is an untransformed
-    read_cram_native relation; ``fuse=False`` keeps the full decode (a
-    plain ``.select()`` over the relation also strips the provenance);
-    ``fuse=True`` raises when there is no provenance to prune on.
+    ``fuse`` mirrors coverage(): default auto applies the CRAM decode
+    prune below when ``reads`` is a full-column read_cram_native relation
+    by plan identity (sources.bam.reader_of: the reader's result or a view
+    of it; any transformation, even a plain ``.select()``, misses);
+    ``fuse=False`` keeps the full decode; ``fuse=True`` raises when there is
+    no such relation to prune.
     """
     if strategy not in ("auto", "sparse", "dense"):
         raise ValueError(f"unknown pileup strategy: {strategy!r}")
 
-    csrc = getattr(reads, "_sequila_cram_source", None)
-    if fuse is True and (csrc is None or csrc["columns"] is not None):
+    from sequila_spark.sources.bam import reader_of
+
+    src = None if fuse is False else reader_of(reads)
+    prune = src is not None and src.kind == "cram" and src.options["columns"] is None
+    if fuse is True and not prune:
         raise ValueError(
-            "fuse=True requires an untransformed read_cram_native relation "
-            "(reader provenance carries the decode-prune contract)"
+            "fuse=True requires a full-column read_cram_native relation or a "
+            "view of one (the decode prune re-reads the registered reader)"
         )
-    if fuse is False:
-        csrc = None
-    if csrc is not None and csrc["columns"] is None:
+    if prune:
         # reader-provenance decode pruning (same contract as coverage):
         # pileup never reads tags, and qname/mate fields only under
         # mate_overlap; qual only when quals/baq ask for it — skip their
@@ -402,13 +404,14 @@ def pileup(
             need.append(S.BASEQ)
         if mate_overlap:
             need += [S.QNAME, S.RNEXT, S.PNEXT, S.TLEN]
+        opts = src.options
         reads = read_cram_native(
             reads.sparkSession,
-            csrc["path"],
-            ref_path=csrc["ref_path"],
-            contig=csrc["contig"],
-            start=csrc["start"],
-            end=csrc["end"],
+            src.path,
+            ref_path=opts["ref_path"],
+            contig=opts["contig"],
+            start=opts["start"],
+            end=opts["end"],
             columns=need,
         )
     if flag_mask or min_mapq:

@@ -15,21 +15,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Conf keys, mirroring the reference's InternalParams defaults
-# (utils/InternalParams.scala:51-56, pileup/conf/Conf.scala:6-26).
-CONF_MIN_OVERLAP = "spark.sequila.rangejoin.minOverlap"
-CONF_MAX_GAP = "spark.sequila.rangejoin.maxGap"
-CONF_BIN_SIZE = "spark.sequila.rangejoin.binSize"
-CONF_MAX_BROADCAST = "spark.sequila.rangejoin.maxBroadcastSize"
-CONF_FILTER_FLAG = "spark.sequila.filterFlag"  # default 1796 (Conf.scala:8)
-
-_DEFAULTS = {
-    CONF_MIN_OVERLAP: "1",
-    CONF_MAX_GAP: "0",
-    CONF_BIN_SIZE: "5000",
-    CONF_FILTER_FLAG: "1796",
-}
-
 
 def get_spark(app_name: str = "sequila_spark", cpus: int | None = None) -> SparkSession:
     """Build a local session tuned for the test/bench environment.
@@ -58,16 +43,13 @@ def get_spark(app_name: str = "sequila_spark", cpus: int | None = None) -> Spark
 
 
 def register(spark: SparkSession) -> SparkSession:
-    """Register the SQL scalar-function surface and engine confs.
+    """Register the SQL scalar-function surface.
 
     DataFrame users should prefer the native column functions in
     ``sequila_spark.functions.intervals`` (pure Catalyst expressions, no
     Python round-trip); the UDF registration here exists for SQL-string
     compatibility with the reference surface (utils/UDFRegister.scala).
     """
-    for key, val in _DEFAULTS.items():
-        if spark.conf.get(key, None) is None:
-            spark.conf.set(key, val)
     from sequila_spark.functions.intervals import register_sql_functions
     from sequila_spark.functions.maps import register_map_functions
     from sequila_spark.functions.udtf import register_udtfs

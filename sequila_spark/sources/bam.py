@@ -17,6 +17,9 @@ alignment relations with the canonical schema; BAM decoding is an I/O shim:
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,8 +82,7 @@ def read_alignments(
     if S.CONTIG in df.columns:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     if S.SAMPLE not in df.columns:
-        sample = os.path.basename(path).split(".")[0]
-        df = df.withColumn(S.SAMPLE, F.lit(sample))
+        df = df.withColumn(S.SAMPLE, F.lit(_sample_of(path)))
     return with_typed_tags(df) if typed_tags and "tags" in df.columns else df
 
 
@@ -130,7 +132,7 @@ def list_samples(path: str) -> list[str]:
         files = _expand_paths(path, "bam")
     except FileNotFoundError:
         return []
-    return sorted({os.path.basename(p).split(".")[0] for p in files})
+    return sorted({_sample_of(p) for p in files})
 
 
 def with_typed_tags(df: DataFrame, tags: list[str] | None = None) -> DataFrame:
@@ -409,12 +411,11 @@ def _pack_tasks(sizes: list[int], parallelism: int) -> list[list[int]]:
     """Cut decode units (BAI spans or CRAM containers, in file order, of
     compressed ``sizes``) into contiguous groups of indices, one per task.
 
-    A Python task pays ~0.2-0.3 s (4-vCPU host) before its function runs:
-    the worker's setup calls ``importlib.invalidate_caches()``, so each
-    zipimporter on its path re-reads its archive directory (workers are
-    reused; the cost is per task).  Hence min(n, par * ceil(total / (par *
-    32 MB))) groups: one full wave for a small input, ~32 MB a task at
-    scale.  Cuts fall on the unit boundary nearest each cumulative-byte
+    A Python task has a fixed cost besides its work (workers are reused;
+    the cost is per task): an empty 4-task job of _run_tasks takes
+    0.13-0.17 s on a 4-vCPU host, 0.30-0.45 s without its
+    _trim_import_caches.  Hence min(n, par * ceil(total / (par * 32 MB)))
+    groups: one full wave for a small input, ~32 MB a task at scale.  Cuts fall on the unit boundary nearest each cumulative-byte
     quantile; a group of several units over 32 MB is cut again, so only a
     single oversized unit passes the cap."""
     import bisect
@@ -456,11 +457,65 @@ def _run_tasks(
         return spark.createDataFrame([], schema)
 
     def task(batches):
-        for b in batches:
-            for gid in b.column(0).to_pylist():
-                yield from decode(groups[gid])
+        _trim_import_caches()
+        try:
+            for b in batches:
+                for gid in b.column(0).to_pylist():
+                    yield from decode(groups[gid])
+        finally:
+            _trim_import_caches()
 
     return spark.range(0, len(groups), 1, len(groups)).mapInArrow(task, schema)
+
+
+#: archive path -> it holds no Python module; filled per worker process
+_MODULE_FREE: dict[str, bool] = {}
+
+
+def _module_free(path: str) -> bool:
+    """True when ``path`` is a zip archive without a ``.py``/``.pyc`` entry
+    (Spark puts the spark-core jar on the worker's ``sys.path``)."""
+    hit = _MODULE_FREE.get(path)
+    if hit is None:
+        import zipfile
+
+        hit = False
+        if os.path.isfile(path):
+            try:
+                with zipfile.ZipFile(path) as z:
+                    hit = not any(n.endswith((".py", ".pyc")) for n in z.namelist())
+            except (OSError, zipfile.BadZipFile):
+                pass
+        _MODULE_FREE[path] = hit
+    return hit
+
+
+def _trim_import_caches() -> None:
+    """Keep a Python task's cost to its work.  Spark's worker calls
+    ``importlib.invalidate_caches()`` before every task, and each
+    zipimporter in ``sys.path_importer_cache`` then re-reads its whole
+    archive directory: about 10 ms a package prefix of ``pyspark.zip``
+    (``.../pyspark.zip/pyspark/sql`` and so on, 12 after a decode task)
+    and about 40 ms each for the spark-core jar's two.  Drop the
+    importers of package prefixes inside an archive on ``sys.path`` (an
+    import re-creates one from zipimport's directory cache, without a
+    read), and drop from ``sys.path``, with its importers, any archive that
+    holds no Python module.  Archive roots that hold modules stay.  Called
+    at the start and the end of every task, because imports re-create
+    prefix importers."""
+    import sys
+    import zipimport
+
+    dropped = {p for p in sys.path if _module_free(p)}
+    if dropped:
+        sys.path[:] = [p for p in sys.path if p not in dropped]
+    roots = set(sys.path)
+    cache = sys.path_importer_cache
+    for key, imp in list(cache.items()):
+        if isinstance(imp, zipimport.zipimporter) and (
+            imp.archive in dropped or (imp.prefix and imp.archive in roots)
+        ):
+            del cache[key]
 
 
 def _plan_bam(
@@ -479,7 +534,7 @@ def _plan_bam(
     for p in _expand_paths(path, "bam"):
         with open(p, "rb") as f:
             refs_by_path[p], _ = B.read_bam_header(B.BgzfReader(f))
-        sample = os.path.basename(p).split(".")[0]
+        sample = _sample_of(p)
         bai = next(
             (c for c in (p + ".bai", p[: p.rfind(".")] + ".bai") if os.path.exists(c)),
             None,
@@ -506,6 +561,80 @@ def _plan_bam(
         spans += [(p, sample, sp) for sp in file_spans]
         sizes += [max(e - s, 0) for s, e in zip(starts, ends)]
     return refs_by_path, spans, sizes
+
+
+class Reader(NamedTuple):
+    """A registered reader call: ``kind`` ('bam' for read_bam_native,
+    'cram' for read_cram_native), its ``path`` and its other keyword
+    ``options``."""
+
+    kind: str
+    path: str | list[str]
+    options: dict
+
+
+#: semanticHash of a reader's relation -> (that relation, its Reader),
+#: least recently registered or hit first, at most _READERS_MAX entries.
+#: An entry keeps its relation's plan alive, with any broadcast the decode
+#: holds (read_cram_native's reference).
+_READERS: OrderedDict[int, tuple[DataFrame, Reader]] = OrderedDict()
+_READERS_MAX = 16
+_READERS_LOCK = threading.Lock()
+
+
+def _register(df: DataFrame, kind: str, path, **options) -> DataFrame:
+    """Register ``df`` as the relation of a reader call (see reader_of)."""
+    h = df.semanticHash()
+    with _READERS_LOCK:
+        _READERS[h] = (df, Reader(kind, path, options))
+        _READERS.move_to_end(h)
+        while len(_READERS) > _READERS_MAX:
+            _READERS.popitem(last=False)
+    return df
+
+
+def reader_of(df: DataFrame) -> Reader | None:
+    """The reader call whose relation ``df`` is, by plan identity: the
+    registry entry under ``df.semanticHash()``, confirmed with
+    ``sameSemantics`` in the same session.  A view of a reader relation
+    (``spark.table``) hits, since the view keeps the reader's analyzed
+    plan; any transformation (``where``, ``select``, a join) gives another
+    plan and misses, so the operators that route on a hit (coverage's fused
+    decode, pileup's CRAM decode prune, the SQL TVFs' sample files) only
+    ever re-plan the reader's own row set.  The plan holds the decode
+    closure, so the path, the planned spans and every option are part of
+    the identity."""
+    h = df.semanticHash()
+    hit = _READERS.get(h)
+    if hit is None or hit[0].sparkSession is not df.sparkSession or not hit[0].sameSemantics(df):
+        return None
+    with _READERS_LOCK:
+        if h in _READERS:
+            _READERS.move_to_end(h)
+    return hit[1]
+
+
+def _sample_of(path: str) -> str:
+    """A file's sample_id: its base name up to the first dot
+    (AlignmentRelation.scala:311-324)."""
+    return os.path.basename(path).split(".")[0]
+
+
+def sample_reader(df: DataFrame, sample: str) -> DataFrame | None:
+    """``df``'s rows of ``sample``, read by the reader call ``df`` is a
+    relation of (reader_of) over only the files of that sample, with the
+    same options; None when ``df`` is no reader relation.  No file of that
+    sample gives ``df``'s schema with no rows and reads nothing."""
+    reader = reader_of(df)
+    if reader is None:
+        return None
+    files = [
+        p for p in _expand_paths(reader.path, reader.kind) if _sample_of(p) == sample
+    ]
+    if not files:
+        return df.where(F.lit(False))
+    read = read_bam_native if reader.kind == "bam" else read_cram_native
+    return read(df.sparkSession, files, **reader.options)
 
 
 def read_bam_native(
@@ -567,7 +696,11 @@ def read_bam_native(
     present, so a ``columns`` list that omits ``flag``/``mapq`` silently
     disables that filtering — include them whenever reads feed a filtered
     operator.  ``typed_tags=True`` with a ``columns`` list that omits
-    ``'tags'`` is rejected here (it would fail at plan time otherwise)."""
+    ``'tags'`` is rejected here (it would fail at plan time otherwise).
+
+    The result is registered under its plan identity (reader_of): coverage()
+    over it, or over a view of it, plans the fused decode->events reader,
+    and the SQL TVFs given a sample read only that sample's files."""
     _COL_TYPES = {
         S.SAMPLE: "string", S.QNAME: "string", S.FLAG: "int",
         S.CONTIG: "string", S.START: "int", S.END: "int", S.MAPQ: "int",
@@ -615,38 +748,10 @@ def read_bam_native(
     if S.CONTIG in keep:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     out = with_typed_tags(df) if typed_tags else df
-    _attach_bam_provenance(out, path, chunk, columns=columns)
-    return out
-
-
-def _attach_bam_provenance(
-    df: DataFrame,
-    path,
-    chunk: int,
-    *,
-    columns: list[str] | None,
-) -> None:
-    """Stamp reader provenance on a read_bam_native result so
-    operators.coverage can auto-route the declarative
-    ``coverage(read_bam_native(...))`` composition through the fused
-    decode->events plan (read_bam_coverage_events) — the reference fuses
-    scan+aggregate in its physical operator (pileup/PileupStrategy.scala:
-    37-56); here the fusion triggers on lineage without an opt-in reader.
-    The attribute lives on THIS DataFrame object only: any transformation
-    (filter/select/join) returns a new DataFrame without it, which is
-    exactly the contract — the fused reader can only reproduce the
-    reader's own row set."""
-    df._sequila_bam_source = {
-        "path": path,
-        "chunk": chunk,
-        # aligned-block semantics require the cigar walk; span-only
-        # relations must not fuse
-        "has_cigar": columns is None or S.CIGAR in columns,
-        # filter pushdown parity: the declarative filter applies flag/mapq
-        # predicates only when those columns exist on the relation
-        "has_flag": columns is None or S.FLAG in columns,
-        "has_mapq": columns is None or S.MAPQ in columns,
-    }
+    return _register(
+        out, "bam", path, chunk=chunk, with_tags=with_tags,
+        typed_tags=typed_tags, with_ordinal=with_ordinal, columns=columns,
+    )
 
 
 def read_bam_coverage_events(
@@ -788,7 +893,7 @@ def _plan_cram(
             p, contig=contig, start=start, end=end
         )
         meta_by_path[p] = (ref_names, rg_names)
-        sample = os.path.basename(p).split(".")[0]
+        sample = _sample_of(p)
         # validation reads only header blocks but seeks once per container,
         # which dominates re-planning a large file: memoized per file
         validated = _cram_scan_cached(p)[3]
@@ -864,7 +969,12 @@ def read_cram_native(
     seq/cigar string slicing, qual phred translation — is skipped for
     columns not requested, and only the requested Arrow arrays ship to
     the JVM.  sample_id is always included; an interval filter requires
-    contig/pos_start/pos_end to be present."""
+    contig/pos_start/pos_end to be present.
+
+    The result is registered under its plan identity (reader_of), as
+    read_bam_native's is: coverage() and pileup() over it, or over a view
+    of it, re-plan the decode (fused events or a column-pruned re-read),
+    and the SQL TVFs given a sample read only that sample's files."""
     from sequila_spark.sources import cramcodec as C
 
     meta_by_path, tasks = _plan_cram(path, contig, start, end)
@@ -901,8 +1011,8 @@ def read_cram_native(
     names = [S.SAMPLE] + keep + (["tags"] if keep_tags else [])
 
     # Partition = a contiguous GROUP of containers: real containers are
-    # ~1 MB and a Python task's fixed ~0.2-0.3 s (_pack_tasks) would make
-    # one task per container ~10x overhead (and 100M tasks at 100 TB).
+    # ~1 MB and a Python task's fixed cost (_pack_tasks) would make one
+    # task per container several times overhead (and 100M tasks at 100 TB).
     groups = _pack_tasks(
         [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
     )
@@ -950,20 +1060,10 @@ def read_cram_native(
         if start is not None:
             cond = cond & (F.col(S.END) >= F.lit(start))
         df = df.where(cond)
-    # reader provenance (same contract as _attach_bam_provenance: the
-    # attribute lives on THIS object only) — operators.coverage re-plans
-    # a full-column coverage(read_cram_native(...)) composition as a
-    # column-PRUNED re-read, skipping qname/tags/seq/qual rendering and
-    # transfer entirely
-    df._sequila_cram_source = {
-        "path": path,
-        "ref_path": ref_path,
-        "columns": columns,
-        "contig": contig,
-        "start": start,
-        "end": end,
-    }
-    return df
+    return _register(
+        df, "cram", path, ref_path=ref_path, with_tags=with_tags,
+        contig=contig, start=start, end=end, columns=columns,
+    )
 
 
 def read_cram_coverage_events(
@@ -1086,7 +1186,7 @@ def read_cram_coverage_events(
                     keep &= (ap <= q_end) & (rec_end >= q_start)
                 # _blocks_raw expects BAM's 0-based pos; CRAM's pos_start
                 # is 1-based
-                bs, be, rec_of, _ = BV._blocks_raw(cig_u32, op_cum, ap - 1)
+                bs, be, rec_of = BV._blocks_raw(cig_u32, op_cum, ap - 1)
                 if not len(bs):
                     continue
                 bmask = keep[rec_of]
@@ -1142,7 +1242,7 @@ def read_bam(
             for s in range(0, length, chunk)
         ]
 
-    sample = os.path.basename(path).split(".")[0]
+    sample = _sample_of(path)
     rdd = spark.sparkContext.parallelize(spans, max(len(spans), 1)).flatMap(
         lambda span: _pysam_reader(path, ref_path, *span)
     )

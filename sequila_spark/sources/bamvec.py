@@ -212,11 +212,11 @@ def _cigar_column(
 
 def _blocks_raw(
     cig_u32: np.ndarray, op_cum: np.ndarray, pos0: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized aligned-block extraction: (bs, be, rec_of_block,
-    blocks_per_record) — 1-based inclusive reference intervals of every
-    record's M/=/X ops (the reference's Read.getAlignmentBlocks,
-    pileup/model/Read.scala:27-54), over the whole batch at once."""
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized aligned-block extraction: (bs, be, rec_of_block) —
+    1-based inclusive reference intervals of every record's M/=/X ops (the
+    reference's Read.getAlignmentBlocks, pileup/model/Read.scala:27-54),
+    over the whole batch at once."""
     nums = (cig_u32 >> 4).astype(np.int64)
     ops = cig_u32 & 0xF
     ref_adv = nums * _REF_CONSUME[ops]
@@ -232,8 +232,7 @@ def _blocks_raw(
     emit = (ops == 0) | (ops == 7) | (ops == 8)  # M, =, X
     bs = (rec_pos0 + (excl - base) + 1)[emit]
     be = (rec_pos0 + (excl - base) + nums)[emit]
-    per_rec = _segment_sums(emit.astype(np.int64), op_cum)
-    return bs, be, rec_of_op[emit], per_rec
+    return bs, be, rec_of_op[emit]
 
 
 _CIGAR_TEXT_CODE = np.full(256, -1, dtype=np.int64)
@@ -708,7 +707,7 @@ def _cov_event_batch(
         cg_off, n_cigar, rid, pos0 = cg_off[keep], n_cigar[keep], rid[keep], pos0[keep]
     cg_vals, cg_cum = _ragged_take(recs.u8, cg_off, 4 * n_cigar)
     cig_u32 = np.ascontiguousarray(cg_vals).view("<u4")
-    bs, be, rec_of, _ = _blocks_raw(cig_u32, cg_cum // 4, pos0)
+    bs, be, rec_of = _blocks_raw(cig_u32, cg_cum // 4, pos0)
     if not len(bs):
         return None
     return events_from_blocks(

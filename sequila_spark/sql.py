@@ -220,6 +220,21 @@ def _parse_args(raw: str, spark: SparkSession | None = None) -> list:
     return args
 
 
+def _sample_rows(spark: SparkSession, table: str, sample: str | None) -> DataFrame:
+    """``table``'s rows of ``sample`` (all rows without one, or when the
+    table has no sample_id).  A table that is a view of a BAM/CRAM reader
+    relation is read again over only that sample's files
+    (sources.bam.sample_reader), so the coverage TVF fuses like the API and
+    no other sample is decoded; any other table is filtered."""
+    df = spark.table(table)
+    if not sample or S.SAMPLE not in df.columns:
+        return df
+    from sequila_spark.sources.bam import sample_reader
+
+    rows = sample_reader(df, sample)
+    return rows if rows is not None else df.where(F.col(S.SAMPLE) == sample)
+
+
 def _tvf_coverage(spark: SparkSession, args: list) -> DataFrame:
     from sequila_spark.operators.coverage import coverage
 
@@ -234,10 +249,7 @@ def _tvf_coverage(spark: SparkSession, args: list) -> DataFrame:
             window = a
         elif isinstance(a, str):
             sample = a
-    df = spark.table(table)
-    if sample and S.SAMPLE in df.columns:
-        df = df.where(F.col(S.SAMPLE) == sample)
-    return coverage(df, mode=mode, window_size=window)
+    return coverage(_sample_rows(spark, table, sample), mode=mode, window_size=window)
 
 
 def _tvf_pileup(spark: SparkSession, args: list) -> DataFrame:
@@ -251,11 +263,11 @@ def _tvf_pileup(spark: SparkSession, args: list) -> DataFrame:
     alts = flags[0] if flags else True
     quals = flags[1] if len(flags) > 1 else False
     bin_size = ints[0] if ints else 1
-    df = spark.table(table)
-    if sample and S.SAMPLE in df.columns:
-        df = df.where(F.col(S.SAMPLE) == sample)
     ref = spark.table(ref_table) if ref_table else None
-    return pileup(df, ref=ref, alts=alts, quals=quals, qual_bin_size=bin_size)
+    return pileup(
+        _sample_rows(spark, table, sample),
+        ref=ref, alts=alts, quals=quals, qual_bin_size=bin_size,
+    )
 
 
 def _tvf_grange(spark: SparkSession, args: list) -> DataFrame:

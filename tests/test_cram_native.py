@@ -28,7 +28,9 @@ CRAM = f"{RES}/NA12878.slice.cram"
 BAM = f"{RES}/NA12878.slice.bam"
 FASTA = f"{RES}/NA12878.slice.fasta"
 
-pytestmark = pytest.mark.skipif(
+# Only the tests that read the reference CRAM, BAM or FASTA need it; the
+# codec, mate-resolution and tag-rendering tests build their own input.
+needs_ref = pytest.mark.skipif(
     not os.path.exists(CRAM), reason="reference CRAM fixture not present"
 )
 
@@ -47,6 +49,7 @@ def decoded():
     return cram, bam
 
 
+@needs_ref
 def test_all_core_fields_roundtrip(decoded):
     cram, bam = decoded
     assert len(cram) == len(bam) == 3172
@@ -55,6 +58,7 @@ def test_all_core_fields_roundtrip(decoded):
     assert a == b  # qname..qual, every record, byte-exact
 
 
+@needs_ref
 def test_tags_roundtrip(decoded):
     cram, bam = decoded
     bkey = {(r[0], r[1]): r for r in bam}
@@ -75,6 +79,7 @@ def test_tags_roundtrip(decoded):
     assert checked > 10_000 and nm_explicit == 2
 
 
+@needs_ref
 def test_synthesize_nm_counts_edits():
     """Opt-in NM synthesis (samtools-calmd analog) fills NM for every
     mapped read from the feature walk."""
@@ -87,6 +92,7 @@ def test_synthesize_nm_counts_edits():
     assert all("NM" in r[12] for r in recs if not r[1] & 0x4)
 
 
+@needs_ref
 def test_read_cram_native_spark(spark):
     from pyspark.sql import functions as F
 
@@ -104,6 +110,7 @@ def test_read_cram_native_spark(spark):
     assert {(r["contig"], r["n"]) for r in a} == {(r["contig"], r["n"]) for r in b}
 
 
+@needs_ref
 def test_scan_containers_headers_only():
     """The planning scan sees every container with correct record counts
     and in-bounds byte ranges (it reads headers only — no data-block
@@ -116,6 +123,7 @@ def test_scan_containers_headers_only():
         assert h["data_offset"] + h["length"] <= len(data)
 
 
+@needs_ref
 def test_missing_reference_is_loud():
     """Reference-based slices without ref_seqs must raise with guidance,
     not silently produce N sequences."""
@@ -123,6 +131,7 @@ def test_missing_reference_is_loud():
         list(C.read_cram_records(CRAM, None))
 
 
+@needs_ref
 def test_multi_container_parallel_decode(spark, tmp_path):
     """Containers are independent decode units: a crafted two-container
     file (the fixture's data container duplicated — legal, since every
@@ -183,6 +192,7 @@ def test_resolve_mates_pair_semantics():
     assert recs[0]["bf"] & 0x8 and recs[0]["tlen"] == 0
 
 
+@needs_ref
 def test_unsupported_cram_falls_back_at_plan_time(spark, tmp_path):
     """A CRAM outside the supported shape (here: major version 2) must
     raise at read_bam() CALL time — not as an opaque executor failure —
@@ -359,6 +369,7 @@ def test_resolve_mates_three_segment_template_tlen():
     assert (recs[2]["next_rid"], recs[2]["next_pos"]) == (3, 100)
 
 
+@needs_ref
 def test_rg_tag_materialized_from_series(decoded):
     """Every record carries tags['RG'] resolved from the RG data series
     against the header's @RG ID list (htslib parity — previously the
@@ -374,6 +385,7 @@ def test_rg_tag_materialized_from_series(decoded):
     assert n_rg == len(cram)  # the fixture tags every read
 
 
+@needs_ref
 def test_container_span_pruning(tmp_path):
     """plan_cram_containers prunes by (contig, start, end) from container
     HEADERS alone: the fixture's single container covers chr1:34-29954, so
@@ -392,6 +404,7 @@ def test_container_span_pruning(tmp_path):
     assert plan_cram_containers(CRAM, "2", 1, 10**9)[2] == []
 
 
+@needs_ref
 def test_read_cram_native_interval_slice(spark):
     """A sliced read prunes tasks at plan time and returns exactly the
     overlap-filtered rows of a full read (htslib fetch semantics)."""
@@ -418,6 +431,7 @@ def test_read_cram_native_interval_slice(spark):
     assert empty.count() == 0
 
 
+@needs_ref
 def test_read_cram_native_multisample(spark, tmp_path):
     """Glob/dir/list inputs build a multi-sample relation with sample_id
     from each file name — parity with read_bam_native's multi-sample path
@@ -873,6 +887,7 @@ def test_rans_nx16_corrupt_freq_sum_is_loud():
         rans_nx16_decode(bytes(head), 100)
 
 
+@needs_ref
 def test_cram_version_detection():
     """3.0 and 3.1 are accepted at the header; 2.x and 4.x raise with the
     version in the message.  3.1-only codec methods raise BY NAME from the
@@ -1896,6 +1911,7 @@ def _transcode_cram31(data: bytes) -> bytes:
             + hdr + blocks_bytes + data[cont_end:])
 
 
+@needs_ref
 def test_cram31_transcode_scan_and_validate(tmp_path):
     data = open(CRAM, "rb").read()
     crafted = str(tmp_path / "slice31.cram")
@@ -1908,6 +1924,7 @@ def test_cram31_transcode_scan_and_validate(tmp_path):
     C.validate_container_file(crafted, h31[0])  # all 3.1 codecs accepted
 
 
+@needs_ref
 def test_cram31_end_to_end_records_identical(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -1990,6 +2007,7 @@ def test_rans_nx16_c_and_python_identical():
                 assert with_c == without_c == payload, (len(payload), n_way)
 
 
+@needs_ref
 def test_cram_walk_c_vs_python_paths(monkeypatch):
     """The C feature-walk (bamscan.c cram_walk), the deferred-replay
     Python walk (CramWalkAbort path), and the fully undeferred per-record
@@ -2075,6 +2093,7 @@ def test_tag_render_series_matches_shared_renderer():
         assert got == [decode_tag_bytes(typ, v) for v in vals], typ
 
 
+@needs_ref
 def test_bulk_record_series_matches_per_value(monkeypatch):
     """The whole-series record-field/tag pre-decode (_bulk_int_reader /
     _bulk_bytes_series + pre-rendered tag series) must yield records
@@ -2111,6 +2130,7 @@ def test_bulk_record_series_matches_per_value(monkeypatch):
     assert engaged["ints"] > 0 and engaged["bytes"] > 0
 
 
+@needs_ref
 def test_columnar_slice_matches_per_record(monkeypatch):
     """The fully-columnar slice decode (_decode_slice_columns) must yield
     records identical to the per-record loop on the real NA12878 slice —
@@ -2136,6 +2156,7 @@ def test_columnar_slice_matches_per_record(monkeypatch):
     assert engaged["n"] > 0
 
 
+@needs_ref
 def test_cram_arrow_reader_with_tags_false(spark):
     """The Arrow emission path (mapInArrow RecordBatches) with tags
     suppressed: same rows as the tagged read minus the map column, and
@@ -2152,6 +2173,7 @@ def test_cram_arrow_reader_with_tags_false(spark):
     assert all(len(r["tags"]) == 0 for r in untagged.select("tags").collect())
 
 
+@needs_ref
 def test_cram_column_pruning(spark):
     """Decode-level column pruning (mirrors read_bam_native columns=):
     every pruned projection equals the full read's projection, the
@@ -2188,6 +2210,7 @@ def test_cram_column_pruning(spark):
         read_cram_native(spark, CRAM, ref_path=FASTA, columns=["nope"])
 
 
+@needs_ref
 def test_cram_coverage_fused_events(spark, monkeypatch):
     """coverage(read_cram_native(...)) auto-fuses to the decode->events
     reader on provenance (r13, the BAM-fusion analog): identical blocks
@@ -2230,6 +2253,7 @@ def test_cram_coverage_fused_events(spark, monkeypatch):
         )
 
 
+@needs_ref
 def test_cram_coverage_fused_interval(spark):
     """An interval read keeps htslib-fetch overlap semantics through the
     fused events path (container pruning + numpy row filter)."""
@@ -2244,6 +2268,7 @@ def test_cram_coverage_fused_interval(spark):
     assert fi and fi == di
 
 
+@needs_ref
 def test_cram_coverage_gapless_prunes_decode(spark, monkeypatch):
     """use_cigar=False cannot ride the block-based fused reader; it keeps
     the column-PRUNED re-read (no qname/tags/seq/qual decode), identical
@@ -2269,6 +2294,7 @@ def test_cram_coverage_gapless_prunes_decode(spark, monkeypatch):
     assert got == unpruned
 
 
+@needs_ref
 def test_cram_pileup_prunes_decode(spark, monkeypatch):
     """pileup(read_cram_native(...)) re-plans as a pruned re-read too:
     alts-only (no qual decode) and quals (qual included) both pinned
@@ -2300,6 +2326,7 @@ def test_cram_pileup_prunes_decode(spark, monkeypatch):
     assert got_q == unpruned_q
 
 
+@needs_ref
 def test_pileup_fuse_flag(spark, monkeypatch):
     """pileup(fuse=...) mirrors coverage() (ADVICE r12): fuse=False is a
     documented opt-out of the provenance-based decode prune (identical
