@@ -231,7 +231,7 @@ def merge_touching_blocks(blocks: DataFrame, chunk_size: int = DEFAULT_CHUNK) ->
 
 
 def coverage(
-    reads: DataFrame,
+    reads: DataFrame | Reader,
     *,
     mode: str = "blocks",
     window_size: int | None = None,
@@ -257,79 +257,46 @@ def coverage(
     bases mode, matching the reference Coverage row schema
     (utvf/ResolveTableValuedFunctionsSeq.scala:239).
 
-    ``fuse`` (default auto): when ``reads`` is a read_bam_native relation
-    by plan identity (sources.bam.reader_of: the reader's result, or a view
-    or ``spark.table`` of it; a transformed relation misses), the plan is
-    rewritten to the fused decode->events reader
-    (read_bam_coverage_events + coverage_from_events) over the registered
-    path and chunk — same rows (pinned by tests/test_coverage.py), ~10x
-    fewer shuffled rows, zero string rendering, the way the reference fuses
-    coverage into its scan (pileup/PileupStrategy.scala:37-56).  A
-    read_cram_native relation fuses through read_cram_coverage_events the
-    same way.  ``fuse=False`` forces the declarative plan; ``fuse=True``
-    raises when there is no reader relation to fuse.
+    ``reads`` may also be a sources.bam.Reader, a reader call's plan (the
+    SQL TVFs pass one narrowed to a sample).
+
+    ``fuse`` (default auto): when ``reads`` is a read_bam_native or
+    full-column read_cram_native relation by plan identity
+    (sources.bam.reader_of: the reader's result, or a view or
+    ``spark.table`` of it; a transformed relation misses), or a Reader,
+    the plan is the fused decode->events reader (Reader.events +
+    coverage_from_events) over the spans or containers the reader call
+    planned — same rows (pinned by tests/test_coverage.py), ~10x fewer
+    shuffled rows, zero string rendering, the way the reference fuses
+    coverage into its scan (pileup/PileupStrategy.scala:37-56).  Nothing
+    is planned or broadcast again.  ``fuse=False`` forces the declarative
+    plan; ``fuse=True`` raises when there is no reader relation to fuse.
     """
     if mode not in ("blocks", "bases", "windows"):
         raise ValueError(f"unsupported mode={mode!r}")
     if mode == "windows" and not window_size:
         raise ValueError("mode='windows' requires window_size")
 
-    from sequila_spark.sources.bam import reader_of
+    from sequila_spark.sources.bam import Reader, reader_of
 
     src = None if fuse is False else reader_of(reads)
-    if src is not None and src.kind == "cram" and src.options["columns"] is None:
-        opts = src.options
-        if use_cigar is not False:
-            # FULL CRAM fusion (r13): decode -> clipped coverage events
-            # inside the container task — zero per-record strings, the
-            # same plan shape as the BAM fusion below.  Events identity
-            # vs the declarative plan is pinned by
-            # tests/test_cram_native.py::test_cram_coverage_fused_events.
-            from sequila_spark.sources.bam import read_cram_coverage_events
+    if src is not None and src.kind == "cram":
+        if src.options["columns"] is not None:
+            src = None  # only a full-column CRAM relation is routed
+        elif use_cigar is False:
+            # gapless spans: the declarative plan needs pos_end, not
+            # blocks — a column-pruned re-read of the plan (qname/tag/seq/
+            # qual rendering and Arrow transfer never happen; pinned by
+            # test_cram_coverage_gapless_prunes_decode)
+            reads, src = src.rows(columns=[S.FLAG, S.CONTIG, S.START, S.END, S.MAPQ]), None
 
-            events = read_cram_coverage_events(
-                reads.sparkSession,
-                src.path,
-                ref_path=opts["ref_path"],
-                chunk_size=chunk_size,
-                flag_mask=flag_mask,
-                min_mapq=min_mapq,
-                contig=opts["contig"],
-                start=opts["start"],
-                end=opts["end"],
-            )
-            return coverage_from_events(
-                events,
-                chunk_size=chunk_size,
-                mode=mode,
-                window_size=window_size,
-                ref_bases=ref_bases,
-            )
-        # use_cigar=False (gapless spans): the declarative plan needs
-        # pos_end, not blocks — keep the column-pruned re-read
-        # (qname/tag/seq/qual rendering and Arrow transfer still never
-        # happen; pinned by test_cram_coverage_prunes_decode)
-        from sequila_spark.sources.bam import read_cram_native
-
-        reads = read_cram_native(
-            reads.sparkSession,
-            src.path,
-            ref_path=opts["ref_path"],
-            contig=opts["contig"],
-            start=opts["start"],
-            end=opts["end"],
-            columns=[S.FLAG, S.CONTIG, S.START, S.END, S.MAPQ],
-        )
-        src = None
-
-    bam = src is not None and src.kind == "bam"
-    cols = src.options["columns"] if bam else None
+    cols = src.options["columns"] if src is not None else None
 
     def has(c: str) -> bool:
         return cols is None or c in cols
 
     fusable = (
-        bam
+        src is not None
         and use_cigar is not False
         # aligned-block semantics require the cigar walk
         and has(S.CIGAR)
@@ -340,28 +307,25 @@ def coverage(
     )
     if fuse is True and not fusable:
         raise ValueError(
-            "fuse=True requires a read_bam_native relation or a view of one "
-            "(with cigar/flag/mapq available for the requested filters)"
+            "fuse=True requires a read_bam_native or full-column "
+            "read_cram_native relation, a view of one or a Reader (with "
+            "cigar/flag/mapq available for the requested filters)"
         )
     if fusable:
-        from sequila_spark.sources.bam import read_bam_coverage_events
-
-        events = read_bam_coverage_events(
-            reads.sparkSession,
-            src.path,
-            chunk_size=chunk_size,
-            flag_mask=flag_mask,
-            min_mapq=min_mapq,
-            chunk=src.options["chunk"],
-        )
+        # decode -> clipped coverage events inside the decode task, from
+        # the reader's own plan: zero per-record strings.  Events identity
+        # vs the declarative plan is pinned by tests/test_coverage.py and
+        # tests/test_cram_native.py::test_cram_coverage_fused_events.
         return coverage_from_events(
-            events,
+            src.events(chunk_size, flag_mask, min_mapq),
             chunk_size=chunk_size,
             mode=mode,
             window_size=window_size,
             ref_bases=ref_bases,
         )
 
+    if isinstance(reads, Reader):
+        reads = reads.rows()
     if flag_mask or min_mapq:
         reads = filter_reads(reads, flag_mask=flag_mask, min_mapq=min_mapq)
 

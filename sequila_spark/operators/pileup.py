@@ -312,7 +312,7 @@ def expand_bases(
 
 
 def pileup(
-    reads: DataFrame,
+    reads: DataFrame | Reader,
     *,
     ref: DataFrame | RefExpr | None = None,
     alts: bool = True,
@@ -372,48 +372,44 @@ def pileup(
     ONE such cache per session — the next baq+mate_overlap call
     unpersists the previous one.
 
+    ``reads`` may also be a sources.bam.Reader, a reader call's plan (the
+    pileup TVF passes one narrowed to a sample).
+
     ``fuse`` mirrors coverage(): default auto applies the CRAM decode
-    prune below when ``reads`` is a full-column read_cram_native relation
+    prune when ``reads`` is a full-column read_cram_native relation
     by plan identity (sources.bam.reader_of: the reader's result or a view
-    of it; any transformation, even a plain ``.select()``, misses);
-    ``fuse=False`` keeps the full decode; ``fuse=True`` raises when there is
-    no such relation to prune.
+    of it; a filter or a projection to fewer columns misses) or such a
+    Reader: a column-pruned decode of the containers and reference
+    broadcast the reader call planned, nothing planned or loaded again.
+    ``fuse=False`` keeps the full decode; ``fuse=True`` raises when there
+    is no such relation to prune.
     """
     if strategy not in ("auto", "sparse", "dense"):
         raise ValueError(f"unknown pileup strategy: {strategy!r}")
 
-    from sequila_spark.sources.bam import reader_of
+    from sequila_spark.sources.bam import Reader, reader_of
 
     src = None if fuse is False else reader_of(reads)
     prune = src is not None and src.kind == "cram" and src.options["columns"] is None
     if fuse is True and not prune:
         raise ValueError(
-            "fuse=True requires a full-column read_cram_native relation or a "
-            "view of one (the decode prune re-reads the registered reader)"
+            "fuse=True requires a full-column read_cram_native relation, a "
+            "view of one or such a Reader (the prune decodes the reader's plan)"
         )
     if prune:
-        # reader-provenance decode pruning (same contract as coverage):
-        # pileup never reads tags, and qname/mate fields only under
-        # mate_overlap; qual only when quals/baq ask for it — skip their
-        # rendering and transfer at the CRAM decode itself
-        from sequila_spark.sources.bam import read_cram_native
-
+        # decode pruning (same contract as coverage): pileup never reads
+        # tags, and qname/mate fields only under mate_overlap; qual only
+        # when quals/baq ask for it — skip their rendering and transfer at
+        # the CRAM decode of the reader's own plan
         need = [S.FLAG, S.CONTIG, S.START, S.END, S.MAPQ, S.CIGAR,
                 S.SEQUENCE]
         if quals or baq:
             need.append(S.BASEQ)
         if mate_overlap:
             need += [S.QNAME, S.RNEXT, S.PNEXT, S.TLEN]
-        opts = src.options
-        reads = read_cram_native(
-            reads.sparkSession,
-            src.path,
-            ref_path=opts["ref_path"],
-            contig=opts["contig"],
-            start=opts["start"],
-            end=opts["end"],
-            columns=need,
-        )
+        reads = src.rows(columns=need)
+    elif isinstance(reads, Reader):
+        reads = reads.rows()
     if flag_mask or min_mapq:
         reads = filter_reads(reads, flag_mask=flag_mask, min_mapq=min_mapq)
 

@@ -21,6 +21,7 @@ import threading
 from collections import OrderedDict
 from typing import NamedTuple
 
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -445,14 +446,14 @@ def _pack_tasks(sizes: list[int], parallelism: int) -> list[list[int]]:
     return groups
 
 
-def _run_tasks(
-    spark: SparkSession, groups: list[list[int]], decode, schema: str
-) -> DataFrame:
-    """The task loop of all four readers: one task per group of decode
-    units (range(n) split into exactly n partitions), whose body
+def _run_tasks(spark: SparkSession, sizes: list[int], decode, schema: str) -> DataFrame:
+    """The task loop of every reader: the decode units of compressed
+    ``sizes`` packed into groups (_pack_tasks), one task per group
+    (range(n) split into exactly n partitions), whose body
     ``decode(units)`` yields the Arrow RecordBatches of that group's unit
-    indices.  A per-task cache lives inside ``decode``.  No groups: an
+    indices.  A per-task cache lives inside ``decode``.  No units: an
     empty frame of ``schema``."""
+    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
     if not groups:
         return spark.createDataFrame([], schema)
 
@@ -564,46 +565,77 @@ def _plan_bam(
 
 
 class Reader(NamedTuple):
-    """A registered reader call: ``kind`` ('bam' for read_bam_native,
-    'cram' for read_cram_native), its ``path`` and its other keyword
-    ``options``."""
+    """One reader call's plan, made when the call is made: its ``kind``
+    ('bam' or 'cram'), ``path`` and keyword ``options``; the decode
+    ``units`` (file, sample, BAI span or CRAM container header) in file
+    order with their compressed ``sizes``; per-file ``meta`` (BAM refs,
+    CRAM (ref_names, rg_names)); a CRAM reader's reference broadcast
+    ``ref``.  rows(), events() and only() decode from these, so nothing
+    routed through a Reader plans, loads a FASTA or broadcasts again."""
 
     kind: str
     path: str | list[str]
     options: dict
+    spark: SparkSession
+    units: list[tuple]
+    sizes: list[int]
+    meta: dict
+    ref: Broadcast | None = None
+
+    def rows(self, columns: list[str] | None = None) -> DataFrame:
+        """The plan's alignment rows, decoding only ``columns`` (None: the
+        reader call's own ``columns``)."""
+        cols = self.options.get("columns") if columns is None else columns
+        return (_bam_rows if self.kind == "bam" else _cram_rows)(self, cols)
+
+    def events(self, chunk_size: int, flag_mask: int = 0, min_mapq: int = 0) -> DataFrame:
+        """The plan's (contig, chunk, pos, delta) coverage events, clipped
+        at ``chunk_size``, for operators.coverage.coverage_from_events."""
+        build = _bam_events if self.kind == "bam" else _cram_events
+        return build(self, chunk_size, flag_mask, min_mapq)
+
+    def only(self, sample: str) -> Reader:
+        """The plan narrowed to the units of ``sample``'s files; it opens
+        no file.  A sample with no file is an empty plan: no rows."""
+        keep = [i for i, u in enumerate(self.units) if u[1] == sample]
+        return self._replace(
+            units=[self.units[i] for i in keep], sizes=[self.sizes[i] for i in keep]
+        )
 
 
 #: semanticHash of a reader's relation -> (that relation, its Reader),
 #: least recently registered or hit first, at most _READERS_MAX entries.
-#: An entry keeps its relation's plan alive, with any broadcast the decode
-#: holds (read_cram_native's reference).
+#: An entry keeps its relation's plan alive, with the Reader's broadcast
+#: (read_cram_native's reference).
 _READERS: OrderedDict[int, tuple[DataFrame, Reader]] = OrderedDict()
 _READERS_MAX = 16
 _READERS_LOCK = threading.Lock()
 
 
-def _register(df: DataFrame, kind: str, path, **options) -> DataFrame:
-    """Register ``df`` as the relation of a reader call (see reader_of)."""
+def _register(df: DataFrame, reader: Reader) -> DataFrame:
+    """Register ``df`` as the relation of ``reader`` (see reader_of)."""
     h = df.semanticHash()
     with _READERS_LOCK:
-        _READERS[h] = (df, Reader(kind, path, options))
+        _READERS[h] = (df, reader)
         _READERS.move_to_end(h)
         while len(_READERS) > _READERS_MAX:
             _READERS.popitem(last=False)
     return df
 
 
-def reader_of(df: DataFrame) -> Reader | None:
-    """The reader call whose relation ``df`` is, by plan identity: the
-    registry entry under ``df.semanticHash()``, confirmed with
-    ``sameSemantics`` in the same session.  A view of a reader relation
-    (``spark.table``) hits, since the view keeps the reader's analyzed
-    plan; any transformation (``where``, ``select``, a join) gives another
-    plan and misses, so the operators that route on a hit (coverage's fused
-    decode, pileup's CRAM decode prune, the SQL TVFs' sample files) only
-    ever re-plan the reader's own row set.  The plan holds the decode
-    closure, so the path, the planned spans and every option are part of
-    the identity."""
+def reader_of(df: DataFrame | Reader) -> Reader | None:
+    """``df`` itself when it is a Reader; else the Reader whose relation
+    ``df`` is, by plan identity: the registry entry under
+    ``df.semanticHash()``, confirmed with ``sameSemantics`` in the same
+    session.  A view of a reader relation (``spark.table``) hits,
+    since the view keeps the reader's analyzed plan; any transformation
+    (``where``, ``select``, a join) gives another plan and misses, so the
+    operators that route on a hit (coverage's fused decode, pileup's CRAM
+    decode prune, the SQL TVFs' sample) only ever decode the reader's own
+    row set.  The plan holds the decode closure, so the path, the planned
+    spans and every option are part of the identity."""
+    if isinstance(df, Reader):
+        return df
     h = df.semanticHash()
     hit = _READERS.get(h)
     if hit is None or hit[0].sparkSession is not df.sparkSession or not hit[0].sameSemantics(df):
@@ -620,21 +652,23 @@ def _sample_of(path: str) -> str:
     return os.path.basename(path).split(".")[0]
 
 
-def sample_reader(df: DataFrame, sample: str) -> DataFrame | None:
-    """``df``'s rows of ``sample``, read by the reader call ``df`` is a
-    relation of (reader_of) over only the files of that sample, with the
-    same options; None when ``df`` is no reader relation.  No file of that
-    sample gives ``df``'s schema with no rows and reads nothing."""
-    reader = reader_of(df)
-    if reader is None:
-        return None
-    files = [
-        p for p in _expand_paths(reader.path, reader.kind) if _sample_of(p) == sample
-    ]
-    if not files:
-        return df.where(F.lit(False))
-    read = read_bam_native if reader.kind == "bam" else read_cram_native
-    return read(df.sparkSession, files, **reader.options)
+_EVENTS_SCHEMA = "contig string, chunk long, pos int, delta int"
+
+
+def _plan_reader(spark: SparkSession, kind: str, path: str | list[str], **options) -> Reader:
+    """Plan one reader call: a BAM's spans; or a CRAM's containers (a codec
+    outside the native set raises here), then its reference FASTA, loaded
+    once and broadcast."""
+    if kind == "bam":
+        refs_by_path, units, sizes = _plan_bam(path, options["chunk"])
+        return Reader(kind, path, options, spark, units, sizes, refs_by_path)
+    from sequila_spark.sources import cramcodec as C
+
+    meta_by_path, units = _plan_cram(path, options["contig"], options["start"], options["end"])
+    ref_path = options["ref_path"]
+    ref = spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
+    sizes = [h["length"] for _, _, h in units]
+    return Reader(kind, path, options, spark, units, sizes, meta_by_path, ref)
 
 
 def read_bam_native(
@@ -680,9 +714,9 @@ def read_bam_native(
     fed to Spark as columnar RecordBatches via ``mapInArrow``: ~20x the
     per-core throughput of the scalar ``bamcodec.parse_records``, which
     stays only as the tests' reference.  A file cut inside a record or a
-    BGZF block, a file without the BGZF EOF marker and an index offset
-    past the end of the file raise ValueError naming the file instead of
-    yielding fewer rows.
+    BGZF block, a file without the BGZF EOF marker, an index offset past
+    the end of the file and a malformed tag raise ValueError naming the
+    file instead of yielding fewer rows.
 
     ``columns`` prunes the DECODE itself: mapInArrow is
     opaque to Catalyst's column pruning, so a caller that only needs
@@ -698,9 +732,22 @@ def read_bam_native(
     operator.  ``typed_tags=True`` with a ``columns`` list that omits
     ``'tags'`` is rejected here (it would fail at plan time otherwise).
 
-    The result is registered under its plan identity (reader_of): coverage()
-    over it, or over a view of it, plans the fused decode->events reader,
-    and the SQL TVFs given a sample read only that sample's files."""
+    The spans are planned once, here: the result is registered with its
+    plan (Reader, found by reader_of), so coverage() over it, or over a
+    view of it, decodes the fused events from the same spans, and the SQL
+    TVFs given a sample decode only that sample's spans of it."""
+    reader = _plan_reader(
+        spark, "bam", path, chunk=chunk, with_tags=with_tags, typed_tags=typed_tags,
+        with_ordinal=with_ordinal, columns=columns,
+    )
+    return _register(reader.rows(), reader)
+
+
+def _bam_rows(plan: Reader, columns: list[str] | None) -> DataFrame:
+    opts = plan.options
+    typed_tags, with_tags, with_ordinal = (
+        opts["typed_tags"], opts["with_tags"], opts["with_ordinal"]
+    )
     _COL_TYPES = {
         S.SAMPLE: "string", S.QNAME: "string", S.FLAG: "int",
         S.CONTIG: "string", S.START: "int", S.END: "int", S.MAPQ: "int",
@@ -721,37 +768,26 @@ def read_bam_native(
                 "columns (or drop the pruning list)"
             )
     keep = [c for c in _COL_TYPES if columns is None or c in columns]
+    prune = keep if columns is not None else None
     schema_str = ", ".join(f"{c} {_COL_TYPES[c]}" for c in keep)
     if with_ordinal:
         schema_str += ", __ord long"
+    units, refs_by_path = plan.units, plan.meta
 
-    refs_by_path, spans, sizes = _plan_bam(path, chunk)
-
-    def decode(units):
+    def decode(ids):
         from sequila_spark.sources import bamvec as BV
 
-        for sid in units:
-            p, sample, span = spans[sid]
+        for sid in ids:
+            p, sample, span = units[sid]
             yield from BV.iter_span_batches(
-                p,
-                refs_by_path[p],
-                sample,
-                span,
-                span_idx=sid,
-                with_tags=with_tags,
-                with_ordinal=with_ordinal,
-                columns=keep if columns is not None else None,
+                p, refs_by_path[p], sample, span, span_idx=sid,
+                with_tags=with_tags, with_ordinal=with_ordinal, columns=prune,
             )
 
-    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
-    df = _run_tasks(spark, groups, decode, schema_str)
+    df = _run_tasks(plan.spark, plan.sizes, decode, schema_str)
     if S.CONTIG in keep:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
-    out = with_typed_tags(df) if typed_tags else df
-    return _register(
-        out, "bam", path, chunk=chunk, with_tags=with_tags,
-        typed_tags=typed_tags, with_ordinal=with_ordinal, columns=columns,
-    )
+    return with_typed_tags(df) if typed_tags else df
 
 
 def read_bam_coverage_events(
@@ -776,28 +812,26 @@ def read_bam_coverage_events(
     — here as an opt-in reader, with the declarative operator unchanged
     for alignment-shaped relations.  ``flag_mask``/``min_mapq`` apply
     filter_reads' predicates at decode time (pass 1796 for the
-    reference's default read filter).  Span planning and task packing
-    (_plan_bam, _pack_tasks) are those of read_bam_native."""
-    refs_by_path, spans, sizes = _plan_bam(path, chunk)
+    reference's default read filter).  It plans the spans as
+    read_bam_native does and decodes them with Reader.events, which
+    coverage() calls on a read_bam_native relation's own plan."""
+    return _plan_reader(spark, "bam", path, chunk=chunk).events(chunk_size, flag_mask, min_mapq)
 
-    def decode(units):
+
+def _bam_events(plan: Reader, chunk_size: int, flag_mask: int, min_mapq: int) -> DataFrame:
+    units, refs_by_path = plan.units, plan.meta
+
+    def decode(ids):
         from sequila_spark.sources import bamvec as BV
 
-        for sid in units:
-            p, _sample, span = spans[sid]
+        for sid in ids:
+            p, _sample, span = units[sid]
             yield from BV.iter_span_cov_events(
-                p,
-                refs_by_path[p],
-                span,
-                chunk_size=chunk_size,
-                flag_mask=flag_mask,
-                min_mapq=min_mapq,
+                p, refs_by_path[p], span, chunk_size=chunk_size,
+                flag_mask=flag_mask, min_mapq=min_mapq,
             )
 
-    groups = _pack_tasks(sizes, spark.sparkContext.defaultParallelism)
-    df = _run_tasks(
-        spark, groups, decode, "contig string, chunk long, pos int, delta int"
-    )
+    df = _run_tasks(plan.spark, plan.sizes, decode, _EVENTS_SCHEMA)
     return df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
 
 
@@ -971,15 +1005,23 @@ def read_cram_native(
     the JVM.  sample_id is always included; an interval filter requires
     contig/pos_start/pos_end to be present.
 
-    The result is registered under its plan identity (reader_of), as
-    read_bam_native's is: coverage() and pileup() over it, or over a view
-    of it, re-plan the decode (fused events or a column-pruned re-read),
-    and the SQL TVFs given a sample read only that sample's files."""
-    from sequila_spark.sources import cramcodec as C
+    The containers are planned and the FASTA broadcast once, here: the
+    result is registered with its plan (Reader, found by reader_of), as
+    read_bam_native's is, so coverage() and pileup() over it, or over a
+    view of it, decode the fused events or a column-pruned re-read from
+    the same containers and broadcast, and the SQL TVFs given a sample
+    decode only that sample's containers."""
+    reader = _plan_reader(
+        spark, "cram", path, ref_path=ref_path, contig=contig, start=start, end=end,
+        with_tags=with_tags, columns=columns,
+    )
+    return _register(reader.rows(), reader)
 
-    meta_by_path, tasks = _plan_cram(path, contig, start, end)
-    bref = (
-        spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
+
+def _cram_rows(plan: Reader, columns: list[str] | None) -> DataFrame:
+    opts = plan.options
+    contig, start, end, with_tags = (
+        opts["contig"], opts["start"], opts["end"], opts["with_tags"]
     )
 
     # output column catalog (schema names == decode column keys)
@@ -1006,21 +1048,12 @@ def read_cram_native(
     schema_str = ", ".join(
         [f"{S.SAMPLE} string"]
         + [f"{c} {'int' if c in _INT else 'string'}" for c in keep]
-        + ([f"tags map<string,string>"] if keep_tags else [])
+        + (["tags map<string,string>"] if keep_tags else [])
     )
     names = [S.SAMPLE] + keep + (["tags"] if keep_tags else [])
+    units, meta_by_path, bref = plan.units, plan.meta, plan.ref
 
-    # Partition = a contiguous GROUP of containers: real containers are
-    # ~1 MB and a Python task's fixed cost (_pack_tasks) would make one
-    # task per container several times overhead (and 100M tasks at 100 TB).
-    groups = _pack_tasks(
-        [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
-    )
-
-    def decode(units):
-        """One task: a contiguous GROUP of containers decoded column-wise
-        straight into Arrow RecordBatches (no per-row pickle — the same
-        transfer model as the vectorized BAM reader)."""
+    def decode(ids):
         import pyarrow as pa
 
         from sequila_spark.sources import cramcodec as CC
@@ -1029,8 +1062,8 @@ def read_cram_native(
         i32 = pa.int32()
         mtype = pa.map_(pa.string(), pa.string())
         refs = bref.value if bref is not None else None
-        for tid in units:
-            p, sample, h = tasks[tid]
+        for tid in ids:
+            p, sample, h = units[tid]
             ref_names, rg_names = meta_by_path[p]
             blob, hh = _read_container(p, h)
             for cols in CC.decode_container_columns(
@@ -1050,7 +1083,7 @@ def read_cram_native(
                     arrays.append(pa.array(tag_items, mtype))
                 yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    df = _run_tasks(spark, groups, decode, schema_str)
+    df = _run_tasks(plan.spark, plan.sizes, decode, schema_str)
     if S.CONTIG in keep:
         df = df.withColumn(S.CONTIG, clean_contig(F.col(S.CONTIG)))
     if contig is not None:
@@ -1060,10 +1093,7 @@ def read_cram_native(
         if start is not None:
             cond = cond & (F.col(S.END) >= F.lit(start))
         df = df.where(cond)
-    return _register(
-        df, "cram", path, ref_path=ref_path, with_tags=with_tags,
-        contig=contig, start=start, end=end, columns=columns,
-    )
+    return df
 
 
 def read_cram_coverage_events(
@@ -1093,26 +1123,26 @@ def read_cram_coverage_events(
     and are parsed from their cigar strings — identical events either way.
 
     Planning (container-header scan, interval pruning, byte-targeted
-    container groups) is identical to read_cram_native; an interval also
-    applies the htslib-fetch overlap row filter.  ``flag_mask`` /
-    ``min_mapq`` apply filter_reads' predicates at decode time."""
+    container groups) is read_cram_native's; an interval also applies the
+    htslib-fetch overlap row filter.  ``flag_mask`` / ``min_mapq`` apply
+    filter_reads' predicates at decode time."""
+    reader = _plan_reader(
+        spark, "cram", path, ref_path=ref_path, contig=contig, start=start, end=end
+    )
+    return reader.events(chunk_size, flag_mask, min_mapq)
+
+
+def _cram_events(plan: Reader, chunk_size: int, flag_mask: int, min_mapq: int) -> DataFrame:
     from sequila_spark.functions.intervals import clean_contig_py
-    from sequila_spark.sources import cramcodec as C
 
-    meta_by_path, tasks = _plan_cram(path, contig, start, end)
-    bref = (
-        spark.sparkContext.broadcast(C.load_fasta(ref_path)) if ref_path else None
-    )
-
-    groups = _pack_tasks(
-        [t[2]["length"] for t in tasks], spark.sparkContext.defaultParallelism
-    )
-
+    opts = plan.options
+    contig = opts["contig"]
     want_contig = clean_contig_py(contig) if contig is not None else None
-    q_start = start if start is not None else 1
-    q_end = end if end is not None else 2**62
+    q_start = opts["start"] if opts["start"] is not None else 1
+    q_end = opts["end"] if opts["end"] is not None else 2**62
+    units, meta_by_path, bref = plan.units, plan.meta, plan.ref
 
-    def decode(units):
+    def decode(ids):
         import numpy as np
         import pyarrow as pa
 
@@ -1125,8 +1155,8 @@ def read_cram_coverage_events(
         decode_cols = {"flag", "contig", "pos_start", "mapq", "__cig_raw"}
         ref_take_by_path: dict[str, pa.Array] = {}
         refs = bref.value if bref is not None else None
-        for tid in units:
-            p, _sample, h = tasks[tid]
+        for tid in ids:
+            p, _sample, h = units[tid]
             ref_names = meta_by_path[p][0]
             take = ref_take_by_path.get(p)
             if take is None:
@@ -1200,9 +1230,7 @@ def read_cram_coverage_events(
                 if batch is not None:
                     yield batch
 
-    return _run_tasks(
-        spark, groups, decode, "contig string, chunk long, pos int, delta int"
-    )
+    return _run_tasks(plan.spark, plan.sizes, decode, _EVENTS_SCHEMA)
 
 
 def read_bam(

@@ -291,8 +291,11 @@ _ALL_COLS = (
 class _Records(NamedTuple):
     """One batch of complete records a span owns, after the region cut and
     the field-extent check: the decompressed bytes, the header view and
-    each record's field extents (byte offsets into ``data``)."""
+    each record's field extents (byte offsets into ``data``), and the
+    file and span they came from, for error messages."""
 
+    path: str
+    span: object
     data: bytes
     u8: np.ndarray
     h: np.ndarray  # _HDR_DT view, one row per record
@@ -438,10 +441,16 @@ def _decode_batch(
     if "tags" in want:
         if with_tags:
             dec = B._decode_tags
-            out["tags"] = pa.array(
-                [dec(data[tg_off[i] : rec_end[i]]) for i in range(n)],
-                type=pa.map_(pa.string(), pa.string()),
-            )
+            tags = []
+            for i in range(n):
+                try:
+                    tags.append(dec(data[tg_off[i] : rec_end[i]]))
+                except ValueError as exc:
+                    raise ValueError(
+                        f"corrupt BAM tags at offset {int(recs.offs[i])} of "
+                        f"span {recs.span} in {recs.path}: {exc}"
+                    ) from None
+            out["tags"] = pa.array(tags, type=pa.map_(pa.string(), pa.string()))
         else:
             out["tags"] = pa.MapArray.from_arrays(
                 np.zeros(n + 1, dtype=np.int32),
@@ -594,7 +603,7 @@ def _span_records(path: str, span, batch_bytes: int):
                         "exceed block_size"
                     )
                 yield _Records(
-                    data, u8, h, offs, rid, pos0, l_qname, n_cigar, l_seq,
+                    path, span, data, u8, h, offs, rid, pos0, l_qname, n_cigar, l_seq,
                     cg_off, tg_off, rec_end,
                 )
             if finished:

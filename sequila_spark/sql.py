@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sequila_spark import schemas as S
+from sequila_spark.sources.bam import Reader, reader_of
 
 _TVF_NAMES = ("coverage", "pileup", "bdg_grange")
 _NAME_RE = re.compile(r"(coverage|pileup|bdg_grange)\s*\(", re.IGNORECASE)
@@ -220,19 +221,18 @@ def _parse_args(raw: str, spark: SparkSession | None = None) -> list:
     return args
 
 
-def _sample_rows(spark: SparkSession, table: str, sample: str | None) -> DataFrame:
+def _sample_rows(spark: SparkSession, table: str, sample: str | None) -> DataFrame | Reader:
     """``table``'s rows of ``sample`` (all rows without one, or when the
     table has no sample_id).  A table that is a view of a BAM/CRAM reader
-    relation is read again over only that sample's files
-    (sources.bam.sample_reader), so the coverage TVF fuses like the API and
-    no other sample is decoded; any other table is filtered."""
+    relation gives the plan that view holds, narrowed to that sample's
+    files (sources.bam.Reader.only): no file is opened or planned again,
+    the coverage TVF fuses like the API without building a row relation,
+    and no other sample is decoded.  Any other table is filtered."""
     df = spark.table(table)
     if not sample or S.SAMPLE not in df.columns:
         return df
-    from sequila_spark.sources.bam import sample_reader
-
-    rows = sample_reader(df, sample)
-    return rows if rows is not None else df.where(F.col(S.SAMPLE) == sample)
+    src = reader_of(df)
+    return src.only(sample) if src is not None else df.where(F.col(S.SAMPLE) == sample)
 
 
 def _tvf_coverage(spark: SparkSession, args: list) -> DataFrame:

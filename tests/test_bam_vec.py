@@ -267,6 +267,36 @@ def test_corrupt_inner_fields_raise_before_gather(tmp_path):
                 decode()
 
 
+def test_bad_tag_type_names_the_file(spark, tmp_path):
+    """A tag whose type byte is 'q' (no such type) raises naming the file,
+    the span and the record's offset, through the span decoder and
+    read_bam_native."""
+    import re
+    import struct
+
+    from sequila_spark.sources.bam import read_bam_native
+
+    qname, tags = b"r1\x00", b"XXq\x07"
+    body = qname + tags
+    fixed = struct.pack(
+        "<iiiBBHHHiiii", 32 + len(body), 0, 10, len(qname), 30, 0, 0, 0, 0, -1, -1, 0
+    )
+    path = str(tmp_path / "badtag.bam")
+    with open(path, "wb") as f:
+        w = B.BgzfWriter(f)
+        B.write_bam_header(w, [("c1", 1000)], "")
+        w.write(fixed + body)
+        w.close()
+    error = (
+        rf"corrupt BAM tags at offset \d+ of span None in {re.escape(path)}: "
+        r"BAM tag 'XX': unknown type byte 113 \('q'\)"
+    )
+    with pytest.raises(ValueError, match=error):
+        list(BV.iter_span_batches(path, [("c1", 1000)], "S", None))
+    with pytest.raises(Exception, match=error):
+        read_bam_native(spark, path).collect()
+
+
 def _damaged_copies(gen, tmp_path):
     """A 2,000-read generated BAM (12 BGZF blocks) and three damaged
     copies, each with the intact file's .bai: cut at the start of its last

@@ -34,6 +34,28 @@ needs_ref = pytest.mark.skipif(
     not os.path.exists(CRAM), reason="reference CRAM fixture not present"
 )
 
+# fixtures/bigcram's CRAM is 64 copies of the reference CRAM's one data
+# container: its first 304,994 bytes are the file header and that
+# container, its last 38 the EOF container.
+BIGCRAM = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "fixtures", "bigcram", "NA12878.slice.cram",
+)
+
+
+@pytest.fixture(scope="module")
+def slice_cram(tmp_path_factory):
+    """The reference CRAM where it exists, else its one-container copy cut
+    out of fixtures/bigcram (305,032 bytes, 3,172 records)."""
+    if os.path.exists(CRAM):
+        return CRAM
+    data = open(BIGCRAM, "rb").read()
+    cut = data[:304_994] + data[-38:]
+    assert len(cut) == 305_032
+    path = tmp_path_factory.mktemp("slice_cram") / "NA12878.slice.cram"
+    path.write_bytes(cut)
+    return str(path)
+
 
 def _bam_records():
     with open(BAM, "rb") as f:
@@ -110,12 +132,11 @@ def test_read_cram_native_spark(spark):
     assert {(r["contig"], r["n"]) for r in a} == {(r["contig"], r["n"]) for r in b}
 
 
-@needs_ref
-def test_scan_containers_headers_only():
+def test_scan_containers_headers_only(slice_cram):
     """The planning scan sees every container with correct record counts
     and in-bounds byte ranges (it reads headers only — no data-block
     decompression happens at plan time)."""
-    data = open(CRAM, "rb").read()
+    data = open(slice_cram, "rb").read()
     containers = C.scan_containers(data)
     assert sum(h["n_records"] for h in containers) == 3172
     for h in containers:
@@ -123,12 +144,11 @@ def test_scan_containers_headers_only():
         assert h["data_offset"] + h["length"] <= len(data)
 
 
-@needs_ref
-def test_missing_reference_is_loud():
+def test_missing_reference_is_loud(slice_cram):
     """Reference-based slices without ref_seqs must raise with guidance,
     not silently produce N sequences."""
     with pytest.raises(ValueError, match="ref_path"):
-        list(C.read_cram_records(CRAM, None))
+        list(C.read_cram_records(slice_cram, None))
 
 
 @needs_ref
@@ -192,8 +212,7 @@ def test_resolve_mates_pair_semantics():
     assert recs[0]["bf"] & 0x8 and recs[0]["tlen"] == 0
 
 
-@needs_ref
-def test_unsupported_cram_falls_back_at_plan_time(spark, tmp_path):
+def test_unsupported_cram_falls_back_at_plan_time(spark, tmp_path, slice_cram):
     """A CRAM outside the supported shape (here: major version 2) must
     raise at read_bam() CALL time — not as an opaque executor failure —
     and reach the pysam-guidance error through the real fallback path
@@ -202,7 +221,7 @@ def test_unsupported_cram_falls_back_at_plan_time(spark, tmp_path):
 
     if importlib.util.find_spec("pysam") is not None:
         pytest.skip("pysam installed; guidance path not reachable")
-    data = bytearray(open(CRAM, "rb").read())
+    data = bytearray(open(slice_cram, "rb").read())
     data[4] = 2  # claim CRAM v2: different container framing, unsupported
     bad = str(tmp_path / "v2.cram")
     with open(bad, "wb") as f:
@@ -385,23 +404,22 @@ def test_rg_tag_materialized_from_series(decoded):
     assert n_rg == len(cram)  # the fixture tags every read
 
 
-@needs_ref
-def test_container_span_pruning(tmp_path):
+def test_container_span_pruning(tmp_path, slice_cram):
     """plan_cram_containers prunes by (contig, start, end) from container
     HEADERS alone: the fixture's single container covers chr1:34-29954, so
     overlapping intervals keep it and disjoint ones plan ZERO tasks —
     the CRAM analog of BAI interval pushdown."""
     from sequila_spark.sources.bam import plan_cram_containers
 
-    names, rgs, all_c = plan_cram_containers(CRAM)
+    names, rgs, all_c = plan_cram_containers(slice_cram)
     assert len(all_c) == 1 and rgs and rgs[0] == "61CC3.5"
     # overlap (cleaned and raw contig spellings both resolve)
     for spelling in ("1", "chr1"):
-        _n, _r, kept = plan_cram_containers(CRAM, spelling, 1000, 2000)
+        _n, _r, kept = plan_cram_containers(slice_cram, spelling, 1000, 2000)
         assert len(kept) == 1
     # disjoint interval / other contig / unmapped-only exclusion
-    assert plan_cram_containers(CRAM, "1", 40000, 50000)[2] == []
-    assert plan_cram_containers(CRAM, "2", 1, 10**9)[2] == []
+    assert plan_cram_containers(slice_cram, "1", 40000, 50000)[2] == []
+    assert plan_cram_containers(slice_cram, "2", 1, 10**9)[2] == []
 
 
 @needs_ref
@@ -887,8 +905,7 @@ def test_rans_nx16_corrupt_freq_sum_is_loud():
         rans_nx16_decode(bytes(head), 100)
 
 
-@needs_ref
-def test_cram_version_detection():
+def test_cram_version_detection(slice_cram):
     """3.0 and 3.1 are accepted at the header; 2.x and 4.x raise with the
     version in the message.  3.1-only codec methods raise BY NAME from the
     block dispatcher."""
@@ -897,7 +914,7 @@ def test_cram_version_detection():
         read_file_header,
     )
 
-    data = open(CRAM, "rb").read()
+    data = open(slice_cram, "rb").read()
     names, _text, _off = read_file_header(data)  # 3.0 file parses
     assert names
 
@@ -1911,9 +1928,8 @@ def _transcode_cram31(data: bytes) -> bytes:
             + hdr + blocks_bytes + data[cont_end:])
 
 
-@needs_ref
-def test_cram31_transcode_scan_and_validate(tmp_path):
-    data = open(CRAM, "rb").read()
+def test_cram31_transcode_scan_and_validate(tmp_path, slice_cram):
+    data = open(slice_cram, "rb").read()
     crafted = str(tmp_path / "slice31.cram")
     with open(crafted, "wb") as f:
         f.write(_transcode_cram31(data))
@@ -2215,26 +2231,25 @@ def test_cram_coverage_fused_events(spark, monkeypatch):
     """coverage(read_cram_native(...)) auto-fuses to the decode->events
     reader on provenance (r13, the BAM-fusion analog): identical blocks
     to the declarative plan AND to coverage over the independently-
-    decoded BAM twin; the fused reader must actually ENGAGE (the
-    declarative read_cram_native path must NOT run)."""
+    decoded BAM twin; the fused reader must actually ENGAGE (the reader's
+    plan builds its events, no row decode)."""
     from sequila_spark.operators.coverage import coverage
     from sequila_spark.sources import bam as B
 
     calls = {"fused": 0, "native": 0}
-    orig_ev = B.read_cram_coverage_events
-    orig = B.read_cram_native
+    orig_ev, orig_rows = B._cram_events, B._cram_rows
 
-    def spy_ev(spark_, path, **kw):
+    def spy_ev(plan, *a):
         calls["fused"] += 1
-        return orig_ev(spark_, path, **kw)
+        return orig_ev(plan, *a)
 
-    def spy_native(spark_, path, **kw):
+    def spy_native(plan, columns):
         calls["native"] += 1
-        return orig(spark_, path, **kw)
+        return orig_rows(plan, columns)
 
-    reads = orig(spark, CRAM, ref_path=FASTA)
-    monkeypatch.setattr(B, "read_cram_coverage_events", spy_ev)
-    monkeypatch.setattr(B, "read_cram_native", spy_native)
+    reads = B.read_cram_native(spark, CRAM, ref_path=FASTA)
+    monkeypatch.setattr(B, "_cram_events", spy_ev)
+    monkeypatch.setattr(B, "_cram_rows", spy_native)
     got = sorted(map(tuple, coverage(reads).collect()))
     assert calls == {"fused": 1, "native": 0}
     unfused = sorted(map(tuple, coverage(reads, fuse=False).collect()))
@@ -2277,15 +2292,15 @@ def test_cram_coverage_gapless_prunes_decode(spark, monkeypatch):
     from sequila_spark.sources import bam as B
 
     calls = {"pruned": 0}
-    orig = B.read_cram_native
+    orig = B._cram_rows
 
-    def spy(spark_, path, **kw):
-        if kw.get("columns") is not None:
+    def spy(plan, columns):
+        if columns is not None:
             calls["pruned"] += 1
-        return orig(spark_, path, **kw)
+        return orig(plan, columns)
 
-    monkeypatch.setattr(B, "read_cram_native", spy)
-    reads = orig(spark, CRAM, ref_path=FASTA)
+    monkeypatch.setattr(B, "_cram_rows", spy)
+    reads = B.read_cram_native(spark, CRAM, ref_path=FASTA)
     got = sorted(map(tuple, coverage(reads, use_cigar=False).collect()))
     assert calls["pruned"] == 1
     unpruned = sorted(
@@ -2296,22 +2311,22 @@ def test_cram_coverage_gapless_prunes_decode(spark, monkeypatch):
 
 @needs_ref
 def test_cram_pileup_prunes_decode(spark, monkeypatch):
-    """pileup(read_cram_native(...)) re-plans as a pruned re-read too:
+    """pileup(read_cram_native(...)) decodes a pruned re-read too:
     alts-only (no qual decode) and quals (qual included) both pinned
     identical to the unpruned relation's pileup."""
     from sequila_spark.operators.pileup import pileup
     from sequila_spark.sources import bam as B
 
     calls = []
-    orig = B.read_cram_native
+    orig = B._cram_rows
 
-    def spy(spark_, path, **kw):
-        if kw.get("columns") is not None:
-            calls.append(sorted(kw["columns"]))
-        return orig(spark_, path, **kw)
+    def spy(plan, columns):
+        if columns is not None:
+            calls.append(sorted(columns))
+        return orig(plan, columns)
 
-    monkeypatch.setattr(B, "read_cram_native", spy)
-    reads = orig(spark, CRAM, ref_path=FASTA)
+    monkeypatch.setattr(B, "_cram_rows", spy)
+    reads = B.read_cram_native(spark, CRAM, ref_path=FASTA)
     got = sorted(map(tuple, pileup(reads).collect()))
     assert len(calls) == 1 and "qual" not in calls[0] and "tags" not in calls[0]
     unpruned = sorted(
@@ -2336,15 +2351,15 @@ def test_pileup_fuse_flag(spark, monkeypatch):
     from sequila_spark.sources import bam as B
 
     calls = {"pruned": 0}
-    orig = B.read_cram_native
+    orig = B._cram_rows
 
-    def spy(spark_, path, **kw):
-        if kw.get("columns") is not None:
+    def spy(plan, columns):
+        if columns is not None:
             calls["pruned"] += 1
-        return orig(spark_, path, **kw)
+        return orig(plan, columns)
 
-    monkeypatch.setattr(B, "read_cram_native", spy)
-    reads = orig(spark, CRAM, ref_path=FASTA)
+    monkeypatch.setattr(B, "_cram_rows", spy)
+    reads = B.read_cram_native(spark, CRAM, ref_path=FASTA)
     fused = sorted(map(tuple, pileup(reads, fuse=True).collect()))
     assert calls["pruned"] == 1
     unfused = sorted(map(tuple, pileup(reads, fuse=False).collect()))

@@ -1,9 +1,11 @@
 """The BAM/CRAM reader registry (``sources.bam.reader_of``): plan identity,
-not an attribute of one DataFrame object, decides the fused coverage path
-and the SQL TVFs' per-sample file selection; and the decode task loop's
+not an attribute of one DataFrame object, finds the reader call's plan
+(``sources.bam.Reader``), which the fused coverage path and the SQL TVFs'
+per-sample selection decode without planning again; and the decode task loop's
 import-cache trim leaves the worker able to import.
 
-Inputs are generated indexed BAMs (perfbench's generator); every routed
+Inputs are generated indexed BAMs (perfbench's generator), hand-written
+empty BAMs and, for plan-only checks, fixtures/bigcram; every routed
 result is compared with the declarative plan (``fuse=False``) or with the
 same operator over that sample's file read alone."""
 
@@ -30,19 +32,41 @@ def _is_fused(df):
     return bool(re.search(r"MapInArrow [^\[]*\[contig#\d+, chunk#", plan))
 
 
+class _Calls(list):
+    """The _plan_bam calls of a test, (files, number of spans); ``runs``:
+    the relations _run_tasks builds, (schema, the decode units' sizes)."""
+
+    def __init__(self):
+        super().__init__()
+        self.runs = []
+
+    def clear(self):
+        super().clear()
+        self.runs.clear()
+
+
 @pytest.fixture
 def planned(monkeypatch):
-    """Every _plan_bam call of the test: (files, number of spans)."""
-    calls = []
-    orig = B._plan_bam
+    calls = _Calls()
+    orig_plan, orig_run = B._plan_bam, B._run_tasks
 
-    def spy(path, chunk):
-        refs, spans, sizes = orig(path, chunk)
+    def plan(path, chunk):
+        refs, spans, sizes = orig_plan(path, chunk)
         calls.append((sorted(refs), len(spans)))
         return refs, spans, sizes
 
-    monkeypatch.setattr(B, "_plan_bam", spy)
+    def run(spark, sizes, decode, schema):
+        calls.runs.append((schema, list(sizes)))
+        return orig_run(spark, sizes, decode, schema)
+
+    monkeypatch.setattr(B, "_plan_bam", plan)
+    monkeypatch.setattr(B, "_run_tasks", run)
     return calls
+
+
+def _plain(path):
+    """A registry entry's Reader with no planned unit."""
+    return B.Reader("bam", path, {}, None, [], [], {})
 
 
 def test_view_of_reader_fuses(spark, gen_cohort):
@@ -62,21 +86,23 @@ def test_view_of_reader_fuses(spark, gen_cohort):
 
 
 def test_coverage_tvf_reads_only_that_sample(spark, gen_cohort, planned):
-    """The coverage TVF over a reader's view plans only the requested
-    sample's spans, fuses, and gives the rows of coverage over that
-    sample's file read alone."""
+    """The coverage TVF over a reader's view plans nothing: it decodes
+    exactly the requested sample's spans of the view's own plan, builds
+    only the fused events relation, and gives the rows of coverage over
+    that sample's file read alone."""
     cohort, _ = gen_cohort
     B.read_bam_native(spark, cohort).createOrReplaceTempView("reg_tvf")
     s1 = os.path.join(cohort, "S1.bam")
-    one = len(B._plan_bam(s1, 10_000_000)[1])
-    both = len(B._plan_bam(cohort, 10_000_000)[1])
-    assert one < both
+    _, s1_spans, s1_sizes = B._plan_bam(s1, 10_000_000)
+    assert len(s1_spans) < len(B._plan_bam(cohort, 10_000_000)[1])
+    assert B.reader_of(spark.table("reg_tvf")).only("S1").units == s1_spans
     planned.clear()
 
     ss = SequilaSession(spark)
     df = ss.sql("SELECT * FROM coverage('reg_tvf', 'S1', 'windows', 1000)")
     assert _is_fused(df)
-    assert planned and all(c == ([s1], one) for c in planned)
+    assert planned == []
+    assert planned.runs == [(B._EVENTS_SCHEMA, s1_sizes)]
     expected = coverage(
         B.read_bam_native(spark, s1), mode="windows", window_size=1000, fuse=False
     )
@@ -85,6 +111,21 @@ def test_coverage_tvf_reads_only_that_sample(spark, gen_cohort, planned):
     blocks = ss.sql("SELECT * FROM coverage('reg_tvf', 'S0')")
     s0 = spark.table("reg_tvf").where(F.col("sample_id") == "S0")
     assert _rows(blocks) == _rows(coverage(s0, fuse=False))
+
+
+def test_coverage_of_view_plans_once(spark, gen_cohort, planned):
+    """After the reader call, coverage() over it or its view plans no span
+    again: it builds one events relation over the reader's own units."""
+    cohort, _ = gen_cohort
+    reads = B.read_bam_native(spark, cohort)
+    assert len(planned) == 1 and len(planned.runs) == 1
+    sizes = planned.runs[0][1]
+    reads.createOrReplaceTempView("reg_once")
+    planned.clear()
+    for df in (reads, spark.table("reg_once")):
+        assert _is_fused(coverage(df, mode="windows", window_size=1000))
+    assert planned == []
+    assert planned.runs == [(B._EVENTS_SCHEMA, sizes)] * 2
 
 
 def test_tvfs_unknown_sample_empty_with_same_schema(spark, gen_cohort, planned):
@@ -105,15 +146,103 @@ def test_tvfs_unknown_sample_empty_with_same_schema(spark, gen_cohort, planned):
 
 
 def test_pileup_tvf_sample_rows(spark, gen_cohort, planned):
-    """The pileup TVF reads only the sample's file and gives the rows of
-    pileup over the sample-filtered table."""
+    """The pileup TVF plans nothing, decodes exactly the sample's spans of
+    the view's plan, and gives the rows of pileup over the sample-filtered
+    table."""
     cohort, _ = gen_cohort
     B.read_bam_native(spark, cohort).createOrReplaceTempView("reg_pileup")
+    row_schema = planned.runs[0][0]
+    _, _, s0_sizes = B._plan_bam(os.path.join(cohort, "S0.bam"), 10_000_000)
     planned.clear()
     got = SequilaSession(spark).sql("SELECT * FROM pileup('reg_pileup', 'S0')")
-    assert planned == [([os.path.join(cohort, "S0.bam")], planned[0][1])]
+    assert planned == []
+    assert planned.runs == [(row_schema, s0_sizes)]
     s0 = spark.table("reg_pileup").where(F.col("sample_id") == "S0")
     assert _rows(got) == _rows(pileup(s0))
+
+
+def _empty_bam(path, indexed):
+    """A BAM with a header and the BGZF EOF marker and no record; with
+    ``indexed``, a .bai of no reference and no unplaced record."""
+    from sequila_spark.sources import bamcodec as BC
+
+    with open(path, "wb") as f:
+        w = BC.BgzfWriter(f)
+        BC.write_bam_header(w, [("c1", 1000)])
+        w.close()
+    if indexed:
+        BC.write_bai(path + ".bai", 0, {"refs": {}, "n_no_coor": 0})
+
+
+@pytest.mark.parametrize("indexed", [True, False])
+def test_zero_record_bam_gives_no_rows(spark, tmp_path, indexed):
+    """A BAM without records gives no rows through the row reader, the
+    events reader, routed coverage() and the coverage TVF (an indexed one
+    plans no span: the empty plan)."""
+    path = str(tmp_path / "E0.bam")
+    _empty_bam(path, indexed)
+    reads = B.read_bam_native(spark, path)
+    assert len(B.reader_of(reads).units) == (0 if indexed else 1)
+    assert reads.collect() == []
+    assert B.read_bam_coverage_events(spark, path).collect() == []
+    routed = coverage(reads)
+    assert routed.collect() == []
+    assert routed.schema == coverage(reads, fuse=False).schema
+    reads.createOrReplaceTempView("reg_empty")
+    ss = SequilaSession(spark)
+    for call in ("coverage('reg_empty')", "coverage('reg_empty', 'E0')"):
+        assert ss.sql(f"SELECT * FROM {call}").collect() == []
+
+
+def test_empty_glob_names_the_pattern(spark, tmp_path):
+    pattern = str(tmp_path / "*.bam")
+    for read in (B.read_bam_native, B.read_bam_coverage_events):
+        with pytest.raises(FileNotFoundError, match=re.escape(repr(pattern))):
+            read(spark, pattern)
+
+
+BIGCRAM = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "fixtures", "bigcram", "NA12878.slice.cram",
+)
+
+
+def test_cram_routes_reuse_the_reader_plan(spark, monkeypatch):
+    """Over a CRAM view, with the FASTA loader stubbed: the reader call
+    plans the containers and loads the reference once; fused and gapless
+    coverage(), pileup() and the coverage TVF over the view plan nothing
+    and load nothing again.  Only plans are built; no job runs."""
+    from sequila_spark.sources import cramcodec as C
+
+    calls = {"load_fasta": 0, "_plan_cram": 0}
+    orig_plan = B._plan_cram
+
+    def load_fasta(path):
+        calls["load_fasta"] += 1
+        return {}
+
+    def plan(*args):
+        calls["_plan_cram"] += 1
+        return orig_plan(*args)
+
+    monkeypatch.setattr(C, "load_fasta", load_fasta)
+    monkeypatch.setattr(B, "_plan_cram", plan)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "reg_cram_plans")
+    try:
+        B.read_cram_native(spark, BIGCRAM, ref_path="ref.fa").createOrReplaceTempView("reg_cram")
+        assert calls == {"load_fasta": 1, "_plan_cram": 1}
+        view = spark.table("reg_cram")
+        fused = coverage(view)
+        gapless = coverage(view, use_cigar=False)
+        piled = pileup(view)
+        tvf = SequilaSession(spark).sql("SELECT * FROM coverage('reg_cram', 'NA12878')")
+        assert calls == {"load_fasta": 1, "_plan_cram": 1}
+        assert _is_fused(fused) and _is_fused(tvf)
+        assert not _is_fused(gapless) and not _is_fused(piled)
+        assert sc.statusTracker().getJobIdsForGroup("reg_cram_plans") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_same_shaped_directories_do_not_collide(spark, bench, tmp_path):
@@ -174,7 +303,7 @@ def test_evicted_reader_falls_back_with_same_rows(spark, gen_cohort, monkeypatch
     fused = coverage(reads)
     assert _is_fused(fused)
     for i in range(B._READERS_MAX):
-        B._register(spark.range(i + 1), "bam", cohort)
+        B._register(spark.range(i + 1), _plain(cohort))
     assert len(B._READERS) == B._READERS_MAX
     assert B.reader_of(reads) is None
     again = coverage(reads)
@@ -254,7 +383,7 @@ def test_registry_under_concurrent_threads(spark, monkeypatch):
         try:
             for i in range(12):
                 df = spark.range(1000 * t + i + 1)
-                B._register(df, "bam", f"t{t}-{i}")
+                B._register(df, _plain(f"t{t}-{i}"))
                 got = B.reader_of(df)
                 if got is not None and got.path != f"t{t}-{i}":
                     wrong.append((t, i, got.path))
